@@ -1,9 +1,11 @@
 """Turkish national-ID (TC Kimlik No) and tax-number checksum validators.
 
 Semantics from the reference validators (/root/reference/TRnoChecker.py:1-51),
-re-expressed as pure Spark column expressions — fixed-length digit arithmetic
-with ``pmod``, no UDF — so validation runs inside whole-stage codegen and the
-oracle SQL can be generated from the same spec.
+re-expressed as pure Spark expressions — fixed-length digit arithmetic with
+``pmod``, no UDF — so validation runs inside whole-stage codegen and the
+oracle SQL can be generated from the same spec.  The Spark form is built as
+one SQL string (``*_expr``), so the ~100-operation checksum costs a single
+py4j call (functions/sqltext.py).
 
 TCID (TRnoChecker.py:1-21): 11 digits, first digit non-zero,
   d11 == sum(d1..d10) mod 10,
@@ -20,44 +22,61 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _digit(c: Column, i: int) -> Column:
-    """1-indexed digit as int (try_cast: ANSI-safe on non-digit input —
-    the rlike guard makes the AND false regardless, three-valued logic)."""
-    return F.substring(c, i, 1).try_cast("int")
+from dataqtor_spark.functions.sqltext import ident
 
 
-def is_valid_tcid(col: Column | str) -> Column:
-    """Boolean column: value passes the TC Kimlik No checksum."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    d = [_digit(c, i) for i in range(1, 12)]  # d[0] == digit 1
-    odd = d[0] + d[2] + d[4] + d[6] + d[8]
-    even = d[1] + d[3] + d[5] + d[7]
-    sum10 = sum(d[0:10], F.lit(0))
+def _digits(c: str, n: int) -> list[str]:
+    """1-indexed digits 1..n as int (try_cast: ANSI-safe on non-digit
+    input — the rlike guard makes the AND false regardless, three-valued
+    logic)."""
+    return [f"try_cast(substring({c}, {i}, 1) AS INT)" for i in range(1, n + 1)]
+
+
+def _plus(terms: list[str]) -> str:
+    return "(" + " + ".join(terms) + ")"
+
+
+def tcid_expr(expr: str) -> str:
+    """Spark SQL boolean: the SQL expression ``expr`` passes the TC Kimlik
+    No checksum."""
+    c = f"CAST({expr} AS STRING)"
+    d = _digits(c, 11)  # d[0] == digit 1
+    odd = _plus(d[0:10:2])
+    even = _plus(d[1:9:2])
+    sum10 = _plus(["0", *d[0:10]])
     return (
-        (F.length(c) == 11)
-        & c.rlike("^[0-9]{11}$")
-        & (d[0] != 0)
-        & (F.pmod(sum10, F.lit(10)) == d[10])
-        & (F.pmod(7 * odd - even, F.lit(10)) == d[9])
+        f"(((((length({c}) = 11) AND ({c} RLIKE '^[0-9]{{11}}$'))"
+        f" AND ({d[0]} != 0))"
+        f" AND (pmod({sum10}, 10) = {d[10]}))"
+        f" AND (pmod((({odd} * 7) - {even}), 10) = {d[9]}))"
     )
 
 
-def is_valid_taxnum(col: Column | str) -> Column:
-    """Boolean column: value passes the Vergi (tax) number checksum
-    (or, for 11-digit values, the TCID checksum — reference fall-through)."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    d = [_digit(c, i) for i in range(1, 11)]
-    total = F.lit(0)
+def taxnum_expr(expr: str) -> str:
+    """Spark SQL boolean: the SQL expression ``expr`` passes the Vergi (tax)
+    number checksum (or, for 11-digit values, the TCID checksum — reference
+    fall-through)."""
+    c = f"CAST({expr} AS STRING)"
+    d = _digits(c, 10)
+    terms = ["0"]
     for x in range(9):
-        t1 = F.pmod(d[x] + (9 - x), F.lit(10))
-        t2 = F.pmod(t1 * (2 ** (9 - x)), F.lit(9))
-        t2 = F.when((t1 != 0) & (t2 == 0), F.lit(9)).otherwise(t2)
-        total = total + t2
-    check = F.pmod(F.lit(10) - F.pmod(total, F.lit(10)), F.lit(10))
-    ten_ok = (F.length(c) == 10) & c.rlike("^[0-9]{10}$") & (d[9] == check)
-    eleven_ok = (F.length(c) == 11) & is_valid_tcid(c)
-    return ten_ok | eleven_ok
+        t1 = f"pmod(({d[x]} + {9 - x}), 10)"
+        t2 = f"pmod(({t1} * {2 ** (9 - x)}), 9)"
+        terms.append(f"CASE WHEN (({t1} != 0) AND ({t2} = 0)) THEN 9 ELSE {t2} END")
+    check = f"pmod((10 - pmod({_plus(terms)}, 10)), 10)"
+    ten_ok = f"(((length({c}) = 10) AND ({c} RLIKE '^[0-9]{{10}}$')) AND ({d[9]} = {check}))"
+    eleven_ok = f"((length({c}) = 11) AND {tcid_expr(c)})"
+    return f"({ten_ok} OR {eleven_ok})"
+
+
+def is_valid_tcid(col: str) -> Column:
+    """Boolean column: column ``col`` passes the TC Kimlik No checksum."""
+    return F.expr(tcid_expr(ident(col)))
+
+
+def is_valid_taxnum(col: str) -> Column:
+    """Boolean column: column ``col`` passes the tax-number checksum."""
+    return F.expr(taxnum_expr(ident(col)))
 
 
 # --- SQL twins (DuckDB dialect) so oracles derive from the same spec -------

@@ -1,9 +1,11 @@
 """E-mail format rule (reference R8, /root/reference/home.py:476-563).
 
 The reference unions 10 per-column filter families; here each sub-rule is a
-boolean column expression and the violation is their OR — one projection,
-one scan (SURVEY §4 rewrite 1).  ``email_flags`` exposes the per-sub-rule
-booleans so violation *counts by cause* come from the same single pass.
+boolean expression and the violation is their OR — one projection, one scan
+(SURVEY §4 rewrite 1).  ``email_flags`` exposes the per-sub-rule booleans so
+violation *counts by cause* come from the same single pass.  The ~70-literal
+expression is built as Spark SQL text (``*_expr``) and sent to the JVM in
+one call (functions/sqltext.py).
 
 Fidelity note (documented deviation): reference f3 is
 ``~contains("@") | ~contains(".")`` where "." is a REGEX any-char, so its
@@ -15,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from dataqtor_spark.functions.sqltext import any_of, contains_any, ident, lit
 
 # f1 — forbidden characters (home.py:477-505); all literal contains
 FORBIDDEN_CHARS = [
@@ -44,48 +48,40 @@ TYPO_DOMAINS = ["windowlive", "hotmil", "hatmail", "hotmial", "gamil",
                 "gmmail", "outlok", "yaaho"]
 
 
-def _contains_any(c: Column, needles: list[str]) -> Column:
-    out = F.lit(False)
-    for n in needles:
-        out = out | c.contains(n)
-    return out
-
-
-def email_flags(col: Column | str) -> dict[str, Column]:
-    """Per-sub-rule boolean columns (null input → false for every flag)."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    at_count = F.length(c) - F.length(F.regexp_replace(c, "@", ""))
+def email_flags_expr(expr: str) -> dict[str, str]:
+    """Spark SQL text of each sub-rule over the SQL expression ``expr``
+    (null input → false for every flag)."""
+    c = f"CAST({expr} AS STRING)"
     flags = {
-        "f1_forbidden_chars": _contains_any(c, FORBIDDEN_CHARS),
-        "f2_too_short": F.length(c) <= 6,
-        "f3_missing_at_or_dot": (~c.contains("@")) | (~c.contains(".")),
-        "f4_multiple_at": at_count > 1,
-        "f5_dummy_prefix": F.lit(False),
-        "f6_malformed_at": _contains_any(c, MALFORMED_AT),
-        "v1_turkish_chars": _contains_any(c, TURKISH_CHARS),
-        "v2_uppercase": c.rlike("[A-Z]"),
-        "v3_bad_ending": F.lit(False),
-        "v4_typo_domain": _contains_any(c, TYPO_DOMAINS),
+        "f1_forbidden_chars": contains_any(c, FORBIDDEN_CHARS),
+        "f2_too_short": f"(length({c}) <= 6)",
+        "f3_missing_at_or_dot": f"((NOT contains({c}, '@')) OR (NOT contains({c}, '.')))",
+        "f4_multiple_at": f"((length({c}) - length(regexp_replace({c}, '@', ''))) > 1)",
+        "f5_dummy_prefix": any_of(f"startswith({c}, {lit(p)})" for p in DUMMY_PREFIXES),
+        "f6_malformed_at": contains_any(c, MALFORMED_AT),
+        "v1_turkish_chars": contains_any(c, TURKISH_CHARS),
+        "v2_uppercase": f"({c} RLIKE '[A-Z]')",
+        "v3_bad_ending": any_of(f"endswith({c}, {lit(e)})" for e in BAD_ENDINGS),
+        "v4_typo_domain": contains_any(c, TYPO_DOMAINS),
     }
-    f5 = F.lit(False)
-    for p in DUMMY_PREFIXES:
-        f5 = f5 | c.startswith(p)
-    flags["f5_dummy_prefix"] = f5
-    v3 = F.lit(False)
-    for e in BAD_ENDINGS:
-        v3 = v3 | c.endswith(e)
-    flags["v3_bad_ending"] = v3
     # null-audit: make every flag null-safe false so OR-union can't go null
-    return {k: F.coalesce(v, F.lit(False)) for k, v in flags.items()}
+    return {k: f"coalesce({v}, false)" for k, v in flags.items()}
 
 
-def email_violation(col: Column | str) -> Column:
-    """True iff any sub-rule fires (the reference's unioned violation set)."""
-    flags = email_flags(col)
-    out = F.lit(False)
-    for v in flags.values():
-        out = out | v
-    return out
+def email_violation_expr(expr: str) -> str:
+    """Spark SQL text: true iff any sub-rule fires (the reference's unioned
+    violation set)."""
+    return any_of(email_flags_expr(expr).values())
+
+
+def email_flags(col: str) -> dict[str, Column]:
+    """Per-sub-rule boolean columns over column ``col``."""
+    return {k: F.expr(v) for k, v in email_flags_expr(ident(col)).items()}
+
+
+def email_violation(col: str) -> Column:
+    """Boolean column: the value of column ``col`` violates the rule."""
+    return F.expr(email_violation_expr(ident(col)))
 
 
 # --- SQL twin (DuckDB) -----------------------------------------------------

@@ -26,7 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-__all__ = ["round_ratio", "round_ratio_int", "round_ratio_sql",
+__all__ = ["round_ratio", "round_ratio_int", "round_ratio_expr", "round_ratio_sql",
            "round_ratio_int_sql", "round_dec"]
 
 
@@ -55,6 +55,17 @@ def round_ratio(num: Column, den: Column, k: int) -> Column:
     """
     signed = round_ratio_int(num, den, k)
     return (signed / F.lit(float(10 ** k))).cast("double")
+
+
+def round_ratio_expr(num: str, den: str, k: int) -> str:
+    """:func:`round_ratio` as Spark SQL text over SQL expressions ``num``
+    and ``den`` — the same Catalyst tree, for callers that build a whole
+    aggregate list as text."""
+    n, d = f"CAST({num} AS DECIMAL(38,0))", f"CAST({den} AS DECIMAL(38,0))"
+    two, m = "CAST(2 AS DECIMAL(38,0))", f"CAST({10 ** k} AS DECIMAL(38,0))"
+    q = f"div(((({two} * abs({n})) * {m}) + {d}), ({two} * {d}))"
+    return (f"CAST((CASE WHEN ({n} < 0) THEN (- {q}) ELSE {q} END"
+            f" / {float(10 ** k)!r}D) AS DOUBLE)")
 
 
 def round_ratio_int_sql(num: str, den: str, k: int) -> str:

@@ -31,6 +31,8 @@ import functools
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from dataqtor_spark.functions.sqltext import any_of, contains_any, ident
+
 # (name, length, {pos: literal}, startswith, endswith, not_contains, contains)
 # Transcribed 1:1 from home.py:606-1083; names keep the reference's dNNN ids.
 PHONE_MASKS: list[tuple[str, int, dict[int, str], str | None, str | None, list[str], list[str]]] = [
@@ -146,27 +148,36 @@ def _contains_any(c: Column, needles: list[str]) -> Column:
     return out
 
 
-def phone_flags(col: Column | str) -> dict[str, Column]:
-    """The four violation families (null-safe false)."""
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    ln = F.length(c)
+def phone_flags_expr(expr: str) -> dict[str, str]:
+    """Spark SQL text of the four violation families over the SQL
+    expression ``expr`` (null-safe false)."""
+    c = f"CAST({expr} AS STRING)"
+    ln = f"length({c})"
     flags = {
-        "bad_ten_digit": (ln == 10) & (c.startswith("0") | _contains_any(c, SEPARATOR_CHARS)),
-        "dummy_sequence": _contains_any(c, DUMMY_PHONE_PATTERNS),
-        "invalid": (ln < 10) | c.rlike("[A-Za-z]"),
-        "overlong": ln > 10,
+        "bad_ten_digit": (f"(({ln} = 10) AND (startswith({c}, '0') OR "
+                          f"{contains_any(c, SEPARATOR_CHARS)}))"),
+        "dummy_sequence": contains_any(c, DUMMY_PHONE_PATTERNS),
+        "invalid": f"(({ln} < 10) OR ({c} RLIKE '[A-Za-z]'))",
+        "overlong": f"({ln} > 10)",
     }
-    return {k: F.coalesce(v, F.lit(False)) for k, v in flags.items()}
+    return {k: f"coalesce({v}, false)" for k, v in flags.items()}
 
 
-def phone_violation(col: Column | str) -> Column:
-    """True iff the value violates the TR phone rule (see module docstring
-    for the reduction of the reference's 95-mask union)."""
-    flags = phone_flags(col)
-    out = F.lit(False)
-    for v in flags.values():
-        out = out | v
-    return out
+def phone_violation_expr(expr: str) -> str:
+    """Spark SQL text: true iff the value violates the TR phone rule (see
+    the module docstring for the reduction of the reference's 95-mask
+    union)."""
+    return any_of(phone_flags_expr(expr).values())
+
+
+def phone_flags(col: str) -> dict[str, Column]:
+    """The four violation families over column ``col``."""
+    return {k: F.expr(v) for k, v in phone_flags_expr(ident(col)).items()}
+
+
+def phone_violation(col: str) -> Column:
+    """Boolean column: the value of column ``col`` violates the rule."""
+    return F.expr(phone_violation_expr(ident(col)))
 
 
 def phone_format_class(col: Column | str) -> Column:
@@ -199,7 +210,7 @@ def _phone_format_class(col: Column | str) -> Column:
     comparison).  Differentially verified against the CASE-tree form on
     150 k derived strings: 0 mismatches.
     """
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
+    c = (F.col(ident(col)) if isinstance(col, str) else col).cast("string")
     ln = F.length(c)
     mask_lengths = sorted({m[1] for m in PHONE_MASKS})
     table = F.array(*[

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataqtor_spark.functions.exact import round_ratio_expr
+from dataqtor_spark.functions.sqltext import count_true, ident, lit, pct, struct
 from dataqtor_spark.session import ROW_ID
 
 # Turkish-aware letter class used by the reference's pattern profiler
@@ -31,19 +33,23 @@ def _data_cols(df: DataFrame, cols: list[str] | None) -> list[str]:
     return [c for c in df.columns if c != ROW_ID]
 
 
-def _long_format(one_row: DataFrame, cols: list[str], fields: dict[str, str]) -> DataFrame:
+def _long_format(one_row: DataFrame, cols: list[str], fields: dict[str, str],
+                 **per_col: list[str]) -> DataFrame:
     """Explode a single wide agg row into (column, stat...) long format.
 
-    ``fields`` maps output field name -> per-column agg alias prefix.
+    ``fields`` maps output field name -> the SQL expression of that field
+    for column number ``{i}`` (e.g. ``"__mean_{i}"``); ``per_col`` lists
+    further per-column values a template may name.  One ``selectExpr``
+    call, whatever the column count.
     """
     structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            *[F.col(f"{prefix}{c}").alias(out) for out, prefix in fields.items()],
-        )
-        for c in cols
+        struct([(lit(c), "column")] + [
+            (e.format(i=i, **{k: v[i] for k, v in per_col.items()}), out)
+            for out, e in fields.items()])
+        for i, c in enumerate(cols)
     ]
-    return one_row.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    return (one_row.selectExpr(f"explode(array({', '.join(structs)})) AS s")
+            .select("s.*"))
 
 
 # ---------------------------------------------------------------------------
@@ -87,37 +93,14 @@ def null_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     columns are profiled (the reference does one pass per column).
     """
     cols = _data_cols(df, cols)
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for c in cols:
-        aggs.append(
-            F.coalesce(F.sum(F.col(c).isNull().cast("long")), F.lit(0)).alias(f"__nulls_{c}")
-        )
-    one = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("__total").alias("total_records"),
-            F.col(f"__nulls_{c}").alias("null_records"),
-            (F.col("__total") - F.col(f"__nulls_{c}")).alias("filled_records"),
-        )
-        for c in cols
-    ]
-    return (
-        one.select(F.explode(F.array(*structs)).alias("s"))
-        .select("s.*")
-        .withColumn(
-            "null_pct",
-            F.when(F.col("total_records") > 0,
-                   F.round(F.col("null_records") * 100.0 / F.col("total_records"), 2)
-                   ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "filled_pct",
-            F.when(F.col("total_records") > 0,
-                   F.round(F.col("filled_records") * 100.0 / F.col("total_records"), 2)
-                   ).otherwise(F.lit(0.0)),
-        )
-    )
+    one = df.selectExpr("count(1) AS __total", *[
+        f"{count_true(f'{ident(c)} IS NULL')} AS __nulls_{i}" for i, c in enumerate(cols)])
+    return _long_format(one, cols, {
+        "total_records": "__total",
+        "null_records": "__nulls_{i}",
+        "filled_records": "(__total - __nulls_{i})",
+    }).selectExpr("*", f"{pct('null_records', 'total_records')} AS null_pct",
+                  f"{pct('filled_records', 'total_records')} AS filled_pct")
 
 
 # ---------------------------------------------------------------------------
@@ -142,24 +125,23 @@ def _describe(df: DataFrame, cols: list[str] | None, approx: bool) -> DataFrame:
     cols = cols or numeric_columns(df)
     pctl = "percentile_approx" if approx else "percentile"
     aggs = []
-    for c in cols:
+    for i, c in enumerate(cols):
+        q = ident(c)
         aggs += [
-            F.count(F.col(c)).alias(f"__count_{c}"),
-            F.avg(F.col(c)).alias(f"__mean_{c}"),
-            F.stddev_samp(F.col(c)).alias(f"__std_{c}"),
-            F.min(F.col(c)).cast("double").alias(f"__min_{c}"),
-            F.expr(f"{pctl}({c}, 0.25)").cast("double").alias(f"__q1_{c}"),
-            F.expr(f"{pctl}({c}, 0.5)").cast("double").alias(f"__median_{c}"),
-            F.expr(f"{pctl}({c}, 0.75)").cast("double").alias(f"__q3_{c}"),
-            F.max(F.col(c)).cast("double").alias(f"__max_{c}"),
-            F.sum(F.col(c)).cast("double").alias(f"__sum_{c}"),
+            f"count({q}) AS __count_{i}",
+            f"avg({q}) AS __mean_{i}",
+            f"stddev_samp({q}) AS __std_{i}",
+            f"CAST(min({q}) AS DOUBLE) AS __min_{i}",
+            f"CAST({pctl}({q}, 0.25) AS DOUBLE) AS __q1_{i}",
+            f"CAST({pctl}({q}, 0.5) AS DOUBLE) AS __median_{i}",
+            f"CAST({pctl}({q}, 0.75) AS DOUBLE) AS __q3_{i}",
+            f"CAST(max({q}) AS DOUBLE) AS __max_{i}",
+            f"CAST(sum({q}) AS DOUBLE) AS __sum_{i}",
         ]
-    one = df.agg(*aggs)
+    one = df.selectExpr(*aggs)
     return _long_format(one, cols, {
-        "count": "__count_", "mean": "__mean_", "std": "__std_",
-        "min": "__min_", "q1": "__q1_", "median": "__median_",
-        "q3": "__q3_", "max": "__max_", "sum": "__sum_",
-    })
+        k: f"__{k}_{{i}}" for k in
+        ["count", "mean", "std", "min", "q1", "median", "q3", "max", "sum"]})
 
 
 # ---------------------------------------------------------------------------
@@ -383,65 +365,39 @@ def profile_columns(df: DataFrame, cols: list[str] | None = None,
     cols = _data_cols(df, cols)
     types = dict(zip(df.columns, [f.dataType for f in df.schema.fields]))
     num = set(numeric_columns(df))
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for c in cols:
-        aggs.append(F.coalesce(F.sum(F.col(c).isNull().cast("long")), F.lit(0)).alias(f"__nulls_{c}"))
-        if exact_distinct:
-            aggs.append(F.countDistinct(F.col(c)).alias(f"__distinct_{c}"))
-        else:
-            aggs.append(F.approx_count_distinct(F.col(c)).alias(f"__distinct_{c}"))
+    aggs = ["count(1) AS __total"]
+    for i, c in enumerate(cols):
+        q = ident(c)
+        distinct = f"count(DISTINCT {q})" if exact_distinct else f"approx_count_distinct({q})"
+        aggs += [f"{count_true(f'{q} IS NULL')} AS __nulls_{i}",
+                 f"{distinct} AS __distinct_{i}"]
         if c in num:
             if exact_mean is not None:
-                from dataqtor_spark.functions.exact import round_ratio
-
                 s_in, s_out = exact_mean
-                scaled = (F.sum(F.col(c).cast(f"decimal(38,{s_in})"))
-                          * (10 ** s_in))
-                mean_col = round_ratio(
-                    scaled, F.count(F.col(c)) * (10 ** s_in), s_out)
+                mean = round_ratio_expr(
+                    f"(sum(CAST({q} AS DECIMAL(38,{s_in}))) * {10 ** s_in})",
+                    f"(count({q}) * {10 ** s_in})", s_out)
             else:
-                mean_col = F.avg(F.col(c))
-            aggs += [
-                mean_col.alias(f"__mean_{c}"),
-                F.stddev_samp(F.col(c)).alias(f"__std_{c}"),
-                F.min(F.col(c)).cast("double").alias(f"__min_{c}"),
-                F.max(F.col(c)).cast("double").alias(f"__max_{c}"),
-                F.skewness(F.col(c)).alias(f"__skew_{c}"),
-                F.kurtosis(F.col(c)).alias(f"__kurt_{c}"),
-                F.coalesce(F.sum((F.col(c) == 0).cast("long")), F.lit(0)).alias(f"__zeros_{c}"),
-                F.coalesce(F.sum((F.col(c) < 0).cast("long")), F.lit(0)).alias(f"__neg_{c}"),
-            ]
+                mean = f"avg({q})"
+            moments = [mean, f"stddev_samp({q})", f"CAST(min({q}) AS DOUBLE)",
+                       f"CAST(max({q}) AS DOUBLE)", f"skewness({q})", f"kurtosis({q})",
+                       count_true(f"{q} = 0"), count_true(f"{q} < 0")]
         else:
-            aggs += [
-                F.lit(None).cast("double").alias(f"__mean_{c}"),
-                F.lit(None).cast("double").alias(f"__std_{c}"),
-                F.lit(None).cast("double").alias(f"__min_{c}"),
-                F.lit(None).cast("double").alias(f"__max_{c}"),
-                F.lit(None).cast("double").alias(f"__skew_{c}"),
-                F.lit(None).cast("double").alias(f"__kurt_{c}"),
-                F.lit(None).cast("long").alias(f"__zeros_{c}"),
-                F.lit(None).cast("long").alias(f"__neg_{c}"),
-            ]
-    one = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.lit(types[c].simpleString()).alias("dtype"),
-            F.col("__total").alias("total_records"),
-            F.col(f"__nulls_{c}").alias("null_records"),
-            F.col(f"__distinct_{c}").cast("long").alias("distinct_values"),
-            F.col(f"__mean_{c}").alias("mean"),
-            F.col(f"__std_{c}").alias("std"),
-            F.col(f"__min_{c}").alias("min"),
-            F.col(f"__max_{c}").alias("max"),
-            F.col(f"__skew_{c}").alias("skewness"),
-            F.col(f"__kurt_{c}").alias("kurtosis"),
-            F.col(f"__zeros_{c}").alias("zero_count"),
-            F.col(f"__neg_{c}").alias("negative_count"),
-        )
-        for c in cols
-    ]
-    return one.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+            moments = ["CAST(NULL AS DOUBLE)"] * 6 + ["CAST(NULL AS BIGINT)"] * 2
+        aggs += [f"{m} AS __{k}_{i}" for m, k in zip(moments, _MOMENTS)]
+    one = df.selectExpr(*aggs)
+    return _long_format(one, cols, {
+        "dtype": "{dtype}",
+        "total_records": "__total",
+        "null_records": "__nulls_{i}",
+        "distinct_values": "CAST(__distinct_{i} AS BIGINT)",
+        "mean": "__mean_{i}", "std": "__std_{i}", "min": "__min_{i}",
+        "max": "__max_{i}", "skewness": "__skew_{i}", "kurtosis": "__kurt_{i}",
+        "zero_count": "__zeros_{i}", "negative_count": "__neg_{i}",
+    }, dtype=[lit(types[c].simpleString()) for c in cols])
+
+
+_MOMENTS = ["mean", "std", "min", "max", "skew", "kurt", "zeros", "neg"]
 
 
 def histogram(df: DataFrame, col: str, bins: int = 10) -> DataFrame:

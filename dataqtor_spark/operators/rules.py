@@ -24,15 +24,16 @@ DQ score (A14, home.py:1132-1138):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import date, datetime
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dataqtor_spark.functions.checksums import is_valid_taxnum, is_valid_tcid
-from dataqtor_spark.functions.email import email_violation
-from dataqtor_spark.functions.phone import phone_violation
+from dataqtor_spark.functions.checksums import taxnum_expr, tcid_expr
+from dataqtor_spark.functions.email import email_violation_expr
+from dataqtor_spark.functions.phone import phone_violation_expr
+from dataqtor_spark.functions.sqltext import (contains_any, count_true, ident, isin,
+                                              lit, pct, struct)
 
 # R4 — the reference's 31-char special-character set (home.py:434-436)
 SPECIAL_CHARS = ["@", "-", "_", ".", ",", "~", "`", "!", "#", "$", "%", "^",
@@ -61,26 +62,41 @@ TR_CITIES = [
 class Rule:
     """A named violation predicate over one column.
 
-    ``violation`` must be a boolean Column that is null-safe: NULL input
-    rows must evaluate to false (they are tracked as nulls, not violations).
+    ``predicate`` is a boolean Column or its Spark SQL text.  It must be
+    null-safe: NULL input rows must evaluate to false (they are tracked as
+    nulls, not violations).  The built-in literal-heavy rules carry text,
+    so building and fusing them costs a handful of py4j calls instead of
+    one per literal (functions/sqltext.py).
     """
     name: str
     column: str
-    violation: Column
+    predicate: Column | str
+
+    @property
+    def violation(self) -> Column:
+        p = self.predicate
+        return F.expr(p) if isinstance(p, str) else p
 
     def violations(self, df: DataFrame) -> DataFrame:
         """Rows violating the rule (never includes NULL inputs)."""
         return df.filter(self.violation)
 
 
+def _col(name: str) -> Column:
+    return F.col(ident(name))
+
+
 def _null_safe(c: Column) -> Column:
     return F.coalesce(c, F.lit(False))
 
 
-def _lit(v: Any) -> Column:
-    if isinstance(v, (date, datetime)):
-        return F.lit(v)
-    return F.lit(v)
+def _null_safe_sql(v: str) -> str:
+    return f"coalesce({v}, false)"
+
+
+def _unless_null(v: str, column: str) -> str:
+    """``v`` made null-safe, and never a violation where ``column`` is NULL."""
+    return f"({_null_safe_sql(v)} AND ({ident(column)} IS NOT NULL))"
 
 
 # ---------------------------------------------------------------------------
@@ -91,15 +107,15 @@ def rule_compare(column: str, op: str, value: Any = None,
                  low: Any = None, high: Any = None, name: str | None = None) -> Rule:
     """R1/R2 — custom numeric/date rule: violation = NOT(pred), nulls excluded
     (home.py:277-389).  ``between`` is inclusive on both ends."""
-    c = F.col(column)
+    c = _col(column)
     if op == "==":
-        ok = c == _lit(value)
+        ok = c == F.lit(value)
     elif op == ">=":
-        ok = c >= _lit(value)
+        ok = c >= F.lit(value)
     elif op == "<":
-        ok = c < _lit(value)
+        ok = c < F.lit(value)
     elif op == "between":
-        ok = (c >= _lit(low)) & (c <= _lit(high))
+        ok = (c >= F.lit(low)) & (c <= F.lit(high))
     else:
         raise ValueError(f"unsupported op: {op}")
     return Rule(name or f"{column}_{op}", column, _null_safe(~ok) & c.isNotNull())
@@ -109,7 +125,7 @@ def rule_length(column: str, op: str, value: int | None = None,
                 low: int | None = None, high: int | None = None,
                 name: str | None = None) -> Rule:
     """R3 — string length rule (home.py:394-429)."""
-    c = F.col(column)
+    c = _col(column)
     ln = F.length(c.cast("string"))
     if op == "==":
         ok = ln == value
@@ -132,75 +148,71 @@ def rule_no_special_chars(column: str, allowed: list[str] | None = None,
     (home.py:439-445): a value containing ANY whitelisted char is NOT a
     violation, even if it also contains other special chars.
     """
-    c = F.col(column).cast("string")
-    full = F.lit(False)
-    for ch in SPECIAL_CHARS:
-        full = full | c.contains(ch)
+    c = f"CAST({ident(column)} AS STRING)"
+    full = contains_any(c, SPECIAL_CHARS)
     if allowed:
-        wl = F.lit(False)
-        for ch in allowed:
-            wl = wl | c.contains(ch)
-        v = (~wl) & full
+        v = f"((NOT {contains_any(c, allowed)}) AND {full})"
     else:
         v = full
-    return Rule(name or f"{column}_no_special_chars", column, _null_safe(v))
+    return Rule(name or f"{column}_no_special_chars", column, _null_safe_sql(v))
 
 
 def rule_no_digits(column: str, name: str | None = None) -> Rule:
     """R5 (home.py:448-452)."""
-    c = F.col(column).cast("string")
+    c = _col(column).cast("string")
     return Rule(name or f"{column}_no_digits", column, _null_safe(c.rlike("[0-9]")))
 
 
 def rule_no_spaces(column: str, name: str | None = None) -> Rule:
     """R6 (home.py:455-457)."""
-    c = F.col(column).cast("string")
+    c = _col(column).cast("string")
     return Rule(name or f"{column}_no_spaces", column, _null_safe(c.contains(" ")))
 
 
 def rule_forbidden_values(column: str, values: list[str], name: str | None = None) -> Rule:
     """R7 (home.py:460-465)."""
-    c = F.col(column)
-    return Rule(name or f"{column}_forbidden", column, _null_safe(c.isin(values)))
+    return Rule(name or f"{column}_forbidden", column,
+                _null_safe_sql(isin(ident(column), values)))
 
 
 def rule_email(column: str, name: str | None = None) -> Rule:
     """R8 (home.py:476-563) — union of 10 sub-rules, one expression."""
-    return Rule(name or f"{column}_email", column, email_violation(column))
+    return Rule(name or f"{column}_email", column, email_violation_expr(ident(column)))
 
 
 def rule_tcid(column: str, name: str | None = None) -> Rule:
     """R9 (TRnoChecker.py:1-21)."""
-    c = F.col(column)
     return Rule(name or f"{column}_tcid", column,
-                _null_safe(~is_valid_tcid(c)) & c.isNotNull())
+                _unless_null(f"(NOT {tcid_expr(ident(column))})", column))
 
 
 def rule_taxnum(column: str, name: str | None = None) -> Rule:
     """R10 (TRnoChecker.py:24-51)."""
-    c = F.col(column)
     return Rule(name or f"{column}_taxnum", column,
-                _null_safe(~is_valid_taxnum(c)) & c.isNotNull())
+                _unless_null(f"(NOT {taxnum_expr(ident(column))})", column))
 
 
 def rule_domain(column: str, allowed: list[str] | None = None,
                 name: str | None = None) -> Rule:
     """R11 — domain membership; default domain is the TR city list
     (home.py:579-601)."""
-    c = F.col(column)
     vals = allowed if allowed is not None else TR_CITIES
     return Rule(name or f"{column}_domain", column,
-                _null_safe(~c.isin(vals)) & c.isNotNull())
+                _unless_null(f"(NOT {isin(ident(column), vals)})", column))
 
 
 def rule_phone_tr(column: str, name: str | None = None) -> Rule:
     """R12 (home.py:603-1130) — see functions/phone.py for the reduction."""
-    return Rule(name or f"{column}_phone", column, phone_violation(column))
+    return Rule(name or f"{column}_phone", column, phone_violation_expr(ident(column)))
 
 
 # ---------------------------------------------------------------------------
 # Fused evaluation + scoring (A14/A15/A16, U1–U3)
 # ---------------------------------------------------------------------------
+
+SUMMARY_COLUMNS = ["rule", "column", "total_records", "null_records",
+                   "out_of_format_records", "proper_format_records", "dq_score"]
+
 
 def evaluate_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
     """DQ summary for any number of rules in ONE aggregate pass.
@@ -208,31 +220,26 @@ def evaluate_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
     Returns (rule, column, total_records, null_records,
     out_of_format_records, proper_format_records, dq_score) — the
     reference's before/after summary schema (home.py:41-52,1139-1150).
+
+    The aggregate list and the reshaping into one row per rule are Spark
+    SQL text, sent in two ``selectExpr`` calls.  A rule whose predicate is
+    a Column is projected first under a positional name.
     """
-    aggs = [F.count(F.lit(1)).alias("__total")]
-    for i, r in enumerate(rules):
-        aggs.append(F.coalesce(F.sum(F.col(r.column).isNull().cast("long")), F.lit(0))
-                    .alias(f"__nulls_{i}"))
-        aggs.append(F.coalesce(F.sum(r.violation.cast("long")), F.lit(0))
-                    .alias(f"__viol_{i}"))
-    one = df.agg(*aggs)
+    columns = {f"__rule_{i}": r.predicate for i, r in enumerate(rules)
+               if not isinstance(r.predicate, str)}
+    src = df.withColumns(columns) if columns else df
+    aggs = ["count(1) AS __total"]
     structs = []
     for i, r in enumerate(rules):
-        total = F.col("__total")
-        nulls = F.col(f"__nulls_{i}")
-        viol = F.col(f"__viol_{i}")
-        proper = total - nulls - viol
-        structs.append(F.struct(
-            F.lit(r.name).alias("rule"),
-            F.lit(r.column).alias("column"),
-            total.alias("total_records"),
-            nulls.alias("null_records"),
-            viol.alias("out_of_format_records"),
-            proper.alias("proper_format_records"),
-            F.when(total > 0, F.round(proper * 100.0 / total, 2))
-            .otherwise(F.lit(0.0)).alias("dq_score"),
-        ))
-    return one.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+        v = r.predicate if isinstance(r.predicate, str) else f"__rule_{i}"
+        aggs += [f"{count_true(f'{ident(r.column)} IS NULL')} AS __nulls_{i}",
+                 f"{count_true(v)} AS __viol_{i}"]
+        proper = f"((__total - __nulls_{i}) - __viol_{i})"
+        fields = [lit(r.name), lit(r.column), "__total", f"__nulls_{i}",
+                  f"__viol_{i}", proper, pct(proper, "__total")]
+        structs.append(struct(zip(fields, SUMMARY_COLUMNS)))
+    one = src.selectExpr(*aggs)
+    return one.selectExpr(f"explode(array({', '.join(structs)})) AS s").select("s.*")
 
 
 def overall_score(summary: DataFrame) -> DataFrame:
@@ -259,7 +266,7 @@ def clean_rows(df: DataFrame, rules: list[Rule]) -> DataFrame:
     not_null = F.lit(True)
     for r in rules:
         any_v = any_v | r.violation
-        not_null = not_null & F.col(r.column).isNotNull()
+        not_null = not_null & _col(r.column).isNotNull()
     return df.filter((~any_v) & not_null)
 
 

@@ -863,6 +863,16 @@ PII_PHONE_RE = r"\b0?5[0-9]{9}\b"          # TR mobile shapes (5xx…, 05xx…)
 PII_TCID_RE = r"\b[1-9][0-9]{10}\b"        # 11-digit national-ID candidates
 
 
+def _valid_tcids(text_col: str) -> Column:
+    """The national-ID candidates of ``text_col`` that pass the TCID
+    checksum: one ``filter`` with the checksum's SQL text as its lambda."""
+    from dataqtor_spark.functions.checksums import tcid_expr
+    from dataqtor_spark.functions.sqltext import ident, lit
+
+    ids = f"regexp_extract_all(CAST({ident(text_col)} AS STRING), {lit(PII_TCID_RE)}, 0)"
+    return F.expr(f"filter({ids}, x -> {tcid_expr('x')})")
+
+
 def pii_scan(df: DataFrame, id_col: str = "doc_id",
              text_col: str = "text") -> DataFrame:
     """PII screening over free text — the pre-release scrub pass of a
@@ -880,13 +890,11 @@ def pii_scan(df: DataFrame, id_col: str = "doc_id",
     shared by Java regex and RE2 so the DuckDB oracle scans byte-for-byte
     the same spans.
     """
-    from dataqtor_spark.functions.checksums import is_valid_tcid
-
     c = F.col(text_col).cast("string")
     emails = F.regexp_extract_all(c, F.lit(PII_EMAIL_RE), F.lit(0))
     phones = F.regexp_extract_all(c, F.lit(PII_PHONE_RE), F.lit(0))
     ids = F.regexp_extract_all(c, F.lit(PII_TCID_RE), F.lit(0))
-    valid = F.filter(ids, lambda x: is_valid_tcid(x))
+    valid = _valid_tcids(text_col)
     out = df.select(
         F.col(id_col),
         F.size(emails).cast("long").alias("n_emails"),
@@ -913,11 +921,8 @@ def pii_redact(df: DataFrame, id_col: str = "doc_id",
     including inside a longer digit run that was not itself a candidate
     — deterministic and identical across engines (privacy errs toward
     over-redaction)."""
-    from dataqtor_spark.functions.checksums import is_valid_tcid
-
     c = F.col(text_col).cast("string")
-    ids = F.regexp_extract_all(c, F.lit(PII_TCID_RE), F.lit(0))
-    valid = F.filter(ids, lambda x: is_valid_tcid(x))
+    valid = _valid_tcids(text_col)
     n = (F.size(F.regexp_extract_all(c, F.lit(PII_EMAIL_RE), F.lit(0)))
          + F.size(F.regexp_extract_all(c, F.lit(PII_PHONE_RE), F.lit(0)))
          + F.size(valid))

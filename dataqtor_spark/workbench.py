@@ -12,18 +12,47 @@ Profiler → Detector → Corrector, for users switching from the reference.
 
 The reference mutates one cached table in place; here every correction is
 a lineage step on an immutable head (RepairSession), and before/after
-scores are snapshots of two lineage points.
+scores are snapshots of two lineage points: ``detect`` measures when it is
+called and keeps the few summary rows in Python, and ``report`` is
+assembled from those snapshots without running a Spark job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from dataqtor_spark import session as S
+from dataqtor_spark.functions.sqltext import ident, lit, pct
 from dataqtor_spark.operators import profile as P
 from dataqtor_spark.operators import repair as RP
 from dataqtor_spark.operators import rules as R
+
+# A snapshot keeps the evaluate_rules rows.  The relations rebuilt from it
+# recompute dq_score from the counts with evaluate_rules' own formula, so
+# they keep the summary's types (dq_score is a nullable double).
+_COUNTS = R.SUMMARY_COLUMNS[:-1]
+_SUMMARY = ", ".join(ident(c) for c in _COUNTS)
+_DQ_SCORE = f"{pct('proper_format_records', 'total_records')} AS dq_score"
+# the mean of the scores in rule order: the same double as avg() over rows
+_OVERALL = ("round(aggregate(scores, 0D, (a, x) -> a + x) / size(scores), 2)"
+            " AS overall_dq_score")
+
+
+def _literals(m: int, row: Row) -> list[str]:
+    """Measurement ``m``'s snapshot row (rule, column, counts…, dq_score)
+    as SQL literals, without the score."""
+    rule, column, *counts, _ = row
+    return [lit(m), lit(rule), lit(column), *[f"{n}L" for n in counts]]
+
+
+def _inline(spark: SparkSession, select: str, names: list[str],
+            rows: list[list[str]]) -> DataFrame:
+    """``SELECT … FROM VALUES …``: the optimizer folds it into a local
+    table, so neither building nor collecting it runs a Spark job
+    (``createDataFrame`` would go through an RDD)."""
+    values = ", ".join("(" + ", ".join(r) + ")" for r in rows)
+    return spark.sql(f"SELECT {select} FROM VALUES {values} "
+                     f"AS t({', '.join(ident(n) for n in names)})")
 
 
 class Workbench:
@@ -31,7 +60,7 @@ class Workbench:
 
     def __init__(self, df: DataFrame):
         self._sess = RP.RepairSession(df)
-        self._summaries: list[DataFrame] = []
+        self._snapshots: list[list[Row]] = []
 
     # --- E1: upload -------------------------------------------------------
 
@@ -52,24 +81,32 @@ class Workbench:
         return P.null_profile(self.df, cols)
 
     def detect(self, rules: list[R.Rule]) -> DataFrame:
-        """Evaluate rules on the current head; the summary is retained so
-        ``report`` can show the before/after progression (A15)."""
-        summary = R.evaluate_rules(self.df, rules).withColumn(
-            "measurement", F.lit(len(self._summaries)))
-        self._summaries.append(summary)
-        return summary
+        """Measure the rules on the current head now (one aggregate job)
+        and keep the summary rows as a snapshot for ``report`` (A15).
+        Returns the snapshot, with its ``measurement`` number, as an inline
+        relation: collecting it runs no Spark job."""
+        rows = R.evaluate_rules(self.df, rules).collect()
+        self._snapshots.append(rows)
+        m = len(self._snapshots) - 1
+        return _inline(self.df.sparkSession,
+                       f"{_SUMMARY}, {_DQ_SCORE}, measurement",
+                       ["measurement", *_COUNTS],
+                       [_literals(m, r) for r in rows])
 
     def report(self) -> DataFrame:
-        """All retained measurements unioned (the before/after table),
-        with the overall score per measurement (A16)."""
-        if not self._summaries:
+        """All measurements unioned (the before/after table), with the
+        overall score per measurement (A16).  Assembled from the snapshots
+        ``detect`` took, so it runs no Spark job and still answers after
+        the source data has changed or gone."""
+        if not self._snapshots:
             raise ValueError("no measurements yet — call detect() first")
-        out = self._summaries[0]
-        for s in self._summaries[1:]:
-            out = out.unionByName(s)
-        overall = (out.groupBy("measurement")
-                   .agg(F.round(F.avg("dq_score"), 2).alias("overall_dq_score")))
-        return out.join(overall, "measurement")
+        rows = []
+        for m, snap in enumerate(self._snapshots):
+            scores = f"array({', '.join(lit(r['dq_score']) for r in snap)})"
+            rows += [[*_literals(m, r), scores] for r in snap]
+        return _inline(self.df.sparkSession,
+                       f"measurement, {_SUMMARY}, {_DQ_SCORE}, {_OVERALL}",
+                       ["measurement", *_COUNTS, "scores"], rows)
 
     # --- E3: corrector (each returns self for chaining) --------------------
 
@@ -102,8 +139,6 @@ class Workbench:
     def suggest_constraints(self, cols: list[str] | None = None) -> DataFrame:
         """Profile → proposed expectations (deequ-style); feed back into
         detect() as rules on the next batch."""
-        from dataqtor_spark.operators import profile as P
-
         return P.suggest_constraints(self.df, cols)
 
     def unique_key(self, key_cols: list[str]) -> DataFrame:

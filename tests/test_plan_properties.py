@@ -204,3 +204,72 @@ def test_bm25_tokenizes_once_and_releases_cache(spark):
     # token explode (which would be corpus-sized)
     leaked = big_cached() - before
     assert not leaked, f"corpus-sized cache must be unpersisted: {leaked}"
+
+
+# --- client-side budgets: py4j round trips and Spark jobs of a session ------
+
+_CUSTOMER_SCHEMA = ("customer_id long, first_name string, last_name string, "
+                    "email string, phone string, tcid string, city string, "
+                    "birth_date date, balance double, age int")
+
+
+def _customer_frame(spark):
+    import datetime
+
+    return spark.createDataFrame(
+        [(1, "Ali", "Kaya", "ali@mail.com", "05551234567", "10000000146",
+          "Ankara", datetime.date(1990, 1, 2), 10.5, 34),
+         (2, None, "Ak", "bad@", "0555 123", None, "Istanbul", None, None, 71)],
+        _CUSTOMER_SCHEMA)
+
+
+def _bench_rules():
+    from dataqtor_spark.operators import rules as R
+
+    return [R.rule_email("email"), R.rule_phone_tr("phone"),
+            R.rule_tcid("tcid"), R.rule_domain("city")]
+
+
+def _jobs(sc, group, fn):
+    """Spark job ids that ``fn`` launches, counted by job group."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rules_build_py4j_budget(spark, py4j_calls):
+    from dataqtor_spark.operators import rules as R
+
+    df = _customer_frame(spark)
+    with py4j_calls() as calls:
+        R.evaluate_rules(df, _bench_rules())
+    assert len(calls) <= 300, len(calls)  # Column composition: ~7,000
+
+
+def test_profile_build_py4j_budget(spark, py4j_calls):
+    from dataqtor_spark.operators import profile as P
+
+    df = _customer_frame(spark)
+    assert len(df.columns) == 10
+    with py4j_calls() as calls:
+        P.profile_columns(df)
+    assert len(calls) <= 500, len(calls)  # Column composition: ~6,700
+
+
+def test_detect_snapshot_and_report_job_budget(spark):
+    from dataqtor_spark.operators import rules as R
+    from dataqtor_spark.workbench import Workbench
+
+    sc = spark.sparkContext
+    df = _customer_frame(spark)
+    lazy = _jobs(sc, "budget-lazy-summary",
+                 lambda: R.evaluate_rules(df, _bench_rules()).collect())
+    wb = Workbench(df)
+    detect = _jobs(sc, "budget-detect",
+                   lambda: wb.detect(_bench_rules()).collect())
+    assert 0 < len(detect) <= len(lazy), (detect, lazy)
+    wb.detect(_bench_rules())
+    assert _jobs(sc, "budget-report", lambda: wb.report().collect()) == []

@@ -69,11 +69,15 @@ def _tcid_valid_py(s: str) -> bool:
     return d[9] == d10 and d[10] == d11
 
 
-@settings(**_SETTINGS)
-@given(st.lists(st.one_of(
+# ID-shaped values: well-formed 11-digit strings plus near misses
+ID_VALUES = st.lists(st.one_of(
     st.text("0123456789", min_size=11, max_size=11),
     st.text("0123456789abc ", min_size=0, max_size=13),
-), min_size=1, max_size=60))
+), min_size=1, max_size=60)
+
+
+@settings(**_SETTINGS)
+@given(ID_VALUES)
 def test_tcid_expression_matches_python(spark, vals):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)],
                                "id long, s string")
@@ -86,9 +90,12 @@ def test_tcid_expression_matches_python(spark, vals):
 
 # --- phone: class == 'ok' ⟺ not violation ----------------------------------
 
+PHONE_VALUES = st.lists(st.text("0123456789 -/()+ab", min_size=0, max_size=20),
+                        min_size=1, max_size=60)
+
+
 @settings(**_SETTINGS)
-@given(st.lists(st.text("0123456789 -/()+ab", min_size=0, max_size=20),
-                min_size=1, max_size=60))
+@given(PHONE_VALUES)
 def test_phone_class_consistent_with_violation(spark, vals):
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)],
                                "id long, s string")

@@ -181,3 +181,53 @@ def test_metrics_repository_anomaly_detection(spark, tmp_path):
     assert res["total_records"]["is_anomaly"] is False  # constant metric
     # constant history -> zero variance -> NULL z, never a false alarm
     assert res["total_records"]["z"] is None
+
+
+def test_dotted_and_quoted_column_names(spark):
+    """Names that read as struct paths or need quoting: a dot, a space,
+    a backtick and a Turkish capital."""
+    from dataqtor_spark.operators import profile as P
+
+    names = ["e.mail", "full name", "we`ird", "İl"]
+    df = spark.createDataFrame(
+        [("a@b.com", "Ali Kaya", "x", "Ankara"),
+         ("bad", "Ay$e", None, "Paris"),
+         (None, None, "y", None)],
+        ", ".join(f"`{n.replace('`', '``')}` string" for n in names))
+    rules = [R.rule_email("e.mail"), R.rule_no_special_chars("full name"),
+             R.rule_forbidden_values("we`ird", ["y"]), R.rule_domain("İl")]
+    want = {("e.mail", 1, 1), ("full name", 1, 1), ("we`ird", 1, 1), ("İl", 1, 1)}
+
+    for prof in (P.profile_columns(df), P.null_profile(df)):
+        got = {(r["column"], r["total_records"], r["null_records"]) for r in prof.collect()}
+        assert got == {(n, 3, 1) for n in names}
+    got = {(r["column"], r["null_records"], r["out_of_format_records"])
+           for r in R.evaluate_rules(df, rules).collect()}
+    assert got == want
+
+    wb = Workbench(df)
+    wb.detect(rules)
+    rep = wb.report().collect()
+    assert {(r["column"], r["null_records"], r["out_of_format_records"])
+            for r in rep} == want
+    assert {r["overall_dq_score"] for r in rep} == {33.33}
+
+
+def test_report_survives_replaced_source(spark, tmp_path):
+    """detect measures when called: replacing the uploaded file afterwards
+    does not change (or break) the report of what was measured."""
+    path = str(tmp_path / "upload")
+    spark.createDataFrame(
+        [(1, "a b"), (2, "xy"), (3, None)], "id long, name string"
+    ).write.parquet(path)
+    wb = Workbench.load(spark, path)
+    rules = [R.rule_no_spaces("name")]
+    wb.detect(rules)
+    wb.find_replace("name", " ", "")
+    wb.detect(rules)
+    spark.createDataFrame([(9, "new upload")], "id long, name string") \
+        .write.mode("overwrite").parquet(path)
+
+    rep = sorted((r["measurement"], r["out_of_format_records"], r["dq_score"],
+                  r["overall_dq_score"]) for r in wb.report().collect())
+    assert rep == [(0, 1, 33.33, 33.33), (1, 0, 66.67, 66.67)]
