@@ -1048,15 +1048,15 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
 # barriers use eager localCheckpoint (one job, no file commit — measured
 # ~3x cheaper per round at probe scale); every K-th round lands on
 # parquet, which truncates the checkpoint chain well below the >~15
-# depth where Spark 4 AQE plans were measured to re-expand, releases the
-# intermediate rounds' pinned blocks, and gives a durable restart point
-# at cluster scale (the GraphX/GraphFrames periodic-checkpoint cadence).
+# depth where Spark 4 AQE plans were measured to re-expand, and releases
+# the intermediate rounds' pinned blocks (the GraphX/GraphFrames
+# periodic-checkpoint cadence).  With a checkpoint dir set, every round
+# is a reliable checkpoint instead.
 _CC_STORAGE_EVERY = 6
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 50,
-                         work_dir: str | None = None) -> DataFrame:
+                         id_b: str = "id_b", max_iter: int = 50) -> DataFrame:
     """(id, component) for every node in ``pairs`` — component = min node
     id reachable (the dedup-cluster builder: pairs from any near-dup
     detector in, survivor groups out).
@@ -1068,24 +1068,16 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     rather than O(diameter).  Round 0 skips the label join entirely
     (labels are the identity, so the neighbour min is ``min(dst)``).
 
-    Barrier flavor is durability-aware (the ``with_row_id``/
-    ``ordered_prefix`` auto-select convention): when the cluster operator
-    has configured ``sc.setCheckpointDir(<fault-tolerant path>)``, EVERY
-    barrier — edges and each round's labels — is a reliable
-    ``checkpoint()`` landing on that storage, so an executor loss at any
-    point of a long iteration restarts from the last completed round.
-    Otherwise (bench/local mode, no checkpoint dir) iteration barriers
-    are eager ``localCheckpoint``s with a parquet barrier every
-    ``_CC_STORAGE_EVERY`` rounds (``work_dir``, default a fresh temp
-    dir, holds the parquet rounds): near-dup graphs converge in 2-4
-    rounds, where the memory barrier is ~3x cheaper, while the periodic
-    storage barrier keeps checkpoint-chain depth bounded (AQE plan
-    re-expansion beyond ~15 chained checkpoints).  ``localCheckpoint``
-    blocks die with their executors, so the memory-barrier mode is a
-    single-node/bench convention — a cluster run wanting fault tolerance
-    sets a checkpoint dir (or at minimum passes ``work_dir``, which also
-    lands the EDGES on parquet — they are consumed every round, so a
-    lost edge block would otherwise kill all remaining rounds).
+    Barriers follow the one durability rule of ``ordered.barrier``: when
+    the session has a checkpoint dir, EVERY barrier — edges and each
+    round's labels — is a reliable ``checkpoint()``, so an executor loss
+    at any point of a long iteration restarts from the last completed
+    round.  Otherwise the barriers are eager ``localCheckpoint``s, with a
+    parquet barrier every ``_CC_STORAGE_EVERY`` rounds in a temp dir that
+    is removed on every exit: near-dup graphs converge in 2-4 rounds,
+    where the memory barrier is ~3x cheaper, while the periodic storage
+    barrier keeps checkpoint-chain depth bounded (AQE plan re-expansion
+    beyond ~15 chained checkpoints).
 
     Convergence is detected join-free: labels only ever decrease, so the
     exact (DECIMAL) sum of labels is stationary iff no label changed —
@@ -1101,93 +1093,80 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     from pyspark.sql import Observation
 
-    from dataqtor_spark.operators.ordered import (
-        _spark_context_or_none, configured_checkpoint_dir)
+    from dataqtor_spark.operators.ordered import barrier, durable_barriers
 
     spark = pairs.sparkSession
-    d = work_dir
-    sc = _spark_context_or_none(spark)
-    # operator-CONFIGURED dir only: the driver-local temp dir that
-    # ordered_prefix's reliable=True local fallback auto-creates is
-    # session-global and would otherwise silently flip every later CC
-    # call into file-checkpoint-per-round mode with zero durability gain
-    durable = sc is not None and configured_checkpoint_dir(sc) is not None
+    durable = durable_barriers(spark)
     # Memory barrier per round (eager localCheckpoint: one job, no file
     # commit/listing) instead of a parquet round-trip: round time on a
-    # probe-scale graph dropped ~1.0 s -> ~0.35 s, and typical near-dup
-    # graphs converge in 2-3 rounds — far below the >~15-checkpoint chain
-    # depth where Spark 4 AQE plans were measured to re-expand.  Depth
-    # safety is kept by landing a STORAGE barrier every
-    # ``_CC_STORAGE_EVERY`` rounds (truncates to a parquet scan exactly
-    # like the old per-round write); ``work_dir`` given -> parquet rounds
-    # land there, and the edges frame (consumed by EVERY round) does too.
-    # With a configured checkpoint dir, every barrier is a reliable
-    # ``checkpoint()`` instead — durable at cluster scale by config.
-    e = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-         .unionByName(pairs.select(F.col(id_b).alias("src"),
-                                   F.col(id_a).alias("dst")))
-         .distinct())
-    if durable:
-        e = e.checkpoint()
-    elif work_dir is not None:
-        e.write.mode("overwrite").parquet(f"{work_dir}/edges")
-        e = spark.read.parquet(f"{work_dir}/edges")
-    else:
-        e = e.localCheckpoint()
+    # probe-scale graph dropped ~1.0 s -> ~0.35 s (see _CC_STORAGE_EVERY
+    # for the periodic storage barrier that bounds chain depth).
+    e = barrier(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .unionByName(pairs.select(F.col(id_b).alias("src"),
+                                  F.col(id_a).alias("dst")))
+        .distinct())
+    d = None
     prev_sum = None
     labels = None
-    last_stored = None
-    for it in range(max_iter):
-        if labels is None:
-            # round 0: label(x) = x identically, so the neighbour minimum
-            # is plain min(dst) — one aggregation, no label join (the
-            # general round's 3-join shape collapses to agg + jump join)
-            prop = (e.groupBy("src").agg(F.min("dst").alias("nb_min"))
-                    .select(F.col("src").alias("id"),
-                            F.least(F.col("src"), F.col("nb_min"))
-                            .alias("label")))
-        else:
-            nb = (e.join(labels, e["dst"] == labels["id"])
-                  .groupBy("src").agg(F.min("label").alias("nb_min")))
-            prop = (labels.join(nb, labels["id"] == nb["src"], "left")
-                    .select(labels["id"],
-                            F.least(labels["label"],
-                                    F.coalesce(F.col("nb_min"),
-                                               labels["label"]))
-                            .alias("label")))
-        # pointer jump: follow the label one hop (label is itself a node id,
-        # so label(label) is ≤ label and reachable) — doubles propagation
-        # distance per round
-        parent = prop.select(F.col("id").alias("label"),
-                             F.col("label").alias("__grand"))
-        new = (prop.join(parent, "label", "left")
-               .select(F.col("id"),
-                       F.least(F.col("label"),
-                               F.coalesce(F.col("__grand"), F.col("label")))
-                       .alias("label")))
-        # the convergence sum rides the barrier action as an Observation
-        # metric — no separate aggregate job per round (fires for both
-        # barrier flavors: eager localCheckpoint and the parquet write)
-        obs = Observation(f"cc_sum_{it}")
-        observed = new.observe(
-            obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-        if durable:
-            # reliable checkpoint: labels land under sc.getCheckpointDir()
-            # every round — lineage truncated AND executor-loss-safe
-            labels = observed.checkpoint()
-        elif (it + 1) % _CC_STORAGE_EVERY == 0:
-            d = d or tempfile.mkdtemp(prefix="dataqtor_cc_")
-            observed.write.mode("overwrite").parquet(f"{d}/labels_{it + 1}")
-            labels = spark.read.parquet(f"{d}/labels_{it + 1}")
-            if last_stored is not None:
-                shutil.rmtree(last_stored, ignore_errors=True)
-            last_stored = f"{d}/labels_{it + 1}"
-        else:
-            labels = observed.localCheckpoint()
-        s = obs.get["s"]
-        if s == prev_sum:
-            return labels.select(F.col("id"), F.col("label").alias("component"))
-        prev_sum = s
+    try:
+        for it in range(max_iter):
+            if labels is None:
+                # round 0: label(x) = x identically, so the neighbour minimum
+                # is plain min(dst) — one aggregation, no label join (the
+                # general round's 3-join shape collapses to agg + jump join)
+                prop = (e.groupBy("src").agg(F.min("dst").alias("nb_min"))
+                        .select(F.col("src").alias("id"),
+                                F.least(F.col("src"), F.col("nb_min"))
+                                .alias("label")))
+            else:
+                nb = (e.join(labels, e["dst"] == labels["id"])
+                      .groupBy("src").agg(F.min("label").alias("nb_min")))
+                prop = (labels.join(nb, labels["id"] == nb["src"], "left")
+                        .select(labels["id"],
+                                F.least(labels["label"],
+                                        F.coalesce(F.col("nb_min"),
+                                                   labels["label"]))
+                                .alias("label")))
+            # pointer jump: follow the label one hop (label is itself a node
+            # id, so label(label) is ≤ label and reachable) — doubles
+            # propagation distance per round
+            parent = prop.select(F.col("id").alias("label"),
+                                 F.col("label").alias("__grand"))
+            new = (prop.join(parent, "label", "left")
+                   .select(F.col("id"),
+                           F.least(F.col("label"),
+                                   F.coalesce(F.col("__grand"),
+                                              F.col("label")))
+                           .alias("label")))
+            # the convergence sum rides the barrier action as an Observation
+            # metric — no separate aggregate job per round (fires for both
+            # barrier flavors: the checkpoint and the parquet write)
+            obs = Observation(f"cc_sum_{it}")
+            observed = new.observe(
+                obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
+            stored = not durable and (it + 1) % _CC_STORAGE_EVERY == 0
+            if stored:
+                # one path, overwritten: the round before a parquet round is
+                # a memory barrier, so this plan never reads the old files
+                d = d or tempfile.mkdtemp(prefix="dataqtor_cc_")
+                observed.write.mode("overwrite").parquet(f"{d}/labels")
+            else:
+                nxt = barrier(observed)
+            s = obs.get["s"]
+            if s == prev_sum:
+                # equal sums: no label changed, so after a parquet round the
+                # previous round's memory barrier holds the same rows — and,
+                # unlike the parquet files, outlives the temp dir
+                done = labels if stored else nxt
+                return done.select(F.col("id"),
+                                   F.col("label").alias("component"))
+            if stored:
+                nxt = spark.read.parquet(f"{d}/labels")
+            labels, prev_sum = nxt, s
+    finally:
+        if d is not None:
+            shutil.rmtree(d, ignore_errors=True)
     raise RuntimeError(
         f"connected_components: labels not stable after {max_iter} rounds; "
         "graph is deeper than expected — raise max_iter")

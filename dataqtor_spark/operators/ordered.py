@@ -53,83 +53,31 @@ def _default_parallelism(spark) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
 
 
-def _pin(df: DataFrame, reliable: bool | None) -> DataFrame:
-    """Pin one materialization of a range-partitioned frame so its two
-    consumers (rows + per-partition totals) agree on partition ids —
-    the sampling-exchange hazard documented on :func:`ordered_prefix`.
-
-    Classic sessions resolve ``reliable`` via :func:`_resolve_reliable`
-    (checkpoint-dir aware).  On Spark Connect both checkpoint flavors
-    are server-executed commands: ``reliable=True`` issues
-    ``df.checkpoint`` (the SERVER's checkpoint dir must be configured —
-    a missing one surfaces as the server's own error), anything else
-    uses ``localCheckpoint``, the same default as classic."""
-    sc = _spark_context_or_none(df.sparkSession)
-    if sc is None:
-        if reliable is True:
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
-    if _resolve_reliable(sc, reliable):
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
+def durable_barriers(spark) -> bool:
+    """The one durability rule for lineage barriers: reliable iff the
+    session has a checkpoint dir.  Setting one
+    (``sc.setCheckpointDir(<fault-tolerant path>)``) is how a cluster
+    opts into fault tolerance; without it, barriers are
+    ``localCheckpoint``s (executor-local blocks: fastest, but an
+    executor loss after lineage truncation kills the job).  Read at
+    every call, never cached.  Always False on Spark Connect, which has
+    no SparkContext to ask."""
+    sc = _spark_context_or_none(spark)
+    return sc is not None and sc.getCheckpointDir() is not None
 
 
-# checkpoint dirs AUTO-CREATED by the reliable=True local-master
-# fallback below (resolved URIs, as getCheckpointDir reports them).
-# setCheckpointDir is session-global and the checkpoint executes lazily,
-# so the fallback dir cannot be unset after use — durability-aware
-# AUTO-selection elsewhere (connected_components; _resolve_reliable's
-# None branch) must not mistake this driver-local temp dir for an
-# operator-configured fault-tolerant path.
-_AUTO_CKPT_DIRS: set = set()
-
-
-def configured_checkpoint_dir(sc):
-    """The checkpoint dir IF a cluster operator configured one — None
-    when unset, and None for the driver-local temp dir the
-    ``reliable=True`` local fallback auto-creates (that dir makes
-    checkpoints WORK locally but provides no fault tolerance, which is
-    the property durability auto-selection is asking about)."""
-    d = sc.getCheckpointDir()
-    return None if d is None or d in _AUTO_CKPT_DIRS else d
-
-
-def _resolve_reliable(sc, reliable: bool | None) -> bool:
-    """Decide reliable-vs-local checkpointing for :func:`ordered_prefix`.
-
-    ``None`` → reliable iff a checkpoint dir was operator-configured
-    (the cluster operator opted into fault tolerance once, every caller
-    gets it; the local-fallback temp dir below does NOT count).
-    Explicit ``True`` with no dir: local masters fall back to a temp
-    dir with a warning; anything else raises — a driver-local path is
-    not fault-tolerant, which is the one property the flag promises."""
-    if reliable is None:
-        return configured_checkpoint_dir(sc) is not None
-    if reliable and sc.getCheckpointDir() is None:
-        master = sc.master or ""
-        if not master.startswith("local"):
-            raise RuntimeError(
-                "ordered_prefix(reliable=True) needs "
-                "sc.setCheckpointDir(<fault-tolerant path>) on master "
-                f"{master!r}; a driver-local temp dir would not survive "
-                "executor loss")
-        import tempfile
-        import warnings
-        d = tempfile.mkdtemp(prefix="ordered_ckpt_")
-        warnings.warn(
-            "ordered_prefix(reliable=True): no checkpoint dir set; "
-            f"using local temp dir {d} (acceptable only on local[*])",
-            stacklevel=3)
-        sc.setCheckpointDir(d)
-        _AUTO_CKPT_DIRS.add(sc.getCheckpointDir())
-    return bool(reliable)
+def barrier(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Truncate ``df``'s lineage: a reliable ``checkpoint`` when
+    :func:`durable_barriers` holds, else a ``localCheckpoint``."""
+    if durable_barriers(df.sparkSession):
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
 
 
 def ordered_prefix(df: DataFrame, order_by: list[Column],
                    sums: dict[str, Column] | None = None,
                    out_rn: str | None = None,
-                   partitions: int | None = None,
-                   reliable: bool | None = None) -> DataFrame:
+                   partitions: int | None = None) -> DataFrame:
     """Add inclusive running sums (one output column per ``sums`` entry)
     and/or a 1-based global row number, all in ``order_by`` total order,
     computed with NO data-sized single-partition stage.
@@ -139,20 +87,9 @@ def ordered_prefix(df: DataFrame, order_by: list[Column],
     output).  Exclusive ("rows before") forms are the inclusive sum
     minus the row's own value — no second pass needed.
 
-    ``reliable`` picks how the range-partitioned materialization is
-    pinned.  ``True`` = RELIABLE checkpoint (written under
-    ``spark.sparkContext``'s checkpoint dir, which must be set to a
-    fault-tolerant store on a real cluster); ``False`` =
-    ``localCheckpoint`` (blocks live on executors: fastest, but losing
-    one executor mid-query kills the job unrecoverably once lineage is
-    truncated).  The default ``None`` means AUTO: use a reliable
-    checkpoint iff a checkpoint dir is already configured, else
-    localCheckpoint — so 100 TB clusters that set a checkpoint dir get
-    fault tolerance without every caller knowing this flag, and local
-    runs keep the fast path.  With an explicit ``reliable=True`` and no
-    checkpoint dir, a ``local[*]`` master falls back to a temp dir with
-    a warning; any other master raises (a driver-local path is not
-    fault-tolerant — exactly the failure the flag exists to survive).
+    The range-partitioned frame is pinned by a lazy :func:`barrier`:
+    a reliable checkpoint when the session has a checkpoint dir, else
+    ``localCheckpoint``.
     """
     sums = sums or {}
     n = partitions or _default_parallelism(df.sparkSession)
@@ -162,8 +99,8 @@ def ordered_prefix(df: DataFrame, order_by: list[Column],
     # whose __pid values must agree.  The checkpoint pins one
     # materialization both read; lineage truncation is the documented
     # trade (same device as the minhash pipeline's candidate sets).
-    rp = _pin(df.repartitionByRange(n, *order_by)
-              .withColumn("__pid", F.spark_partition_id()), reliable)
+    rp = barrier(df.repartitionByRange(n, *order_by)
+                 .withColumn("__pid", F.spark_partition_id()), eager=False)
     w_in = Window.partitionBy("__pid").orderBy(*order_by)
     w_run = w_in.rowsBetween(Window.unboundedPreceding, 0)
     cols = list(df.columns)
@@ -218,8 +155,7 @@ def ntile_expr(rn: Column, n_rows: Column, n: int) -> Column:
 def ordered_running_max(df: DataFrame, order_by: list[Column],
                         expr: Column, out_col: str,
                         exclusive: bool = True,
-                        partitions: int | None = None,
-                        reliable: bool | None = None) -> DataFrame:
+                        partitions: int | None = None) -> DataFrame:
     """Global running MAX of ``expr`` in ``order_by`` total order with NO
     data-sized single-partition stage — the max sibling of
     :func:`ordered_prefix`, same two-level range-partitioned scan:
@@ -229,13 +165,12 @@ def ordered_running_max(df: DataFrame, order_by: list[Column],
     output the max over rows STRICTLY BEFORE each row — the high-water
     mark a streaming watermark audit needs — NULL for the global first
     row(s); ``False`` includes the row itself.  ``order_by`` must be a
-    total order (include a tiebreak).  ``reliable`` / checkpoint
-    semantics are exactly :func:`ordered_prefix`'s (the range exchange
-    samples its bounds, so the frame is pinned before its two
-    consumers)."""
+    total order (include a tiebreak).  Pinned exactly like
+    :func:`ordered_prefix` (the range exchange samples its bounds, so the
+    frame is pinned before its two consumers)."""
     n = partitions or _default_parallelism(df.sparkSession)
-    rp = _pin(df.repartitionByRange(n, *order_by)
-              .withColumn("__pid", F.spark_partition_id()), reliable)
+    rp = barrier(df.repartitionByRange(n, *order_by)
+                 .withColumn("__pid", F.spark_partition_id()), eager=False)
     end = -1 if exclusive else 0
     w_in = (Window.partitionBy("__pid").orderBy(*order_by)
             .rowsBetween(Window.unboundedPreceding, end))

@@ -129,8 +129,7 @@ def parallelize(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n) if df.rdd.getNumPartitions() < n else df
 
 
-def with_row_id(df: DataFrame, order_by: list[str] | None = None,
-                reliable: bool | None = None) -> DataFrame:
+def with_row_id(df: DataFrame, order_by: list[str] | None = None) -> DataFrame:
     """Materialize an explicit ``__row_id`` long column.
 
     The reference's operators depend on stable pandas row labels
@@ -144,13 +143,11 @@ def with_row_id(df: DataFrame, order_by: list[str] | None = None,
       with NO single-partition sort: the only data-sized exchange is the
       ``repartitionByRange``, so the reproducible path survives 100 TB.
       Side effect: ``ordered_prefix`` pins its range exchange with a lazy
-      checkpoint (lineage truncation; executor-pinned blocks under the
-      default ``localCheckpoint``).  ``reliable`` is forwarded: ``None``
-      (default) auto-selects a reliable checkpoint iff
-      ``sc.getCheckpointDir()`` is configured, ``True``/``False`` force
-      it — see ``ordered_prefix``.  On Spark Connect both checkpoint
-      flavors run as server-side commands (no driver SparkContext is
-      touched); ``reliable=True`` requires the SERVER's checkpoint dir.
+      checkpoint (lineage truncation): a reliable ``checkpoint`` iff the
+      session has a checkpoint dir, else ``localCheckpoint``
+      (executor-pinned blocks) — the one rule of
+      ``operators.ordered.barrier``.  On Spark Connect, which has no
+      driver SparkContext, it is always ``localCheckpoint``.
     - ``order_by`` None → ``monotonically_increasing_id()``: no shuffle, no
       sort; stable for a given materialized snapshot (same file layout ⇒
       same ids), which is exactly the reference's "one cached upload"
@@ -163,7 +160,7 @@ def with_row_id(df: DataFrame, order_by: list[str] | None = None,
         from dataqtor_spark.operators.ordered import ordered_prefix
 
         out = ordered_prefix(df, [F.col(c) for c in order_by],
-                             out_rn=ROW_ID, reliable=reliable)
+                             out_rn=ROW_ID)
         return out.withColumn(ROW_ID, F.col(ROW_ID) - F.lit(1))
     return df.withColumn(ROW_ID, F.monotonically_increasing_id())
 

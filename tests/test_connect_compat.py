@@ -32,11 +32,13 @@ class _FakeConnectSession:
 
 def test_helpers_dispatch_without_spark_context():
     from dataqtor_spark.operators.ordered import (
-        _default_parallelism, _spark_context_or_none)
+        _default_parallelism, _spark_context_or_none, durable_barriers)
 
     fake = _FakeConnectSession()
     assert _spark_context_or_none(fake) is None
     assert _default_parallelism(fake) == 17
+    # no context to ask for a checkpoint dir: barriers stay local
+    assert durable_barriers(fake) is False
 
 
 def test_helpers_use_context_when_present(spark):
@@ -72,29 +74,6 @@ def test_ordered_prefix_never_reads_context_when_absent(spark, monkeypatch):
     for r in sorted(df.collect(), key=lambda r: r["id"]):
         assert mx[r["id"]] == run
         run = r["v"] if run is None else max(run, r["v"])
-
-
-def test_pin_checkpoint_dispatch_when_connect(spark, monkeypatch, tmp_path):
-    """_pin's Connect branch (no SparkContext): reliable=True issues the
-    server-executed df.checkpoint command; anything else falls back to
-    localCheckpoint — the r8 fallback (ordered.py), pinned here so a
-    regression cannot silently re-read the context."""
-    from dataqtor_spark.operators import ordered as O
-
-    df = spark.range(10)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
-    try:
-        monkeypatch.setattr(O, "_spark_context_or_none", lambda s: None)
-        # reliable=True → checkpoint command (needs the configured dir)
-        assert O._pin(df, True).count() == 10
-        # None/False → the no-checkpoint localCheckpoint fallback
-        assert O._pin(df, None).count() == 10
-        assert O._pin(df, False).count() == 10
-    finally:
-        # a leaked checkpoint dir flips durability-aware operators
-        # (connected_components) into their reliable-checkpoint mode for
-        # every later test in the session
-        spark.sparkContext.setCheckpointDir(None)
 
 
 def test_connect_round_trip():

@@ -1,4 +1,7 @@
+import glob
 import math
+import os
+import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -485,18 +488,49 @@ def test_pii_scrub(spark):
     assert "jo.doe" not in got and "555" not in got
 
 
-def test_connected_components_chain_and_cliques(spark):
+def _cc_pairs(spark):
     # chain 1-2-3-4-5 (diameter 4), clique {10,11,12}, isolated pair {20,21}
-    pairs = spark.createDataFrame(
+    return spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5),
          (10, 11), (11, 12), (10, 12),
          (20, 21)],
         "id_a long, id_b long")
+
+
+def test_connected_components_chain_and_cliques(spark):
     comp = {r["id"]: r["component"]
-            for r in D.connected_components(pairs).collect()}
+            for r in D.connected_components(_cc_pairs(spark)).collect()}
     assert {comp[i] for i in (1, 2, 3, 4, 5)} == {1}
     assert {comp[i] for i in (10, 11, 12)} == {10}
     assert {comp[i] for i in (20, 21)} == {20}
+
+
+def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
+    """With a checkpoint dir set, every CC barrier is a RELIABLE checkpoint
+    (durable at cluster scale): same components, checkpoint files land
+    under the dir, and the call leaves the dir setting as it found it."""
+    sc = spark.sparkContext
+    ckpt = tmp_path / "cc_ckpt"
+    want = {r["id"]: r["component"]
+            for r in D.connected_components(_cc_pairs(spark)).collect()}
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        set_to = sc.getCheckpointDir()
+        got = {r["id"]: r["component"]
+               for r in D.connected_components(_cc_pairs(spark)).collect()}
+        assert sc.getCheckpointDir() == set_to
+    finally:
+        # clear, never "restore" a prior dir string: setCheckpointDir
+        # nests a fresh UUID subdir under whatever it is given
+        sc.setCheckpointDir(None)
+    assert got == want
+    landed = [p for p in ckpt.rglob("*") if p.is_file()]
+    assert landed, "reliable checkpoint wrote nothing under the dir"
+
+
+def _cc_temp_dirs():
+    return set(glob.glob(os.path.join(tempfile.gettempdir(),
+                                      "dataqtor_cc_*")))
 
 
 def test_shard_assignment_uniform_and_stable(spark, tables):
@@ -872,10 +906,34 @@ def test_connected_components_deep_chain(spark):
     # pointer jumping must converge in O(log n) spill rounds
     e = spark.range(4999).select(F.col("id").alias("id_a"),
                                  (F.col("id") + 1).alias("id_b"))
+    before = _cc_temp_dirs()
     comp = DD.connected_components(e)
     rows = comp.agg(F.countDistinct("component").alias("c"),
                     F.count(F.lit(1)).alias("n")).collect()[0]
     assert rows.c == 1 and rows.n == 5000
+    # 13 rounds, two of them parquet barriers: the temp dir is gone
+    assert _cc_temp_dirs() - before == set()
+
+
+def test_connected_components_temp_dir_gone_on_every_exit(spark):
+    """A 50-node path converges on round 6, a parquet round: the result is
+    the previous round's memory barrier, so the temp dir can go.  A
+    300-node path needs 9 rounds, so max_iter=6 raises after one parquet
+    round: the dir goes on that exit too."""
+    from pyspark.sql import functions as F
+
+    def path(n):
+        return spark.range(n - 1).select(F.col("id").alias("id_a"),
+                                         (F.col("id") + 1).alias("id_b"))
+
+    before = _cc_temp_dirs()
+    comp = D.connected_components(path(50))
+    assert _cc_temp_dirs() - before == set()
+    assert sorted((r["id"], r["component"]) for r in comp.collect()) \
+        == [(i, 0) for i in range(50)]
+    with pytest.raises(RuntimeError, match="not stable after 6 rounds"):
+        D.connected_components(path(300), max_iter=6)
+    assert _cc_temp_dirs() - before == set()
 
 
 def test_semantic_dedup_keeps_min_id_of_similar_group(spark):

@@ -273,3 +273,44 @@ def test_detect_snapshot_and_report_job_budget(spark):
     assert 0 < len(detect) <= len(lazy), (detect, lazy)
     wb.detect(_bench_rules())
     assert _jobs(sc, "budget-report", lambda: wb.report().collect()) == []
+
+
+# --- job counts of the barrier paths (connected_components runs in the
+# corpus_dedup benchmark; ordered_prefix backs with_row_id) ---------------
+
+
+def test_connected_components_job_budget(spark):
+    """Job counts as measured before barriers moved to one durability
+    rule.  The small graph converges in 3 rounds, the 5,000-node path in
+    13 (two of them parquet barriers).  AQE submits the small graph's
+    round-1 broadcast stages as one job or two, so it reads 23 or 24."""
+    from pyspark.sql import functions as F
+
+    from dataqtor_spark.operators import dedup as D
+
+    sc = spark.sparkContext
+    small = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12),
+         (20, 21)], "id_a long, id_b long")
+    chain = spark.range(4999).select(F.col("id").alias("id_a"),
+                                     (F.col("id") + 1).alias("id_b"))
+    n_small = len(_jobs(sc, "budget-cc-small",
+                        lambda: D.connected_components(small).collect()))
+    assert n_small in (23, 24), n_small
+    n_chain = len(_jobs(sc, "budget-cc-chain",
+                        lambda: D.connected_components(chain).collect()))
+    assert n_chain == 87, n_chain
+
+
+def test_ordered_prefix_job_budget(spark):
+    from pyspark.sql import functions as F
+
+    from dataqtor_spark.operators.ordered import ordered_prefix
+
+    df = spark.range(0, 500).select(
+        F.col("id"), ((F.col("id") * 37) % 101).cast("double").alias("v"))
+    jobs = _jobs(spark.sparkContext, "budget-ordered-prefix",
+                 lambda: ordered_prefix(
+                     df, [F.col("v"), F.col("id")], sums={"c": F.col("v")},
+                     out_rn="rn", partitions=7).collect())
+    assert len(jobs) == 7, jobs

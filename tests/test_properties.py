@@ -440,63 +440,62 @@ def test_ordered_running_max_matches_window_form(spark, vals):
         assert inc[i] == c, (i, inc[i], c)
 
 
-def test_ordered_prefix_reliable_mode_agrees(spark):
+def test_ordered_prefix_reliable_mode_agrees(spark, tmp_path):
+    """With a checkpoint dir set, the pin is a reliable checkpoint: same
+    rows as the localCheckpoint pin, files under the dir, and the dir
+    setting left as the caller set it."""
     from dataqtor_spark.operators.ordered import ordered_prefix
 
+    sc = spark.sparkContext
     df = spark.range(0, 500).select(
         F.col("id"), ((F.col("id") * 37) % 101).cast("double").alias("v"))
     order = [F.col("v"), F.col("id")]
-    base = {r["id"]: (r["rn"], r["c"]) for r in ordered_prefix(
-        df, order, sums={"c": F.col("v")}, out_rn="rn",
-        partitions=7).collect()}
-    rel = {r["id"]: (r["rn"], r["c"]) for r in ordered_prefix(
-        df, order, sums={"c": F.col("v")}, out_rn="rn",
-        partitions=7, reliable=True).collect()}
+
+    def run():
+        return {r["id"]: (r["rn"], r["c"]) for r in ordered_prefix(
+            df, order, sums={"c": F.col("v")}, out_rn="rn",
+            partitions=7).collect()}
+
+    base = run()
+    assert sc.getCheckpointDir() is None
+    ckpt = tmp_path / "op_ckpt"
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        set_to = sc.getCheckpointDir()
+        rel = run()
+        assert sc.getCheckpointDir() == set_to
+    finally:
+        # clear, never "restore" a prior dir string: setCheckpointDir
+        # nests a fresh UUID subdir under whatever it is given
+        sc.setCheckpointDir(None)
     assert base == rel
+    assert [p for p in ckpt.rglob("*") if p.is_file()], \
+        "reliable checkpoint wrote nothing under the dir"
 
 
-def test_ordered_prefix_reliable_auto_resolution(spark):
-    """reliable=None follows the configured checkpoint dir; an explicit
-    True without one warns on local masters (and still computes)."""
-    import warnings
-
-    from dataqtor_spark.operators.ordered import (_resolve_reliable,
-                                                  ordered_prefix)
-
-    sc = spark.sparkContext
+def test_ordered_prefix_reliable_auto_resolution():
+    """The durability predicate is the checkpoint dir, read at each
+    call."""
+    from dataqtor_spark.operators.ordered import durable_barriers
 
     class _FakeSC:
-        def __init__(self, ckpt, master):
-            self._ckpt, self.master = ckpt, master
+        def __init__(self, ckpt):
+            self.ckpt = ckpt
 
         def getCheckpointDir(self):
-            return self._ckpt
+            return self.ckpt
 
-        def setCheckpointDir(self, d):
-            self._ckpt = d
+    class _FakeSession:
+        def __init__(self, sc):
+            self.sparkContext = sc
 
-    # auto: no dir -> local checkpoint; dir set -> reliable
-    assert _resolve_reliable(_FakeSC(None, "local[4]"), None) is False
-    assert _resolve_reliable(_FakeSC("/ckpt", "spark://h:7077"), None) is True
-    # explicit True, no dir: cluster master refuses, local warns + falls back
-    import pytest as _pytest
-    with _pytest.raises(RuntimeError, match="setCheckpointDir"):
-        _resolve_reliable(_FakeSC(None, "spark://h:7077"), True)
-    fake = _FakeSC(None, "local[4]")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert _resolve_reliable(fake, True) is True
-    assert any("checkpoint" in str(x.message) for x in w)
-    assert fake.getCheckpointDir() is not None
-    # end-to-end reliable-checkpoint equivalence is covered by
-    # test_ordered_prefix_reliable_mode_agrees above (auto+dir-set takes
-    # the identical rp.checkpoint(eager=False) branch); not re-run here
-    # to avoid pinning a checkpoint dir on the shared session fixture.
-    assert sc is spark.sparkContext
-    df = spark.range(0, 50).select(F.col("id"), (F.col("id") % 7).alias("v"))
-    got = ordered_prefix(df, [F.col("v"), F.col("id")], out_rn="rn",
-                         reliable=None, partitions=3).count()
-    assert got == 50
+    sc = _FakeSC(None)
+    session = _FakeSession(sc)
+    assert durable_barriers(session) is False
+    sc.ckpt = "/ckpt"
+    assert durable_barriers(session) is True
+    sc.ckpt = None
+    assert durable_barriers(session) is False
 
 
 def test_with_row_id_ordered_matches_window_row_number(spark):

@@ -2,13 +2,9 @@
 
 These pin HOW the r16 rewrites compute, never WHAT (the oracle gate
 proves output parity): the fused start+bigram LM leg must equal the
-retired union formulation bit-for-bit, and connected_components'
-durability-aware barriers (reliable checkpoint when a checkpoint dir is
-configured; parquet edges when work_dir is given) must produce identical
-components while actually landing on storage.
+retired union formulation bit-for-bit, and the bpe trainer's driver and
+ledger paths must equal the retired full re-aggregation.
 """
-import os
-
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -84,100 +80,6 @@ def test_ngram_lm_fused_start_equals_union_formulation(spark):
     got = {r["doc_id"]: (r["n_tokens"], r["avg_logprob"])
            for r in new.collect()}
     assert got == want
-
-
-def _cc_pairs(spark):
-    return spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5),
-         (10, 11), (11, 12), (10, 12),
-         (20, 21)],
-        "id_a long, id_b long")
-
-
-_CC_WANT = {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
-            10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-
-
-def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
-    """With sc.setCheckpointDir configured, every CC barrier must be a
-    RELIABLE checkpoint (durable at cluster scale) — same components,
-    and checkpoint files actually land under the configured dir."""
-    from dataqtor_spark.operators import dedup as DD
-
-    sc = spark.sparkContext
-    ckpt = tmp_path / "cc_ckpt"
-    sc.setCheckpointDir(str(ckpt))
-    try:
-        got = {r["id"]: r["component"]
-               for r in DD.connected_components(_cc_pairs(spark)).collect()}
-    finally:
-        # clear, never "restore" a prior dir string: setCheckpointDir
-        # nests a fresh UUID subdir under whatever it is given, so
-        # re-setting a prior getCheckpointDir() value creates a NEW dir
-        # that auto-dir tracking (ordered._AUTO_CKPT_DIRS) has never
-        # seen — later durability-aware tests would silently go durable
-        sc.setCheckpointDir(None)
-    assert got == _CC_WANT
-    landed = [p for p in ckpt.rglob("*") if p.is_file()]
-    assert landed, "reliable checkpoint wrote nothing under the dir"
-
-
-def test_connected_components_work_dir_lands_edges_parquet(spark, tmp_path):
-    """With work_dir given (and no checkpoint dir), the edges frame —
-    consumed by every round — must land on parquet there, so an executor
-    loss cannot invalidate remaining rounds (ADVICE r15)."""
-    from dataqtor_spark.operators import dedup as DD
-
-    d = str(tmp_path / "cc_work")
-    got = {r["id"]: r["component"]
-           for r in DD.connected_components(_cc_pairs(spark),
-                                            work_dir=d).collect()}
-    assert got == _CC_WANT
-    assert os.path.isdir(os.path.join(d, "edges")), \
-        "edges parquet missing from work_dir"
-
-
-def test_cc_auto_durability_ignores_ordered_fallback_dir(spark, tmp_path):
-    """ordered_prefix(reliable=True) on a local master auto-creates a
-    session-global checkpoint dir it cannot unset (the checkpoint runs
-    lazily).  connected_components' durability AUTO-selection must not
-    mistake that driver-local temp dir for an operator-configured
-    fault-tolerant path — with work_dir given, edges must still land on
-    parquet there (the r16 full-suite red: CC silently flipped into
-    file-checkpoint-per-round mode after any reliable=True fallback)."""
-    from dataqtor_spark.operators import dedup as DD
-    from dataqtor_spark.operators.ordered import (
-        configured_checkpoint_dir, ordered_prefix)
-
-    sc = spark.sparkContext
-    if configured_checkpoint_dir(sc) is not None:
-        # an operator-configured dir would legitimately take the durable
-        # path; clear it so the scenario under test (fallback dir ONLY)
-        # is what actually runs
-        sc.setCheckpointDir(None)
-    if sc.getCheckpointDir() is None:
-        import warnings
-
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            ordered_prefix(spark.range(50),
-                           [F.col("id")], out_rn="rn",
-                           reliable=True).collect()
-    assert sc.getCheckpointDir() is not None
-    try:
-        assert configured_checkpoint_dir(sc) is None
-        d = str(tmp_path / "cc_work_after_fallback")
-        got = {r["id"]: r["component"]
-               for r in DD.connected_components(_cc_pairs(spark),
-                                                work_dir=d).collect()}
-        assert got == _CC_WANT
-        assert os.path.isdir(os.path.join(d, "edges")), \
-            "edges parquet missing: auto-durability misread the " \
-            "ordered_prefix fallback dir as operator-configured"
-    finally:
-        # clear (see the reliable-checkpoint test above for why tests
-        # never "restore" a prior dir string)
-        sc.setCheckpointDir(None)
 
 
 # --- bpe_train pair-count ledger (r16: incremental deltas) -------------------
