@@ -166,17 +166,28 @@ def _words(col: Column | str) -> Column:
 
 
 def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-grams as an array<string> (lowercased)."""
-    words = _words(col)
-    k = F.size(words) - (n - 1)
-    return F.when(k <= 0, F.array(F.concat_ws(" ", words))).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), k),
-                lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+    """Distinct word n-grams as an array<string> (lowercased); a text of
+    fewer than ``n`` words is ONE shingle (its whole token string), NULL
+    text gives NULL.
+
+    The doc is tokenized once per row: the word array is bound as the
+    lambda variable ``ws`` of a one-element ``transform`` and the shingle
+    lambda slices ``ws``.  Catalyst does not hoist common subexpressions
+    out of lambda bodies, so a word array captured by the shingle lambda
+    would be re-split once per shingle — O(words²) per doc, ~2× the
+    whole signature cost on 60-word docs."""
+    def over(ws: Column) -> Column:
+        k = F.size(ws) - (n - 1)
+        return F.when(k <= 0, F.array(F.concat_ws(" ", ws))).otherwise(
+            F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(1), k),
+                    lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
+                )
             )
         )
-    )
+
+    return F.transform(F.array(_words(col)), over)[0]
 
 
 def _exploded_shingles(df: DataFrame, id_col: str, text_col: str, n: int,
@@ -257,7 +268,8 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     only shuffle in the whole MinHash pipeline is the band groupBy.  (The
     previous form exploded ~n_shingles rows/doc and shuffled (id, 64
     longs) through a 64-agg groupBy; same statistics, one fewer exchange,
-    measured ~2× faster at sf0.1.)
+    measured ~2× faster at sf0.1.)  Each doc is tokenized once, in
+    :func:`word_shingles`.
     """
     from dataqtor_spark.session import parallelize
 
@@ -845,12 +857,12 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         return pairs if not materialize else pairs.localCheckpoint()
     if not materialize:
         # LAZY form for callers that immediately rematerialize the pairs
-        # themselves (connected_components writes its edge list to
-        # parquet): the eager localCheckpoint below would be a second
-        # materialization of the same rows.  The posts subplan feeds two
-        # consumers (sizes, pair expansion) but shares ONE shuffle —
-        # Catalyst's ReuseExchange computes it once per action, so no
-        # persist is needed either.
+        # themselves (connected_components caches its (src, dst)
+        # projection, once for its size probe and its edges): the eager
+        # localCheckpoint below would be a second materialization of the
+        # same rows.  The posts subplan feeds two consumers (sizes, pair
+        # expansion) but shares ONE shuffle — Catalyst's ReuseExchange
+        # computes it once per action, so no persist is needed either.
         return _ngram_pairs_plan(ex, max_doc_freq, deferred_auto,
                                  df.select(id_col), auto_guard_min_docs,
                                  threshold, metric)
@@ -1054,6 +1066,47 @@ def embedding_near_dup_pairs(df: DataFrame, id_col: str, vec_col: str,
 # is a reliable checkpoint instead.
 _CC_STORAGE_EVERY = 6
 
+# pair count up to which connected_components runs union-find ON THE
+# DRIVER over the collected pairs — the bounded-collect contract of
+# textstats._BPE_DRIVER_VOCAB_MAX and the ann/kcenter trainers (driver
+# state is pair-sized, never corpus-sized).  Measured motivation: the
+# distributed loop runs ~7 Spark jobs per round (AQE submits each query
+# stage of a round's joins as its own job), so a 499-pair near-dup graph
+# cost 22 jobs and ~1.9 s of which ~0.4 s was executor CPU — the cost
+# was coordination, not data.  Sized by timing both paths on 2^12..2^20
+# pairs (4-core local[4]): on a near-dup shape (5-node clusters, 3
+# rounds) the driver path wins up to 2^19 (3.9 vs 4.7 s at 2^18) and the
+# two meet at 2^20; on a random graph (~7 rounds) it wins 3.6 vs 27 s
+# at 2^18.  The bound sits below that crossover to cap the driver's
+# Python peak at ~130 MB (collected rows + union-find + createDataFrame).
+# 0 turns the driver path off (no collect).
+_CC_DRIVER_EDGES_MAX = 1 << 18
+
+
+def _union_find(pairs) -> list[tuple]:
+    """(id, component) for every non-NULL endpoint of ``pairs``;
+    component = min id of the node's component.  Unions always hang the
+    larger root under the smaller, so every root is its set's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return [(x, find(x)) for x in parent]
+
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b", max_iter: int = 50) -> DataFrame:
@@ -1061,12 +1114,23 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     id reachable (the dedup-cluster builder: pairs from any near-dup
     detector in, survivor groups out).
 
-    Each round combines min-label propagation (every node takes the min of
-    its own and its neighbours' labels — one join + one groupBy) with a
-    pointer-jumping step (label ← label(label), a self-join), so label
-    distance doubles per round and convergence is O(log diameter) rounds
-    rather than O(diameter).  Round 0 skips the label join entirely
-    (labels are the identity, so the neighbour min is ``min(dst)``).
+    NULL rule: a NULL endpoint is not a node and links nothing; the
+    pair's non-NULL endpoint is still a node.  The id type is the
+    widened type of ``id_a`` and ``id_b``.
+
+    Graphs of at most ``_CC_DRIVER_EDGES_MAX`` pairs are resolved on the
+    driver (the bounded-collect contract): one ``limit(K+1).collect()``
+    of the pairs, union-find with min-id roots, and a local relation
+    back.  No Spark job per round, so no barrier either.  Larger graphs
+    run the distributed loop below; only it is bounded by ``max_iter``.
+
+    Each distributed round combines min-label propagation (every node
+    takes the min of its own and its neighbours' labels — one join + one
+    groupBy) with a pointer-jumping step (label ← label(label), a
+    self-join), so label distance doubles per round and convergence is
+    O(log diameter) rounds rather than O(diameter).  Round 0 skips the
+    label join entirely (labels are the identity, so the neighbour min is
+    ``min(dst)``).
 
     Barriers follow the one durability rule of ``ordered.barrier``: when
     the session has a checkpoint dir, EVERY barrier — edges and each
@@ -1084,28 +1148,50 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     one scalar aggregate per round (riding each barrier's job as an
     Observation metric) instead of a join + count.
 
-    Raises ``RuntimeError`` if labels have not stabilized after
-    ``max_iter`` rounds (silent wrong clusters are worse than a loud
-    failure for survivor selection downstream).
+    Raises ``RuntimeError`` if the distributed loop's labels have not
+    stabilized after ``max_iter`` rounds (silent wrong clusters are worse
+    than a loud failure for survivor selection downstream).
     """
     import shutil
     import tempfile
 
     from pyspark.sql import Observation
+    from pyspark.sql.types import StructField, StructType
 
     from dataqtor_spark.operators.ordered import barrier, durable_barriers
 
     spark = pairs.sparkSession
+    node = (pairs.select(F.col(id_a).alias("id"))  # the widened id type
+            .unionByName(pairs.select(F.col(id_b).alias("id")))
+            .schema["id"])
+    ab = pairs.select(F.col(id_a).cast(node.dataType).alias("src"),
+                      F.col(id_b).cast(node.dataType).alias("dst"))
+    try:
+        if _CC_DRIVER_EDGES_MAX > 0:
+            # The caller's pairs plan is often lazy (ngram_jaccard_pairs
+            # with materialize=False, a neighbour join): cached, it runs
+            # once for the size probe and the loop's edges together.
+            ab = ab.persist()
+            rows = ab.limit(_CC_DRIVER_EDGES_MAX + 1).collect()
+            if len(rows) <= _CC_DRIVER_EDGES_MAX:
+                return spark.createDataFrame(_union_find(rows), StructType(
+                    [StructField(c, node.dataType, node.nullable)
+                     for c in ("id", "component")]))
+        # Memory barrier per round (eager localCheckpoint: one job, no
+        # file commit/listing) instead of a parquet round-trip: round time
+        # on a probe-scale graph dropped ~1.0 s -> ~0.35 s (see
+        # _CC_STORAGE_EVERY for the periodic storage barrier that bounds
+        # chain depth).  A NULL endpoint's partner keeps a self-loop, so
+        # it stays a node.
+        e = barrier(ab.unionByName(ab.select(F.col("dst").alias("src"),
+                                             F.col("src").alias("dst")))
+                    .filter(F.col("src").isNotNull())
+                    .select("src", F.coalesce("dst", "src").alias("dst"))
+                    .distinct())
+    finally:
+        ab.unpersist()
+
     durable = durable_barriers(spark)
-    # Memory barrier per round (eager localCheckpoint: one job, no file
-    # commit/listing) instead of a parquet round-trip: round time on a
-    # probe-scale graph dropped ~1.0 s -> ~0.35 s (see _CC_STORAGE_EVERY
-    # for the periodic storage barrier that bounds chain depth).
-    e = barrier(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"),
-                                  F.col(id_a).alias("dst")))
-        .distinct())
     d = None
     prev_sum = None
     labels = None

@@ -505,10 +505,25 @@ def test_connected_components_chain_and_cliques(spark):
     assert {comp[i] for i in (20, 21)} == {20}
 
 
-def test_connected_components_reliable_checkpoint_path(spark, tmp_path):
+def test_connected_components_null_endpoints(spark, monkeypatch):
+    """A NULL endpoint is not a node and links nothing; its non-NULL
+    partner is still a node — on the driver and the distributed path."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 5), (7, 7), (3, 1), (None, None)],
+        "id_a long, id_b long")
+    want = [(1, 1), (2, 1), (3, 1), (5, 5), (7, 7)]
+    assert sorted(D.connected_components(pairs).collect()) == want
+    monkeypatch.setattr(D, "_CC_DRIVER_EDGES_MAX", 0)
+    assert sorted(D.connected_components(pairs).collect()) == want
+
+
+def test_connected_components_reliable_checkpoint_path(spark, tmp_path,
+                                                       monkeypatch):
     """With a checkpoint dir set, every CC barrier is a RELIABLE checkpoint
     (durable at cluster scale): same components, checkpoint files land
-    under the dir, and the call leaves the dir setting as it found it."""
+    under the dir, and the call leaves the dir setting as it found it.
+    (The distributed loop: the driver path writes no barrier.)"""
+    monkeypatch.setattr(D, "_CC_DRIVER_EDGES_MAX", 0)
     sc = spark.sparkContext
     ckpt = tmp_path / "cc_ckpt"
     want = {r["id"]: r["component"]
@@ -898,12 +913,14 @@ def test_edit_distance_pairs_insertions(spark):
     assert got == {(1, 2), (1, 3)}
 
 
-def test_connected_components_deep_chain(spark):
+def test_connected_components_deep_chain(spark, monkeypatch):
     from pyspark.sql import functions as F
     from dataqtor_spark.operators import dedup as DD
 
     # a 5000-node path: diameter far beyond any per-round propagation;
-    # pointer jumping must converge in O(log n) spill rounds
+    # pointer jumping must converge in O(log n) spill rounds of the
+    # distributed loop
+    monkeypatch.setattr(DD, "_CC_DRIVER_EDGES_MAX", 0)
     e = spark.range(4999).select(F.col("id").alias("id_a"),
                                  (F.col("id") + 1).alias("id_b"))
     before = _cc_temp_dirs()
@@ -915,12 +932,15 @@ def test_connected_components_deep_chain(spark):
     assert _cc_temp_dirs() - before == set()
 
 
-def test_connected_components_temp_dir_gone_on_every_exit(spark):
+def test_connected_components_temp_dir_gone_on_every_exit(spark,
+                                                         monkeypatch):
     """A 50-node path converges on round 6, a parquet round: the result is
     the previous round's memory barrier, so the temp dir can go.  A
     300-node path needs 9 rounds, so max_iter=6 raises after one parquet
-    round: the dir goes on that exit too."""
+    round: the dir goes on that exit too.  (The distributed loop.)"""
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(D, "_CC_DRIVER_EDGES_MAX", 0)
 
     def path(n):
         return spark.range(n - 1).select(F.col("id").alias("id_a"),

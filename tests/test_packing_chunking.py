@@ -208,10 +208,11 @@ def test_length_bucket_conservation_property(spark, sizes):
         assert 0 <= r["waste_ppm"] <= 1_000_000
 
 
-def test_connected_components_empty_graph(spark):
+def test_connected_components_empty_graph(spark, monkeypatch):
     # the lazy round-0 labels path must handle zero edges (sum over an
     # empty frame is NULL == initial prev_sum -> immediate converged exit)
     from dataqtor_spark.operators import dedup as DD
+    monkeypatch.setattr(DD, "_CC_DRIVER_EDGES_MAX", 0)
     e = spark.createDataFrame([], "id_a long, id_b long")
     out = DD.connected_components(e)
     assert out.count() == 0

@@ -279,11 +279,14 @@ def test_detect_snapshot_and_report_job_budget(spark):
 # corpus_dedup benchmark; ordered_prefix backs with_row_id) ---------------
 
 
-def test_connected_components_job_budget(spark):
-    """Job counts as measured before barriers moved to one durability
-    rule.  The small graph converges in 3 rounds, the 5,000-node path in
-    13 (two of them parquet barriers).  AQE submits the small graph's
-    round-1 broadcast stages as one job or two, so it reads 23 or 24."""
+def test_connected_components_job_budget(spark, monkeypatch):
+    """A small graph resolves on the driver.  In one partition that is 2
+    jobs: one collects its pairs, one runs the caller's collect of the
+    local result.  In 8 partitions the size probe's incremental take
+    scans 1 partition, then 4, then the last 3, so it is 4.  The
+    5,000-node path, routed to the distributed loop, converges in 13
+    rounds (two of them parquet barriers) at the job count measured
+    before barriers moved to one durability rule."""
     from pyspark.sql import functions as F
 
     from dataqtor_spark.operators import dedup as D
@@ -292,14 +295,48 @@ def test_connected_components_job_budget(spark):
     small = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12),
          (20, 21)], "id_a long, id_b long")
+    one = small.coalesce(1)
+    eight = small.repartition(8).localCheckpoint()
     chain = spark.range(4999).select(F.col("id").alias("id_a"),
                                      (F.col("id") + 1).alias("id_b"))
-    n_small = len(_jobs(sc, "budget-cc-small",
-                        lambda: D.connected_components(small).collect()))
-    assert n_small in (23, 24), n_small
+    n_one = len(_jobs(sc, "budget-cc-small",
+                      lambda: D.connected_components(one).collect()))
+    assert n_one == 2, n_one
+    n_eight = len(_jobs(sc, "budget-cc-small-8",
+                        lambda: D.connected_components(eight).collect()))
+    assert n_eight == 4, n_eight
+    monkeypatch.setattr(D, "_CC_DRIVER_EDGES_MAX", 0)
     n_chain = len(_jobs(sc, "budget-cc-chain",
                         lambda: D.connected_components(chain).collect()))
     assert n_chain == 87, n_chain
+
+
+def test_connected_components_reads_pairs_once_above_bound(spark,
+                                                           monkeypatch):
+    """Above the driver bound the caller's lazy pairs plan runs once: the
+    size probe and the loop's edges read one cached projection.  A
+    counting UDF in the pairs plan sees each pair once."""
+    from pyspark.sql import functions as F
+
+    from dataqtor_spark.operators import dedup as D
+
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tick(x):
+        seen.add(1)
+        return x
+
+    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12),
+             (20, 21)]
+    pairs = (spark.createDataFrame(edges, "id_a long, id_b long")
+             .repartition(4)
+             .select(F.udf(tick, "long")("id_a").alias("id_a"), "id_b"))
+    monkeypatch.setattr(D, "_CC_DRIVER_EDGES_MAX", 3)
+    comp = dict(D.connected_components(pairs).collect())
+    assert comp == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10,
+                    20: 20, 21: 20}
+    assert seen.value == len(edges), seen.value
 
 
 def test_ordered_prefix_job_budget(spark):
@@ -314,3 +351,86 @@ def test_ordered_prefix_job_budget(spark):
                      df, [F.col("v"), F.col("id")], sums={"c": F.col("v")},
                      out_rn="rn", partitions=7).collect())
     assert len(jobs) == 7, jobs
+
+
+# --- tokenize once: no tokenizer of an outer column inside a lambda body
+# (Catalyst does not hoist common subexpressions out of lambda bodies, so
+# a tokenizer captured by a per-shingle lambda runs once per shingle) ---
+
+_TOKENIZERS = ("StringSplit", "Lower", "StringTrim")
+
+
+def _json_trees(obj):
+    """Every serialized tree in a plan's ``toJSON()``: a list of nodes in
+    pre-order, each carrying its ``num-children``."""
+    if isinstance(obj, list):
+        if obj and all(isinstance(x, dict) and "num-children" in x
+                       for x in obj):
+            yield obj
+        for x in obj:
+            yield from _json_trees(x)
+    elif isinstance(obj, dict):
+        for v in obj.values():
+            yield from _json_trees(v)
+
+
+def _subtree(nodes, i):
+    j, todo = i + 1, nodes[i]["num-children"]
+    while todo:
+        todo += nodes[j]["num-children"] - 1
+        j += 1
+    return nodes[i:j]
+
+
+def _tokenizer_census(df):
+    """(tokenizer nodes in the optimized plan, those inside a lambda body
+    over an outer attribute rather than a lambda variable)."""
+    import json
+
+    plan = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+    seen, captured = 0, []
+    for nodes in _json_trees(plan):
+        for i, n in enumerate(nodes):
+            name = n["class"].rsplit(".", 1)[-1]
+            if name in _TOKENIZERS or name.startswith("RegExp"):
+                seen += 1
+            if name != "LambdaFunction":
+                continue
+            body = _subtree(nodes, i)
+            for k, m in enumerate(body):
+                inner = m["class"].rsplit(".", 1)[-1]
+                if ((inner in _TOKENIZERS or inner.startswith("RegExp"))
+                        and any(x["class"].endswith(".AttributeReference")
+                                for x in _subtree(body, k))):
+                    captured.append(inner)
+    return seen, captured
+
+
+def test_word_shingles_consumers_tokenize_once(spark, monkeypatch):
+    """The six ``word_shingles`` consumers tokenize each doc once: no
+    split/lower/trim/regexp of a column sits inside a lambda body.
+    Persist and checkpoint barriers are no-ops here, so every consumer's
+    whole plan is visible."""
+    from dataqtor_spark.operators import dedup as D
+    from dataqtor_spark.operators import textstats as TX
+    from dataqtor_spark.streaming import profiler as SP
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "The quick brown fox leaps"),
+         (3, None), (4, "")], "doc_id long, text string")
+    for name in ("persist", "cache", "localCheckpoint"):
+        monkeypatch.setattr(type(docs), name, lambda self, *a, **k: self)
+    bench = docs.filter("doc_id = 1")
+    consumers = {
+        "minhash_signatures":
+            D.minhash_signatures(docs, "doc_id", "text"),
+        "minhash_signatures_portable":
+            D.minhash_signatures_portable(docs, "doc_id", "text"),
+        "minhash_containment_pairs_portable":
+            D.minhash_containment_pairs_portable(docs, "doc_id", "text"),
+        "decontaminate": TX.decontaminate(docs, bench),
+        "stream_decontaminate": SP.stream_decontaminate(docs, bench),
+    }
+    census = {name: _tokenizer_census(df) for name, df in consumers.items()}
+    assert all(seen for seen, _ in census.values()), census
+    assert {n: c for n, (_, c) in census.items() if c} == {}

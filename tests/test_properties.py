@@ -666,3 +666,32 @@ def test_uncapped_pairs_match_capped_with_huge_cap(spark, texts):
         df, "doc_id", "text", n=3, threshold=0.01,
         max_doc_freq=10_000).collect()))
     assert fast == legacy
+
+
+# --- word_shingles: tokenize-once form == the retired per-shingle form -----
+
+def _word_shingles_retired(col, n):
+    """``dedup.word_shingles`` before tokenize-once: the word array is
+    captured inside the shingle lambda, so it is re-split per shingle."""
+    from dataqtor_spark.operators import dedup as DD
+
+    words = DD._words(col)
+    k = F.size(words) - (n - 1)
+    return F.when(k <= 0, F.array(F.concat_ws(" ", words))).otherwise(
+        F.array_distinct(F.transform(
+            F.sequence(F.lit(1), k),
+            lambda i: F.concat_ws(" ", F.slice(words, i, n)))))
+
+
+@settings(**_SETTINGS)
+@given(st.lists(st.one_of(st.none(), st.text(alphabet=" \t\naAbİı",
+                                              max_size=16)),
+                min_size=1, max_size=30),
+       st.integers(min_value=1, max_value=4))
+def test_word_shingles_matches_retired_form(spark, texts, n):
+    from dataqtor_spark.operators import dedup as DD
+
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    rows = df.select(DD.word_shingles("t", n).alias("new"),
+                     _word_shingles_retired("t", n).alias("old")).collect()
+    assert [r.new for r in rows] == [r.old for r in rows]
