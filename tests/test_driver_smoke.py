@@ -21,16 +21,17 @@ def test_entry_runs_and_returns_rows(spark):
 
 def test_registry_surfaces_consistent(spark):
     import __spark_entry__ as e
+    from dataqtor_spark.queries import GRADED_PREFIX
 
     qs, oracles = e.queries(), e.oracle_sql()
     assert len(qs) >= 281
     missing = [n for n in oracles if n not in qs]
     assert not missing, f"oracles for unregistered queries: {missing}"
-    # exactly one by-design rows-only entry (MLlib-seeded IVF)
-    rows_only = [n for n in qs if n not in oracles]
-    assert rows_only == ["ann03b_ivf_mllib_topk"]
-    # the driver grades the first 50 — they must all be hash-checkable
+    # the driver grades the first 50: exactly GRADED_PREFIX (a short, long
+    # or duplicated list, or a later rebind, breaks the equality), and they
+    # must all be hash-checkable
     first50 = list(qs)[:50]
+    assert first50 == GRADED_PREFIX
     assert all(n in oracles for n in first50)
 
 
