@@ -471,8 +471,8 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 # ---------------------------------------------------------------------------
 
 def copurchase_pairs(df: DataFrame, basket_col: str, item_col: str,
-                     top_k: int = 20, basket_cap: int | None = None,
-                     unbounded: bool = False) -> DataFrame:
+                     top_k: int = 20,
+                     basket_cap: int | str | None = "auto") -> DataFrame:
     """Top co-occurring item pairs across baskets (market-basket support
     counts): (item_a, item_b, n_baskets) with item_a < item_b.
 
@@ -483,13 +483,13 @@ def copurchase_pairs(df: DataFrame, basket_col: str, item_col: str,
 
     Per-basket blowup is |basket|²/2, so a pathological hot basket (one
     "order" with 10^5 items from an ingest bug or a shared cart id) is a
-    stage-sinker at 100 TB exactly like an uncapped LSH bucket.  By
-    default the same deferred in-plan skew guard as the dedup posting
-    lists applies: baskets wider than ``max(1024, isqrt(n_rows))`` are
-    skipped (and the engagement logged) once the input exceeds the
-    ``AUTO_GUARD_MIN_DOCS`` corpus threshold — a dropped hot basket is
-    itself a data-quality finding, not signal.  Pass an explicit
-    ``basket_cap`` to pin the bound, or ``unbounded=True`` to opt out.
+    stage-sinker at 100 TB exactly like an uncapped LSH bucket.
+    ``basket_cap`` follows the one rule of the dedup posting lists
+    (``dedup._cap_groups``): the default ``"auto"`` skips baskets wider
+    than ``max(1024, isqrt(n_rows))`` once the input reaches the
+    ``AUTO_GUARD_MIN_DOCS`` corpus threshold, resolved in-plan — a
+    dropped hot basket is itself a data-quality finding, not signal; an
+    int pins the bound; ``None`` opts out.
     """
     from dataqtor_spark.operators import dedup as DD
 
@@ -499,16 +499,12 @@ def copurchase_pairs(df: DataFrame, basket_col: str, item_col: str,
     grouped = (src.groupBy("__b")
                .agg(F.sort_array(F.collect_set("__i")).alias("items"))
                .filter(F.size("items") > 1))
-    if basket_cap is not None:
-        grouped = grouped.filter(F.size("items") <= basket_cap)
-    elif not unbounded:
-        # guard scale = the RAW input row count (nulls included): the
-        # unfiltered unprojected count reads zero columns (parquet
-        # footer row counts), where counting `src` would re-scan the
-        # item column just to apply isNotNull; over-counting only ever
-        # RAISES the isqrt cap / engages the guard earlier — both safe.
-        grouped = DD._filter_by_deferred_auto_cap(
-            grouped, df, None, size_col="items")
+    # guard scale = the RAW input row count (nulls included): the
+    # unfiltered unprojected count reads zero columns (parquet footer row
+    # counts), where counting `src` would re-scan the item column just to
+    # apply isNotNull; over-counting only ever RAISES the isqrt cap /
+    # engages the guard earlier — both safe.
+    grouped = DD._cap_groups(grouped, basket_cap, df, size_col="items")
     # dedup basket CONTENTS before the quadratic expansion: identical
     # item sets (single-item carts, the handful of common 2-3 item
     # combos) recur heavily in real basket data, and each distinct

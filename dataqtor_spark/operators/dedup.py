@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import functools
 import logging
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -54,72 +55,60 @@ AUTO_GUARD_MIN_DOCS = 100_000
 AUTO_GUARD_CAP_FLOOR = 1024
 
 
-def resolve_auto_cap(n_docs: int, min_docs: int | None = None,
-                     floor: int | None = None) -> int | None:
-    """Default cap for bucket/posting-list sizes: ``None`` (unguarded)
-    below the ``min_docs`` corpus-size threshold, ``max(floor, √n_docs)``
-    above it.  √n keeps worst-case pair expansion per hot key at O(n)
-    while leaving legitimate mid-size duplicate clusters intact."""
-    import math
-
-    if min_docs is None:
-        min_docs = AUTO_GUARD_MIN_DOCS
-    if floor is None:
-        floor = AUTO_GUARD_CAP_FLOOR
-    if n_docs < min_docs:
+def resolve_auto_cap(n_docs: int) -> int | None:
+    """The ``"auto"`` cap as a Python reference of the in-plan formula
+    ``_cap_groups`` evaluates: ``None`` (unguarded) below
+    ``AUTO_GUARD_MIN_DOCS`` documents, ``max(AUTO_GUARD_CAP_FLOOR,
+    isqrt(n_docs))`` at or above it.  √n keeps worst-case pair expansion
+    per hot key at O(n) while leaving legitimate mid-size duplicate
+    clusters intact."""
+    if n_docs < AUTO_GUARD_MIN_DOCS:
         return None
-    return max(floor, math.isqrt(n_docs))
+    return max(AUTO_GUARD_CAP_FLOOR, math.isqrt(n_docs))
 
 
 _log = logging.getLogger(__name__)
 
 
-def _engage_auto_cap(n_docs: int, min_docs: int | None, what: str) -> int | None:
-    """Resolve the auto guard and make its engagement VISIBLE: above the
-    threshold the candidate pass silently skips pairs internal to
-    over-full buckets/posting-lists (the documented recall trade), so the
-    cap value and the opt-out are logged once per call instead of being
-    discoverable only from missing pairs."""
-    cap = resolve_auto_cap(n_docs, min_docs)
-    if cap is not None:
-        _log.warning(
-            "auto skew guard engaged: %s capped at %d for n_docs=%d; "
-            "pairs internal to larger groups are skipped (run exact "
-            "hash-dedup first, or pass unbounded=True / an explicit cap "
-            "to opt out)", what, cap, n_docs)
-    return cap
+def _cap_groups(grouped: DataFrame, cap: int | str | None,
+                count_src: DataFrame, size_col: str = "ids") -> DataFrame:
+    """The one skew guard of every posting-list operator: drop groups
+    whose ``size_col`` list is longer than ``cap`` before the quadratic
+    pair expansion (pairs internal to a dropped group are skipped — the
+    documented recall trade).
 
-
-def _filter_by_deferred_auto_cap(grouped: DataFrame, count_src: DataFrame,
-                                 min_docs: int | None,
-                                 size_col: str = "ids") -> DataFrame:
-    """Apply ``resolve_auto_cap`` semantics WITHOUT an eager count: the
+    ``cap`` is an int (a pinned bound), ``None`` (no guard; ``grouped``
+    comes back untouched) or ``"auto"``: ``resolve_auto_cap`` over the
+    row count of ``count_src``, applied WITHOUT an eager count.  The
     corpus total is a 1-row aggregate broadcast-cross-joined into the
-    bucket/posting-list frame, and the cap becomes a filter the optimizer
-    evaluates inside the same job — no plan-construction-time Spark
-    action, no signature-pipeline recompute for callers who didn't cache.
+    group frame, and the cap becomes a filter the optimizer evaluates
+    inside the same job — no plan-construction-time Spark action, no
+    upstream recompute for callers who didn't cache.  The in-plan
+    integer sqrt mirrors ``math.isqrt`` exactly: the float
+    ``floor(sqrt(n))`` candidate is corrected by one in either
+    direction, which covers the ulp error band around perfect squares.
 
-    The in-plan integer sqrt mirrors ``math.isqrt`` exactly: the float
-    ``floor(sqrt(n))`` candidate is corrected by one in either direction,
-    which covers the ulp error band around perfect squares.
-
-    Whether the cap engages is only known at run time (it depends on the
-    corpus count inside the plan), so a notice is logged unconditionally
-    at INFO when the deferred filter is constructed — at scale the guard
-    must never drop candidate pairs silently."""
-    if min_docs is None:
-        min_docs = AUTO_GUARD_MIN_DOCS
+    Whether the auto cap engages is only known at run time (it depends
+    on the count inside the plan), so a notice is logged unconditionally
+    at INFO when the filter is built — at scale the guard must never
+    drop candidate pairs silently."""
+    if cap is None:
+        return grouped
+    if cap != "auto":
+        return grouped.filter(F.size(size_col) <= cap)
     _log.info(
         "deferred auto skew guard attached: groups larger than "
         "max(%d, isqrt(n_docs)) are skipped when n_docs >= %d (decided "
-        "in-plan from the corpus count; pass unbounded=True or an "
-        "explicit cap to opt out)", AUTO_GUARD_CAP_FLOOR, min_docs)
+        "in-plan from the corpus count; pass the operator's cap as None "
+        "to opt out, or an int to pin it)", AUTO_GUARD_CAP_FLOOR,
+        AUTO_GUARD_MIN_DOCS)
     total = count_src.agg(F.count(F.lit(1)).alias("__n_docs"))
     r = F.floor(F.sqrt(F.col("__n_docs"))).cast("long")
     isq = (F.when((r + 1) * (r + 1) <= F.col("__n_docs"), r + 1)
            .when(r * r > F.col("__n_docs"), r - 1).otherwise(r))
-    cap = F.greatest(F.lit(AUTO_GUARD_CAP_FLOOR).cast("long"), isq)
-    keep = (F.col("__n_docs") < F.lit(min_docs)) | (F.size(size_col) <= cap)
+    auto_cap = F.greatest(F.lit(AUTO_GUARD_CAP_FLOOR).cast("long"), isq)
+    keep = ((F.col("__n_docs") < F.lit(AUTO_GUARD_MIN_DOCS))
+            | (F.size(size_col) <= auto_cap))
     return (grouped.crossJoin(F.broadcast(total))
             .filter(keep).drop("__n_docs"))
 
@@ -309,10 +298,8 @@ def _h_array(num_hashes: int) -> Column:
 
 def minhash_candidates(sig: DataFrame, id_col: str,
                        num_hashes: int = 64, bands: int = 16,
-                       max_bucket_size: int | str | None = "auto",
-                       auto_guard_min_docs: int | None = None,
-                       unbounded: bool = False,
-                       n_docs: int | None = None) -> DataFrame:
+                       max_bucket_size: int | str | None = "auto"
+                       ) -> DataFrame:
     """LSH banding: docs colliding in ≥1 band become candidate pairs
     (id_a < id_b).  rows-per-doc = bands; join is a groupBy on band hash.
 
@@ -326,39 +313,20 @@ def minhash_candidates(sig: DataFrame, id_col: str,
     intentionally skipped (see the skew probe in SCALE_PROBE.md for the
     measured blow-up without the cap).
 
-    The DEFAULT is ``"auto"``: above the ``AUTO_GUARD_MIN_DOCS``
-    corpus-size threshold the cap engages at ``max(1024, √n_docs)``
-    (``resolve_auto_cap``); below it the pass runs unguarded, so small
-    corpora keep exact banding semantics and differential oracles.  With
-    no ``n_docs`` hint the cap is resolved IN-PLAN (the corpus total is a
-    broadcast 1-row aggregate feeding the bucket filter), so "auto" costs
-    no extra Spark action and never recomputes the signature pipeline;
-    pass ``n_docs`` (from a prior count or pipeline metadata) to pin the
-    cap at plan time instead, in which case the engaged value is logged
-    (WARNING).  Pass ``unbounded=True`` (or an explicit int) to opt out
-    at any size."""
-    deferred_auto = False
-    if unbounded:
-        max_bucket_size = None
-    elif max_bucket_size == "auto":
-        if n_docs is not None:
-            max_bucket_size = _engage_auto_cap(
-                n_docs, auto_guard_min_docs, "minhash band bucket size")
-        else:
-            deferred_auto = True
-            max_bucket_size = None
+    The cap follows the one rule of ``_cap_groups``: the default
+    ``"auto"`` engages ``resolve_auto_cap`` (``max(1024, √n_docs)`` at
+    or above ``AUTO_GUARD_MIN_DOCS`` signatures, resolved in-plan, so it
+    costs no extra Spark action); below the threshold the pass runs
+    unguarded, so small corpora keep exact banding semantics and
+    differential oracles.  An int pins the cap; ``None`` opts out at any
+    size."""
     exploded = sig.select(F.col(id_col).alias("__id"),
                           F.explode(_band_hash_array(num_hashes, bands))
                           .alias("__bh"))
     grouped = (exploded.groupBy("__bh")
                .agg(F.sort_array(F.collect_list("__id")).alias("ids"))
                .filter(F.size("ids") > 1))
-    if deferred_auto:
-        grouped = _filter_by_deferred_auto_cap(
-            grouped, sig, auto_guard_min_docs)
-    elif max_bucket_size is not None:
-        grouped = grouped.filter(F.size("ids") <= max_bucket_size)
-    return (grouped
+    return (_cap_groups(grouped, max_bucket_size, sig)
             .select(F.explode(F.expr(
                 "flatten(transform(ids, (x, i) -> "
                 "transform(slice(ids, i + 2, size(ids)), y -> struct(x as a, y as b))))"
@@ -379,25 +347,21 @@ def _band_hash_array(num_hashes: int, bands: int) -> Column:
         for b in range(bands)])
 
 
-def minhash_similarity(sig: DataFrame, candidates: DataFrame, id_col: str,
-                       broadcast_candidates: bool = True) -> DataFrame:
+def minhash_similarity(sig: DataFrame, candidates: DataFrame,
+                       id_col: str) -> DataFrame:
     """Estimated Jaccard = fraction of agreeing signature positions.
 
-    With ``broadcast_candidates`` (default) the LSH-pruned pair set is
-    broadcast and the signature table is probed map-side twice — no shuffle
-    of the (much larger) signatures.  Candidate volume tracks true-duplicate
-    density, not corpus size, so this holds even at large scale; pass False
-    for pathologically dup-heavy corpora where the pair set itself is huge
-    (AQE then picks the strategy from runtime sizes).
+    The LSH-pruned pair set is broadcast and the signature table is
+    probed map-side twice — no shuffle of the (much larger) signatures.
+    Candidate volume tracks true-duplicate density, not corpus size, and
+    the bucket cap of ``minhash_candidates`` bounds it on dup-heavy
+    corpora.
     """
     a = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     b = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    if broadcast_candidates:
-        # hint the first probe; the (candidates ⋈ a) output is no bigger, so
-        # AQE promotes the second join to broadcast from its runtime size
-        joined = F.broadcast(candidates).join(a, "id_a").join(b, "id_b")
-    else:
-        joined = candidates.join(a, "id_a").join(b, "id_b")
+    # hint the first probe; the (candidates ⋈ a) output is no bigger, so
+    # AQE promotes the second join to broadcast from its runtime size
+    joined = F.broadcast(candidates).join(a, "id_a").join(b, "id_b")
     return (joined
             .withColumn(
                 "est_jaccard",
@@ -738,10 +702,7 @@ def _simhash_xxhash_pack_expr() -> Column:
 
 
 def simhash_near_pairs(sig: DataFrame, id_col: str, max_hamming: int = 3,
-                       max_bucket: int | str | None = "auto",
-                       auto_guard_min_docs: int | None = None,
-                       unbounded: bool = False,
-                       n_docs: int | None = None) -> DataFrame:
+                       max_bucket: int | str | None = "auto") -> DataFrame:
     """Pairs within Hamming distance ``max_hamming`` via 16-bit-chunk
     banding (pigeonhole: ≤3 differing bits → ≥1 of 4 chunks identical),
     then exact verify with xor + bit_count.
@@ -752,25 +713,13 @@ def simhash_near_pairs(sig: DataFrame, id_col: str, max_hamming: int = 3,
     |bucket|²/2.  ``max_bucket`` bounds that term — at 100 TB a hot
     chunk value (millions of near-black frames or solid-color thumbnails
     sharing a 16-bit slice) otherwise makes the stage quadratic in the
-    bucket.  The default ``"auto"`` mirrors ``ngram_jaccard_pairs`` /
-    ``minhash_candidates``: above ``AUTO_GUARD_MIN_DOCS`` signatures the
-    cap engages at ``max(1024, isqrt(n))``, resolved IN-PLAN from a
-    broadcast 1-row count (or at plan time when ``n_docs`` is given, in
-    which case engagement is logged); below the threshold the pass is
-    exact.  ``unbounded=True`` opts out entirely; an explicit int pins
-    the cap.  Skipped buckets are near-identical clusters the linear
-    exact-hash pass collapses first (documented recall trade)."""
-    deferred_auto = False
-    if unbounded:
-        max_bucket = None
-    elif max_bucket == "auto":
-        if n_docs is not None:
-            max_bucket = _engage_auto_cap(
-                n_docs, auto_guard_min_docs,
-                "simhash (band, chunk) bucket size")
-        else:
-            deferred_auto = True
-            max_bucket = None
+    bucket.  The cap follows the one rule of ``_cap_groups``: the default
+    ``"auto"`` engages ``max(1024, isqrt(n))`` at or above
+    ``AUTO_GUARD_MIN_DOCS`` signatures, resolved in-plan from a broadcast
+    1-row count, and below the threshold the pass is exact; an int pins
+    the cap; ``None`` opts out.  Skipped buckets are near-identical
+    clusters the linear exact-hash pass collapses first (documented
+    recall trade)."""
     chunks = []
     for b in range(4):
         chunks.append(F.struct(
@@ -789,11 +738,7 @@ def simhash_near_pairs(sig: DataFrame, id_col: str, max_hamming: int = 3,
                    F.struct(F.col("__id").alias("i"),
                             F.col("simhash").alias("s")))).alias("ids"))
                .filter(F.size("ids") > 1))
-    if deferred_auto:
-        buckets = _filter_by_deferred_auto_cap(
-            buckets, sig.select(id_col), auto_guard_min_docs)
-    elif max_bucket is not None:
-        buckets = buckets.filter(F.size("ids") <= max_bucket)
+    buckets = _cap_groups(buckets, max_bucket, sig.select(id_col))
     pairs = (buckets.select(F.explode(F.expr(
                  "flatten(transform(ids, (x, i) -> "
                  "transform(slice(ids, i + 2, size(ids)), "
@@ -814,9 +759,6 @@ def simhash_near_pairs(sig: DataFrame, id_col: str, max_hamming: int = 3,
 def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3, threshold: float = 0.5,
                         max_doc_freq: int | str | None = "auto",
-                        auto_guard_min_docs: int | None = None,
-                        unbounded: bool = False,
-                        n_docs: int | None = None,
                         materialize: bool = True,
                         metric: str = "jaccard") -> DataFrame:
     """Exact Jaccard over distinct word n-grams via inverted-index
@@ -825,28 +767,16 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     blowup on ultra-common shingles; pairs sharing ONLY dropped shingles
     can be missed (documented recall trade).
 
-    The DEFAULT is ``"auto"``: above the ``AUTO_GUARD_MIN_DOCS``
-    corpus-size threshold the cut engages at ``max(1024, √n_docs)``
-    (``resolve_auto_cap``; the worst-case per-shingle pair expansion
-    stays O(n)); below it the pass is exact.  With no ``n_docs`` hint the
-    cut is resolved IN-PLAN (broadcast 1-row corpus total feeding the
-    posting-list filter) — no extra eager count job; pass ``n_docs`` to
-    pin it at plan time, in which case the engaged value is logged
-    (WARNING).  Pass ``unbounded=True`` for exact semantics at any size
-    (the d02 string_grouper-parity registration does), or an explicit
-    int to pin the cut."""
-    deferred_auto = False
-    if unbounded:
-        max_doc_freq = None
-    elif max_doc_freq == "auto":
-        if n_docs is not None:
-            max_doc_freq = _engage_auto_cap(
-                n_docs, auto_guard_min_docs,
-                "n-gram posting-list doc frequency")
-        else:
-            deferred_auto = True
-            max_doc_freq = None
-    uncapped = max_doc_freq is None and not deferred_auto
+    The cut follows the one rule of ``_cap_groups``: the default
+    ``"auto"`` engages ``max(1024, √n_docs)`` at or above the
+    ``AUTO_GUARD_MIN_DOCS`` corpus-size threshold (``resolve_auto_cap``;
+    the worst-case per-shingle pair expansion stays O(n)), resolved
+    in-plan from a broadcast 1-row corpus total — no extra eager count
+    job; below the threshold the pass is exact.  An int pins the cut;
+    ``None`` gives exact semantics at any size (the d02
+    string_grouper-parity registration passes it) on the uncapped fast
+    path."""
+    uncapped = max_doc_freq is None
     ex = _exploded_shingles(df, id_col, text_col, n, with_count=uncapped)
     if uncapped:
         # no doc-freq cut → per-doc sizes ride the exploded rows
@@ -855,17 +785,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
         pairs = _ngram_pairs_from_posts_nc(_ngram_posts_nc(ex), threshold,
                                            metric)
         return pairs if not materialize else pairs.localCheckpoint()
-    if not materialize:
-        # LAZY form for callers that immediately rematerialize the pairs
-        # themselves (connected_components caches its (src, dst)
-        # projection, once for its size probe and its edges): the eager
-        # localCheckpoint below would be a second materialization of the
-        # same rows.  The posts subplan feeds two consumers (sizes, pair
-        # expansion) but shares ONE shuffle — Catalyst's ReuseExchange
-        # computes it once per action, so no persist is needed either.
-        return _ngram_pairs_plan(ex, max_doc_freq, deferred_auto,
-                                 df.select(id_col), auto_guard_min_docs,
-                                 threshold, metric)
     # Posting lists FIRST: the one heavy exchange (exploded (id, hash) rows
     # hash-partitioned on the shingle) happens exactly once, and everything
     # else derives from the much smaller posting-list table:
@@ -877,8 +796,19 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     #   * pairs are expanded in-row from each list — per-shingle blowup is
     #     |df|²/2, bounded by the cut — and only pair rows shuffle again.
     # The self-join form exchanged the full inverted index twice and joined.
-    posts = _ngram_posts(ex, max_doc_freq, deferred_auto,
-                         df.select(id_col), auto_guard_min_docs)
+    posts = _cap_groups(
+        ex.groupBy("__sh")
+        .agg(F.sort_array(F.collect_list("__id")).alias("ids")),
+        max_doc_freq, df.select(id_col))
+    if not materialize:
+        # LAZY form for callers that immediately rematerialize the pairs
+        # themselves (connected_components caches its (src, dst)
+        # projection, once for its size probe and its edges): the eager
+        # localCheckpoint below would be a second materialization of the
+        # same rows.  The posts subplan feeds two consumers (sizes, pair
+        # expansion) but shares ONE shuffle — Catalyst's ReuseExchange
+        # computes it once per action, so no persist is needed either.
+        return _ngram_pairs_from_posts(posts, threshold, metric)
     # two consumers (sizes, pair expansion): persist the compact lists
     posts = posts.persist()
     try:
@@ -891,9 +821,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
                             n: int = 3, threshold: float = 0.8,
                             max_doc_freq: int | str | None = "auto",
-                            auto_guard_min_docs: int | None = None,
-                            unbounded: bool = False,
-                            n_docs: int | None = None,
                             materialize: bool = True) -> DataFrame:
     """Near-superset duplication pairs: Broder CONTAINMENT over distinct
     word n-grams — |A∩B| / min(|A|, |B|) — on the exact inverted-index
@@ -909,23 +836,8 @@ def ngram_containment_pairs(df: DataFrame, id_col: str, text_col: str,
     return ngram_jaccard_pairs(df, id_col, text_col, n=n,
                                threshold=threshold,
                                max_doc_freq=max_doc_freq,
-                               auto_guard_min_docs=auto_guard_min_docs,
-                               unbounded=unbounded, n_docs=n_docs,
                                materialize=materialize,
                                metric="containment")
-
-
-def _ngram_posts(ex: DataFrame, max_doc_freq, deferred_auto: bool,
-                 count_src: DataFrame,
-                 auto_guard_min_docs: int | None) -> DataFrame:
-    posts = (ex.groupBy("__sh")
-             .agg(F.sort_array(F.collect_list("__id")).alias("ids")))
-    if deferred_auto:
-        posts = _filter_by_deferred_auto_cap(
-            posts, count_src, auto_guard_min_docs)
-    elif max_doc_freq is not None:
-        posts = posts.filter(F.size("ids") <= max_doc_freq)
-    return posts
 
 
 def _ngram_posts_nc(ex: DataFrame) -> DataFrame:
@@ -999,18 +911,6 @@ def _ngram_pairs_from_posts(posts: DataFrame, threshold: float,
             .withColumn(metric, _pair_metric(metric))
             .filter(F.col(metric) >= threshold)
             .select("id_a", "id_b", metric))
-
-
-def _ngram_pairs_plan(ex: DataFrame, max_doc_freq, deferred_auto: bool,
-                      count_src: DataFrame, auto_guard_min_docs: int | None,
-                      threshold: float,
-                      metric: str = "jaccard") -> DataFrame:
-    """Fully lazy n-gram Jaccard pair plan (no persist, no checkpoint) —
-    the posts shuffle is shared across its two consumers by Catalyst's
-    exchange reuse when one action consumes the whole plan."""
-    posts = _ngram_posts(ex, max_doc_freq, deferred_auto, count_src,
-                         auto_guard_min_docs)
-    return _ngram_pairs_from_posts(posts, threshold, metric)
 
 
 # ---------------------------------------------------------------------------

@@ -1006,19 +1006,20 @@ def image_phash(df: DataFrame, payload_col: str = "payload",
 
 def phash_near_pairs(sig: DataFrame, id_col: str = "media_id",
                      max_hamming: int = 3,
-                     sig_col: str = "phash", **guard) -> DataFrame:
+                     sig_col: str = "phash",
+                     max_bucket: int | str | None = "auto") -> DataFrame:
     """Image near-duplicate pairs within ``max_hamming`` bits: 16-bit
     chunk banding + exact xor/bit_count verify — delegates to
     ``dedup.simhash_near_pairs`` (pigeonhole recall is exact for
     ``max_hamming`` ≤ 3 with 4 bands; the posting lists on (band, chunk)
-    shuffle signatures only, never payloads).  ``**guard`` forwards the
-    hot-bucket cap knobs (``max_bucket``/``unbounded``/``n_docs``/
-    ``auto_guard_min_docs``)."""
+    shuffle signatures only, never payloads).  ``max_bucket`` is that
+    operator's hot-bucket cap: ``"auto"``, an int, or ``None`` to opt
+    out."""
     from dataqtor_spark.operators.dedup import simhash_near_pairs
 
     return simhash_near_pairs(
         sig.select(F.col(id_col), F.col(sig_col).alias("simhash")),
-        id_col, max_hamming=max_hamming, **guard)
+        id_col, max_hamming=max_hamming, max_bucket=max_bucket)
 
 
 FRAMES_SCHEMA = "media_id long, frame_index int, ts_ms long, frame binary"
@@ -1296,16 +1297,17 @@ def audio_fingerprint(df: DataFrame, payload_col: str = "payload",
 
 def afp_near_pairs(sig: DataFrame, id_col: str = "media_id",
                    max_hamming: int = 3,
-                   sig_col: str = "afp", **guard) -> DataFrame:
+                   sig_col: str = "afp",
+                   max_bucket: int | str | None = "auto") -> DataFrame:
     """Audio near-duplicate pairs within ``max_hamming`` bits — the same
-    4×16-bit hamming banding as :func:`phash_near_pairs` (shared
-    ``dedup.simhash_near_pairs`` machinery; pigeonhole recall exact at
-    ≤3 bits).  ``**guard`` forwards the hot-bucket cap knobs."""
+    4×16-bit hamming banding and ``max_bucket`` cap as
+    :func:`phash_near_pairs` (shared ``dedup.simhash_near_pairs``
+    machinery; pigeonhole recall exact at ≤3 bits)."""
     from dataqtor_spark.operators.dedup import simhash_near_pairs
 
     return simhash_near_pairs(
         sig.select(F.col(id_col), F.col(sig_col).alias("simhash")),
-        id_col, max_hamming=max_hamming, **guard)
+        id_col, max_hamming=max_hamming, max_bucket=max_bucket)
 
 
 # ---------------------------------------------------------------------------
@@ -1496,10 +1498,8 @@ def phash_bands(sig_col: Column) -> Column:
 def video_near_dup_pairs(frame_sigs: DataFrame, video_col: str = "media_id",
                          sig_col: str = "phash",
                          min_matches: int = 3,
-                         max_bucket: int | str | None = "auto",
-                         auto_guard_min_docs: int | None = None,
-                         unbounded: bool = False,
-                         n_videos: int | None = None) -> DataFrame:
+                         max_bucket: int | str | None = "auto"
+                         ) -> DataFrame:
     """Video-level near-duplicate pairs from per-frame perceptual
     hashes: two videos match when ≥ ``min_matches`` of their sampled
     frames share a fingerprint — the standard frame-sampling video
@@ -1513,39 +1513,22 @@ def video_near_dup_pairs(frame_sigs: DataFrame, video_col: str = "media_id",
     exist only where frames actually collide (never video × video).
     ``max_bucket`` bounds the |list|²/2 expansion on hot fingerprints
     (near-black frames, solid-color cards shared by millions of videos
-    at 100 TB): the default ``"auto"`` engages ``max(1024,
-    isqrt(n_videos))`` above ``AUTO_GUARD_MIN_DOCS`` videos, resolved
-    in-plan (or at plan time via the ``n_videos`` hint, logged);
-    ``unbounded=True`` opts out, an explicit int pins the cap.  Videos
-    sharing ONLY capped fingerprints can be missed — those frames are
-    boilerplate the overlap count shouldn't ride anyway (documented
-    recall trade).  Returns ``(id_a, id_b, n_matched)`` with
-    ``id_a < id_b``."""
-    from dataqtor_spark.operators.dedup import (
-        _engage_auto_cap, _filter_by_deferred_auto_cap)
+    at 100 TB) by the one rule of ``dedup._cap_groups``: the default
+    ``"auto"`` engages ``max(1024, isqrt(n))`` once the n distinct
+    videos reach ``AUTO_GUARD_MIN_DOCS``, resolved in-plan; an int pins
+    the cap; ``None`` opts out.  Videos sharing ONLY capped
+    fingerprints can be missed — those frames are boilerplate the
+    overlap count shouldn't ride anyway (documented recall trade).
+    Returns ``(id_a, id_b, n_matched)`` with ``id_a < id_b``."""
+    from dataqtor_spark.operators.dedup import _cap_groups
 
-    deferred_auto = False
-    if unbounded:
-        max_bucket = None
-    elif max_bucket == "auto":
-        if n_videos is not None:
-            max_bucket = _engage_auto_cap(
-                n_videos, auto_guard_min_docs,
-                "video fingerprint posting-list size")
-        else:
-            deferred_auto = True
-            max_bucket = None
     sigs = frame_sigs.select(F.col(video_col).alias("__v"),
                              F.col(sig_col).alias("__s")).distinct()
     posts = (sigs.groupBy("__s")
              .agg(F.sort_array(F.collect_list("__v")).alias("ids"))
              .filter(F.size("ids") > 1))
-    if deferred_auto:
-        posts = _filter_by_deferred_auto_cap(
-            posts, frame_sigs.select(video_col).distinct(),
-            auto_guard_min_docs)
-    elif max_bucket is not None:
-        posts = posts.filter(F.size("ids") <= max_bucket)
+    posts = _cap_groups(posts, max_bucket,
+                        frame_sigs.select(video_col).distinct())
     return (posts.select(F.explode(F.expr(
                 "flatten(transform(ids, (x, i) -> "
                 "transform(slice(ids, i + 2, size(ids)), "

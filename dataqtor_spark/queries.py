@@ -1023,13 +1023,13 @@ WHERE round(n_common * 1.0 / (sa.n + sb.n - n_common), 6) >= 0.2"""
 
 @register("d02_ngram_jaccard_pairs", _D02_PAIRS_SQL)
 def d02_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # unbounded=True: this is the string_grouper-parity registration — the
-    # oracle replays the EXACT uncut semantics, so the auto stop-shingle
-    # guard must never engage here regardless of corpus size.  d02b is the
-    # guarded scale path of the same operator.
+    # max_doc_freq=None: this is the string_grouper-parity registration —
+    # the oracle replays the EXACT uncut semantics, so the auto
+    # stop-shingle guard must never engage here regardless of corpus size.
+    # d02b is the guarded scale path of the same operator.
     docs = _t(spark, sf_dir, "documents")
     return DD.ngram_jaccard_pairs(docs, "doc_id", "text", n=5, threshold=0.2,
-                                  unbounded=True)
+                                  max_doc_freq=None)
 
 
 # d02b — the SCALE path of the same operator: stop-shingle cut enabled.
@@ -1116,11 +1116,11 @@ def d14_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-superset duplication pairs: exact Broder containment
     (|A∩B| / min set size) over distinct 5-gram shingles — the
     asymmetric-dedup signal Jaccard misses when sizes differ
-    (dedup.ngram_containment_pairs; unbounded = oracle-exact, d02b's
-    stop-shingle cut is the identical scale guard)."""
+    (dedup.ngram_containment_pairs; max_doc_freq=None = oracle-exact,
+    d02b's stop-shingle cut is the identical scale guard)."""
     docs = _t(spark, sf_dir, "documents")
     return DD.ngram_containment_pairs(docs, "doc_id", "text", n=5,
-                                      threshold=0.5, unbounded=True)
+                                      threshold=0.5, max_doc_freq=None)
 
 
 @register(
@@ -6113,7 +6113,7 @@ def mb01_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 co-purchased part pairs (market-basket support): posting-list
     pair expansion per order, no self-join.
 
-    ``unbounded=True`` matches the oracle exactly (the d02 parity
+    ``basket_cap=None`` matches the oracle exactly (the d02 parity
     convention): the plain-SQL replay has no hot-basket cap, so a
     >=100k-row dataset with one pathological basket would otherwise
     silently diverge from it.  The OPERATOR default keeps the deferred
@@ -6123,7 +6123,7 @@ def mb01_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return B.copurchase_pairs(_t(spark, sf_dir, "lineitem"),
                               "l_orderkey", "l_partkey", top_k=20,
-                              unbounded=True)
+                              basket_cap=None)
 
 
 _TS02_SQL = """WITH daily AS (
@@ -8893,7 +8893,7 @@ def er03_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _truth():
         return DD.ngram_jaccard_pairs(docs, "doc_id", "text", n=5,
-                                      threshold=0.2, unbounded=True) \
+                                      threshold=0.2, max_doc_freq=None) \
             .select("id_a", "id_b")
 
     def _cand():

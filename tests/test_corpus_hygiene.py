@@ -912,5 +912,6 @@ def test_exploded_shingles_null_text_drops_rows(spark):
     ex = _exploded_shingles(df, "doc_id", "text", 5, with_count=True)
     assert ex.filter("__sh IS NULL").count() == 0
     pairs = DD.ngram_jaccard_pairs(df, "doc_id", "text", n=5,
-                                   threshold=0.5, unbounded=True).collect()
+                                   threshold=0.5,
+                                   max_doc_freq=None).collect()
     assert [(r.id_a, r.id_b, r.jaccard) for r in pairs] == [(100, 101, 1.0)]

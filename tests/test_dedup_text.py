@@ -135,25 +135,26 @@ def test_auto_guard_engages_above_corpus_threshold(spark, monkeypatch):
     assert hot <= below
 
     monkeypatch.setattr(D, "AUTO_GUARD_CAP_FLOOR", 8)
+    monkeypatch.setattr(D, "AUTO_GUARD_MIN_DOCS", 10)
     above = {(r["id_a"], r["id_b"])
-             for r in D.minhash_candidates(
-                 sig, "doc_id", auto_guard_min_docs=10).collect()}
+             for r in D.minhash_candidates(sig, "doc_id").collect()}
     assert not (hot & above)            # guard engaged: hot bucket skipped
     assert (100, 101) in above          # small buckets unaffected
 
     # explicit opt-out restores exact banding even above the threshold
     opt_out = {(r["id_a"], r["id_b"])
                for r in D.minhash_candidates(
-                   sig, "doc_id", auto_guard_min_docs=10,
-                   unbounded=True).collect()}
+                   sig, "doc_id", max_bucket_size=None).collect()}
     assert hot <= opt_out
 
 
-def test_resolve_auto_cap_threshold_and_floor():
+def test_resolve_auto_cap_threshold_and_floor(monkeypatch):
     assert D.resolve_auto_cap(99_999) is None
     assert D.resolve_auto_cap(100_000) == 1024     # floor dominates
     assert D.resolve_auto_cap(4_000_000) == 2000   # sqrt(n) above floor
-    assert D.resolve_auto_cap(50, min_docs=10, floor=4) == 7
+    monkeypatch.setattr(D, "AUTO_GUARD_MIN_DOCS", 10)
+    monkeypatch.setattr(D, "AUTO_GUARD_CAP_FLOOR", 4)
+    assert D.resolve_auto_cap(50) == 7
 
 
 def test_ngram_auto_guard_cuts_hot_shingle(spark, monkeypatch):
@@ -166,14 +167,126 @@ def test_ngram_auto_guard_cuts_hot_shingle(spark, monkeypatch):
     monkeypatch.setattr(D, "AUTO_GUARD_CAP_FLOOR", 4)
     uncut = D.ngram_jaccard_pairs(df, "doc_id", "text", n=5,
                                   threshold=0.1).collect()
-    cut = D.ngram_jaccard_pairs(df, "doc_id", "text", n=5, threshold=0.1,
-                                auto_guard_min_docs=10).collect()
+    monkeypatch.setattr(D, "AUTO_GUARD_MIN_DOCS", 10)
+    cut = D.ngram_jaccard_pairs(df, "doc_id", "text", n=5,
+                                threshold=0.1).collect()
     assert len(uncut) == 66             # all pairs share the hot shingle
     assert len(cut) == 0                # cut removed the only shared gram
     explicit = D.ngram_jaccard_pairs(df, "doc_id", "text", n=5,
-                                     threshold=0.1, unbounded=True,
-                                     auto_guard_min_docs=10).collect()
+                                     threshold=0.1,
+                                     max_doc_freq=None).collect()
     assert len(explicit) == 66          # opt-out wins over the threshold
+
+
+@pytest.mark.parametrize("n", [9, 10, 24, 35, 36, 37])
+def test_cap_groups_in_plan_auto_cap_equals_resolve_auto_cap(
+        spark, monkeypatch, n):
+    # differential: the in-plan "auto" threshold (broadcast count + isqrt
+    # correction) must keep exactly the list sizes resolve_auto_cap allows.
+    # min_docs 10, floor 4: n=9 is below the threshold (no cap), n=10 and
+    # n=24 are floor-dominated (isqrt 3 and 4), and 35/36/37 straddle the
+    # perfect square 6² above the floor (caps 5, 6, 6)
+    monkeypatch.setattr(D, "AUTO_GUARD_MIN_DOCS", 10)
+    monkeypatch.setattr(D, "AUTO_GUARD_CAP_FLOOR", 4)
+    grouped = spark.createDataFrame(
+        [(s, list(range(s))) for s in range(1, 10)], "k int, ids array<int>")
+    kept = {r["k"] for r in D._cap_groups(grouped, "auto",
+                                           spark.range(n)).collect()}
+    cap = D.resolve_auto_cap(n)
+    assert kept == {s for s in range(1, 10) if cap is None or s <= cap}
+    assert D._cap_groups(grouped, None, spark.range(n)) is grouped
+    assert {r["k"] for r in D._cap_groups(grouped, 3, spark.range(n))
+            .collect()} == {1, 2, 3}
+
+
+def _guard_case_minhash(spark):
+    rows = [(i, "the same boilerplate footer text repeated here " * 4)
+            for i in range(12)]
+    rows += [(100, "a quick brown fox jumps over the lazy dog today"),
+             (101, "a quick brown fox jumps over the lazy dog tonight")]
+    sig = D.minhash_signatures(
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        "doc_id", "text")
+    return "max_bucket_size", lambda **cap: D.minhash_candidates(
+        sig, "doc_id", **cap)
+
+
+def _guard_case_simhash(spark):
+    rows = [(i, 0x1111222233334444) for i in range(12)]
+    rows += [(100, 0x5555666677778888), (101, 0x5555666677778889)]
+    sig = spark.createDataFrame(rows, "doc_id long, simhash long")
+    return "max_bucket", lambda **cap: D.simhash_near_pairs(
+        sig, "doc_id", **cap)
+
+
+def _hot_shingle_docs(spark):
+    # the 12 hot docs share ONLY one 5-gram; the control pair is identical
+    common = "alpha beta gamma delta epsilon"
+    rows = [(i, f"{common} unique{i} filler{i} words{i} here{i}")
+            for i in range(12)]
+    rows += [(100, "zeta eta theta iota kappa lambda"),
+             (101, "zeta eta theta iota kappa lambda")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _guard_case_ngram_jaccard(spark):
+    df = _hot_shingle_docs(spark)
+    return "max_doc_freq", lambda **cap: D.ngram_jaccard_pairs(
+        df, "doc_id", "text", n=5, threshold=0.1, **cap)
+
+
+def _guard_case_ngram_containment(spark):
+    df = _hot_shingle_docs(spark)
+    return "max_doc_freq", lambda **cap: D.ngram_containment_pairs(
+        df, "doc_id", "text", n=5, threshold=0.1, **cap)
+
+
+def _guard_case_video(spark):
+    from dataqtor_spark.operators import multimodal as MM
+
+    rows = [(i, -1) for i in range(12)] + [(100, 42), (101, 42)]
+    frames = spark.createDataFrame(rows, "media_id long, phash long")
+    return "max_bucket", lambda **cap: MM.video_near_dup_pairs(
+        frames, "media_id", "phash", min_matches=1, **cap)
+
+
+def _guard_case_copurchase(spark):
+    from dataqtor_spark.operators import behavior as B
+
+    # baskets 1-4 hold items {0, 1, 2}; basket 99 holds the 12 hot items
+    rows = [(b, i) for b in range(1, 5) for i in (0, 1, 2)]
+    rows += [(99, i) for i in range(200, 212)]
+    df = spark.createDataFrame(rows, "basket long, item long")
+    return "basket_cap", lambda **cap: B.copurchase_pairs(
+        df, "basket", "item", top_k=500, **cap)
+
+
+@pytest.mark.parametrize("case", [
+    _guard_case_minhash, _guard_case_simhash, _guard_case_ngram_jaccard,
+    _guard_case_ngram_containment, _guard_case_video,
+    _guard_case_copurchase], ids=lambda c: c.__name__[len("_guard_case_"):])
+def test_every_guarded_operator_follows_the_cap_rule(spark, monkeypatch,
+                                                      case):
+    # one 12-member hot group (ids 0-11, or items 200-211) and one
+    # 2-member control group in a corpus of 14-24 rows.  With the
+    # threshold at 1 and the floor at 4, "auto" resolves to a cap of 4:
+    # the hot group is dropped, the control survives.  An int cap of 8
+    # also drops it; None keeps every hot pair.
+    monkeypatch.setattr(D, "AUTO_GUARD_MIN_DOCS", 1)
+    monkeypatch.setattr(D, "AUTO_GUARD_CAP_FLOOR", 4)
+    kw, run = case(spark)
+    base = 200 if kw == "basket_cap" else 0
+    hot = {(a, b) for a in range(base, base + 12)
+           for b in range(base, base + 12) if a < b}
+    control = (0, 1) if kw == "basket_cap" else (100, 101)
+
+    def pairs(**cap):
+        return {(r[0], r[1]) for r in run(**cap).collect()}
+
+    auto, pinned, unguarded = pairs(), pairs(**{kw: 8}), pairs(**{kw: None})
+    assert not (hot & auto) and control in auto
+    assert not (hot & pinned) and control in pinned
+    assert hot <= unguarded and control in unguarded
 
 
 def test_simhash_near_pairs(spark):
@@ -1386,10 +1499,10 @@ def test_containment_pairs_flags_embedded_doc(spark):
     cont = {(r.id_a, r.id_b): r.containment
             for r in DD.ngram_containment_pairs(
                 df, "doc_id", "text", n=5, threshold=0.8,
-                unbounded=True).collect()}
+                max_doc_freq=None).collect()}
     assert cont == {(1, 2): 1.0}
     jac = DD.ngram_jaccard_pairs(df, "doc_id", "text", n=5, threshold=0.8,
-                                 unbounded=True).collect()
+                                 max_doc_freq=None).collect()
     assert jac == []
     # the capped path computes the same metric over cut posting lists
     cont_cut = {(r.id_a, r.id_b): r.containment

@@ -379,7 +379,7 @@ def test_point_in_polygon_hand_geometry(spark):
 def test_copurchase_hot_basket_guard(spark, monkeypatch):
     """The deferred skew guard on per-basket item lists: a planted hot
     basket is skipped once the corpus crosses the auto-guard threshold;
-    explicit cap and unbounded=True override it."""
+    explicit cap and basket_cap=None override it."""
     from dataqtor_spark.operators import dedup as DD
 
     rows = [(b, i) for b in range(1, 5) for i in (10, 20, 30)]
@@ -405,5 +405,5 @@ def test_copurchase_hot_basket_guard(spark, monkeypatch):
 
     # opt-out restores the exact quadratic behavior
     ub = B.copurchase_pairs(df, "basket", "item", top_k=500,
-                            unbounded=True)
+                            basket_cap=None)
     assert ub.filter(F.col("item_a") >= 200).count() == 20 * 19 // 2

@@ -636,11 +636,11 @@ def test_containment_dominates_jaccard(spark, texts):
     jac = {(r.id_a, r.id_b): r.jaccard
            for r in DD.ngram_jaccard_pairs(
                df, "doc_id", "text", n=3, threshold=1e-9,
-               unbounded=True).collect()}
+               max_doc_freq=None).collect()}
     con = {(r.id_a, r.id_b): r.containment
            for r in DD.ngram_containment_pairs(
                df, "doc_id", "text", n=3, threshold=1e-9,
-               unbounded=True).collect()}
+               max_doc_freq=None).collect()}
     assert set(jac) == set(con)          # same candidate pairs
     for k, j in jac.items():
         assert k[0] < k[1]
@@ -661,7 +661,7 @@ def test_uncapped_pairs_match_capped_with_huge_cap(spark, texts):
                                "doc_id long, text string")
     fast = sorted(map(tuple, DD.ngram_jaccard_pairs(
         df, "doc_id", "text", n=3, threshold=0.01,
-        unbounded=True).collect()))
+        max_doc_freq=None).collect()))
     legacy = sorted(map(tuple, DD.ngram_jaccard_pairs(
         df, "doc_id", "text", n=3, threshold=0.01,
         max_doc_freq=10_000).collect()))

@@ -62,7 +62,7 @@ def main() -> None:
         corpus.count()
 
         t_uncut, n_uncut = timed(DD.ngram_jaccard_pairs(
-            corpus, "doc_id", "text", n=5, threshold=0.2, unbounded=True))
+            corpus, "doc_id", "text", n=5, threshold=0.2, max_doc_freq=None))
         t_cut, n_cut = timed(DD.ngram_jaccard_pairs(
             corpus, "doc_id", "text", n=5, threshold=0.2, max_doc_freq=16))
 
@@ -70,7 +70,7 @@ def main() -> None:
                                     num_hashes=64, shingle_n=5).persist()
         sig.count()
         t_band, n_band = timed(DD.minhash_candidates(sig, "doc_id", 64, 16,
-                                                    unbounded=True))
+                                                    max_bucket_size=None))
         t_cap, n_cap = timed(DD.minhash_candidates(sig, "doc_id", 64, 16,
                                                    max_bucket_size=16))
         sig.unpersist()
@@ -80,7 +80,7 @@ def main() -> None:
         sh = DD.simhash(corpus, "doc_id", "text").persist()
         sh.count()
         t_shu, n_shu = timed(DD.simhash_near_pairs(sh, "doc_id",
-                                                   unbounded=True))
+                                                   max_bucket=None))
         t_shc, n_shc = timed(DD.simhash_near_pairs(sh, "doc_id",
                                                    max_bucket=16))
         sh.unpersist()
@@ -97,7 +97,7 @@ def main() -> None:
                 F.col("id").alias("media_id"),
                 (F.col("id") * 16 + 7).alias("phash"))))
         t_vu, n_vu = timed(MM.video_near_dup_pairs(
-            hot_frames, "media_id", "phash", min_matches=1, unbounded=True))
+            hot_frames, "media_id", "phash", min_matches=1, max_bucket=None))
         t_vc, n_vc = timed(MM.video_near_dup_pairs(
             hot_frames, "media_id", "phash", min_matches=1, max_bucket=16))
         rows.append((h, t_uncut, n_uncut, t_cut, n_cut,
@@ -128,9 +128,9 @@ def main() -> None:
         f"| ngram_jaccard_pairs | max_doc_freq=16 | {nc1:,} | {tc1:.2f} | {nc2:,} | {tc2:.2f} | {nc2 / max(nc1, 1):.1f}× |",
         f"| minhash_candidates | none (uncapped) | {nb1:,} | {tb1:.2f} | {nb2:,} | {tb2:.2f} | {nb2 / max(nb1, 1):.1f}× |",
         f"| minhash_candidates | max_bucket_size=16 | {np1:,} | {tp1:.2f} | {np2:,} | {tp2:.2f} | {np2 / max(np1, 1):.1f}× |",
-        f"| simhash_near_pairs | unbounded=True | {nsu1:,} | {tsu1:.2f} | {nsu2:,} | {tsu2:.2f} | {nsu2 / max(nsu1, 1):.1f}× |",
+        f"| simhash_near_pairs | max_bucket=None | {nsu1:,} | {tsu1:.2f} | {nsu2:,} | {tsu2:.2f} | {nsu2 / max(nsu1, 1):.1f}× |",
         f"| simhash_near_pairs | max_bucket=16 | {nsc1:,} | {tsc1:.2f} | {nsc2:,} | {tsc2:.2f} | {nsc2 / max(nsc1, 1):.1f}× |",
-        f"| video_near_dup_pairs | unbounded=True | {nvu1:,} | {tvu1:.2f} | {nvu2:,} | {tvu2:.2f} | {nvu2 / max(nvu1, 1):.1f}× |",
+        f"| video_near_dup_pairs | max_bucket=None | {nvu1:,} | {tvu1:.2f} | {nvu2:,} | {tvu2:.2f} | {nvu2 / max(nvu1, 1):.1f}× |",
         f"| video_near_dup_pairs | max_bucket=16 | {nvc1:,} | {tvc1:.2f} | {nvc2:,} | {tvc2:.2f} | {nvc2 / max(nvc1, 1):.1f}× |",
         "",
         "The unguarded rows grow quadratically with the hot-cluster size —",
