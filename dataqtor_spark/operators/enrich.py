@@ -20,14 +20,22 @@ DIMS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__
                         "dims", "data")
 
 
+# The dims' declared schemas: a parquet read without one runs a schema
+# inference job on every call.  tests/test_repair_enrich.py checks them
+# against the files' footers.
+CITY_SCHEMA = "city string, latitude double, longitude double"
+NAME_GENDER_SCHEMA = "first_name string, gender string"
+
+
 def city_dim(spark: SparkSession) -> DataFrame:
     """(city, latitude, longitude) — 81 rows."""
-    return spark.read.parquet(os.path.join(DIMS_DIR, "city.parquet"))
+    return spark.read.schema(CITY_SCHEMA).parquet(os.path.join(DIMS_DIR, "city.parquet"))
 
 
 def name_gender_dim(spark: SparkSession) -> DataFrame:
     """(first_name, gender['E'|'K'|'U']) — 12,744 rows."""
-    return spark.read.parquet(os.path.join(DIMS_DIR, "name_gender.parquet"))
+    return spark.read.schema(NAME_GENDER_SCHEMA).parquet(
+        os.path.join(DIMS_DIR, "name_gender.parquet"))
 
 
 # --- J2/F12 — gender from first name (home.py:1921-1927) -------------------

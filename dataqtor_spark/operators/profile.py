@@ -350,10 +350,20 @@ def profile_columns(df: DataFrame, cols: list[str] | None = None,
                     exact_mean: tuple[int, int] | None = None) -> DataFrame:
     """One row per column: type, counts, distinct, numeric moments.
 
-    Single aggregate pass.  ``distinct`` uses HyperLogLog
-    (``approx_count_distinct``) by default — multiple exact COUNT DISTINCTs
-    in one pass force an Expand operator that multiplies the scanned rows by
-    the column count, which is exactly the wrong trade at 100 TB.
+    Single aggregate pass.  ``distinct`` is a DataSketches HLL estimate by
+    default (``hll_sketch_estimate(hll_sketch_agg(x))`` at lgK 12, the
+    sketch :func:`hll_sketches` stores): ~1.6% relative standard error,
+    against 5% for ``approx_count_distinct``'s HLL++ at its default rsd,
+    and exact while a column holds fewer than a few hundred distinct
+    values.  Its cost is one 4 KiB register array per column, filled by
+    one hash per value; HLL++ is an imperative aggregate that carries 53
+    long words per column through every partial and merge.  Int, bigint,
+    string and binary values are sketched as they are; every other type
+    as its string form, with ``-0.0`` folded into ``0.0`` so floats count
+    as ``count(DISTINCT)`` groups them.  ``exact_distinct=True`` counts
+    exactly instead: multiple exact COUNT DISTINCTs in one pass force an
+    Expand operator that multiplies the scanned rows by the column count,
+    which is exactly the wrong trade at 100 TB.
 
     ``exact_mean=(in_scale, out_scale)`` declares the numeric inputs exact
     at ``in_scale`` decimals (e.g. (2, 4) for cent-valued prices) and emits
@@ -368,7 +378,8 @@ def profile_columns(df: DataFrame, cols: list[str] | None = None,
     aggs = ["count(1) AS __total"]
     for i, c in enumerate(cols):
         q = ident(c)
-        distinct = f"count(DISTINCT {q})" if exact_distinct else f"approx_count_distinct({q})"
+        distinct = (f"count(DISTINCT {q})" if exact_distinct else
+                    f"hll_sketch_estimate(hll_sketch_agg({_sketched(q, types[c])}, {HLL_LGK}))")
         aggs += [f"{count_true(f'{q} IS NULL')} AS __nulls_{i}",
                  f"{distinct} AS __distinct_{i}"]
         if c in num:
@@ -398,6 +409,20 @@ def profile_columns(df: DataFrame, cols: list[str] | None = None,
 
 
 _MOMENTS = ["mean", "std", "min", "max", "skew", "kurt", "zeros", "neg"]
+
+HLL_LGK = 12  # DataSketches HLL registers 2^12: ~1.6% relative std error
+_SKETCH_NATIVE = (T.IntegerType, T.LongType, T.StringType, T.BinaryType)
+
+
+def _sketched(q: str, dtype: T.DataType) -> str:
+    """``q`` as a value ``hll_sketch_agg`` accepts: int, bigint, string and
+    binary as they are, anything else as its string form.  Floats fold
+    ``-0.0`` into ``0.0`` first, as ``count(DISTINCT)`` does."""
+    if isinstance(dtype, _SKETCH_NATIVE):
+        return q
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        q = f"IF({q} = 0, 0, {q})"
+    return f"CAST({q} AS STRING)"
 
 
 def histogram(df: DataFrame, col: str, bins: int = 10) -> DataFrame:
@@ -1248,7 +1273,7 @@ def mad_outliers(df: DataFrame, col: str, z: float = 3.5) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def hll_sketches(df: DataFrame, group_cols: list[str], val_col: str,
-                 lgk: int = 12) -> DataFrame:
+                 lgk: int = HLL_LGK) -> DataFrame:
     """Per-group Datasketches-HLL partial state for ``val_col``
     (``(group_cols..., sketch binary)``).
 

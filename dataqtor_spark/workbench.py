@@ -15,11 +15,19 @@ a lineage step on an immutable head (RepairSession), and before/after
 scores are snapshots of two lineage points: ``detect`` measures when it is
 called and keeps the few summary rows in Python, and ``report`` is
 assembled from those snapshots without running a Spark job.
+
+Like the reference's one cached upload, each data version is measured
+once.  Every correction and ``checkpoint`` starts a new version; on one
+version a repeated ``profile`` or ``detect``, and a ``null_profile`` of
+profiled columns, are answered from the rows already kept, with no job.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import types as T
 
 from dataqtor_spark import session as S
 from dataqtor_spark.functions.sqltext import ident, lit, pct
@@ -55,12 +63,46 @@ def _inline(spark: SparkSession, select: str, names: list[str],
                      f"AS t({', '.join(ident(n) for n in names)})")
 
 
+def _sql_value(v, dtype: T.DataType) -> str:
+    if v is None:
+        return f"CAST(NULL AS {dtype.simpleString()})"
+    if isinstance(v, float) and not math.isfinite(v):
+        return f"CAST('{v}' AS DOUBLE)"  # 'nan', 'inf', '-inf'
+    return f"{v}L" if isinstance(dtype, T.LongType) else lit(v)
+
+
+def _relation(spark: SparkSession, schema: T.StructType,
+              rows: list[Row]) -> DataFrame:
+    """Collected ``rows`` as an inline relation of exactly ``schema``:
+    names, types and nullability.  A VALUES column is nullable only where
+    some row holds a NULL, so nullable fields pass through ``IF``, which
+    the optimizer folds away."""
+    select = ", ".join(
+        f"IF(true, {ident(f.name)}, NULL) AS {ident(f.name)}" if f.nullable
+        else ident(f.name) for f in schema)
+    return _inline(spark, select, schema.names,
+                   [[_sql_value(v, f.dataType) for v, f in zip(r, schema)]
+                    for r in rows])
+
+
+def _rule_key(rules: list[R.Rule]) -> tuple:
+    """A rule list's identity: SQL-text predicates compare by text, Column
+    predicates (which have no value equality) by object."""
+    return tuple((r.name, r.column, r.predicate if isinstance(r.predicate, str)
+                  else id(r.predicate)) for r in rules)
+
+
 class Workbench:
     """One dataset + its measurement/repair lifecycle."""
 
     def __init__(self, df: DataFrame):
         self._sess = RP.RepairSession(df)
         self._snapshots: list[list[Row]] = []
+        self._version = 0  # the data version; every repair and checkpoint bumps it
+        self._kept_version = 0  # the version the rows below were measured on
+        self._profiled: dict[str, Row] = {}  # column -> profile_columns row
+        self._profile_schema: T.StructType | None = None
+        self._detected: dict[tuple, tuple[list[R.Rule], list[Row]]] = {}
 
     # --- E1: upload -------------------------------------------------------
 
@@ -74,18 +116,56 @@ class Workbench:
 
     # --- E2: profile + detect ---------------------------------------------
 
+    def _drop_stale(self) -> None:
+        """Drop what was measured on an earlier data version."""
+        if self._kept_version != self._version:
+            self._kept_version = self._version
+            self._profiled, self._detected = {}, {}
+
     def profile(self, cols: list[str] | None = None) -> DataFrame:
-        return P.profile_columns(self.df, cols)
+        """``P.profile_columns`` of the current head, measured now (one
+        aggregate job for the columns not yet profiled on this data
+        version) and kept.  Returns the rows as an inline relation of the
+        same schema: collecting it runs no Spark job."""
+        self._drop_stale()
+        cols = P._data_cols(self.df, cols)
+        missing = [c for c in cols if c not in self._profiled]
+        if missing:
+            fresh = P.profile_columns(self.df, missing)
+            self._profiled.update((r["column"], r) for r in fresh.collect())
+            self._profile_schema = fresh.schema
+        return _relation(self.df.sparkSession, self._profile_schema,
+                         [self._profiled[c] for c in cols])
 
     def null_profile(self, cols: list[str] | None = None) -> DataFrame:
-        return P.null_profile(self.df, cols)
+        """``P.null_profile``: from the kept profile rows when every column
+        was profiled on this data version (no job), else lazily."""
+        self._drop_stale()
+        cols = P._data_cols(self.df, cols)
+        if not all(c in self._profiled for c in cols):
+            return P.null_profile(self.df, cols)
+        filled = "(total_records - null_records)"
+        return _inline(
+            self.df.sparkSession,
+            f"`column`, total_records, null_records, {filled} AS filled_records, "
+            f"{pct('null_records', 'total_records')} AS null_pct, "
+            f"{pct(filled, 'total_records')} AS filled_pct",
+            ["column", "total_records", "null_records"],
+            [[lit(c), f"{self._profiled[c]['total_records']}L",
+              f"{self._profiled[c]['null_records']}L"] for c in cols])
 
     def detect(self, rules: list[R.Rule]) -> DataFrame:
-        """Measure the rules on the current head now (one aggregate job)
-        and keep the summary rows as a snapshot for ``report`` (A15).
+        """Measure the rules on the current head now (one aggregate job;
+        none when this rule list was measured on this data version) and
+        keep the summary rows as a snapshot for ``report`` (A15).
         Returns the snapshot, with its ``measurement`` number, as an inline
         relation: collecting it runs no Spark job."""
-        rows = R.evaluate_rules(self.df, rules).collect()
+        self._drop_stale()
+        key = _rule_key(rules)
+        if key not in self._detected:
+            # the rules stay referenced so a Column predicate's id is not reused
+            self._detected[key] = (rules, R.evaluate_rules(self.df, rules).collect())
+        rows = self._detected[key][1]
         self._snapshots.append(rows)
         m = len(self._snapshots) - 1
         return _inline(self.df.sparkSession,
@@ -112,6 +192,7 @@ class Workbench:
 
     def _apply(self, fn, *a, **kw) -> "Workbench":
         self._sess.apply(fn, *a, **kw)
+        self._version += 1
         return self
 
     def title_case(self, col: str): return self._apply(RP.title_case, col)
@@ -132,6 +213,7 @@ class Workbench:
 
     def checkpoint(self) -> "Workbench":
         self._sess.checkpoint()
+        self._version += 1
         return self
 
     # --- expectation-suite shortcuts (rules v2 + suggestion) ---------------

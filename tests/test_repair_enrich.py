@@ -1,4 +1,5 @@
 import datetime
+import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -100,6 +101,21 @@ def test_enrich_latlon(spark):
           for r in E.enrich_latlon(df, "city", spark, miss="passthrough").collect()}
     assert pt["Atlantis"] == "Atlantis"
     assert pt["Ankara"] == "39.91987"
+
+
+def test_dim_schemas_match_parquet_footers(spark):
+    # the dims are read with a declared schema (no inference job per
+    # read); it must stay the schema a footer read infers from the files
+    sc = spark.sparkContext
+    for read, name in [(E.city_dim, "city"), (E.name_gender_dim, "name_gender")]:
+        footer = spark.read.parquet(os.path.join(E.DIMS_DIR, f"{name}.parquet"))
+        sc.setJobGroup(f"dim-{name}", name)
+        try:
+            declared = read(spark)
+        finally:
+            sc._jsc.sc().clearJobGroup()
+        assert declared.schema == footer.schema, name
+        assert list(sc.statusTracker().getJobIdsForGroup(f"dim-{name}")) == []
 
 
 def test_enrich_age_future_pivot(spark):
