@@ -16,10 +16,10 @@ scores are snapshots of two lineage points: ``detect`` measures when it is
 called and keeps the few summary rows in Python, and ``report`` is
 assembled from those snapshots without running a Spark job.
 
-Like the reference's one cached upload, each data version is measured
-once.  Every correction and ``checkpoint`` starts a new version; on one
-version a repeated ``profile`` or ``detect``, and a ``null_profile`` of
-profiled columns, are answered from the rows already kept, with no job.
+Like the reference's one cached upload, a data version is profiled once.
+Every correction and ``checkpoint`` starts a new version; on one version a
+repeated ``profile``, and a ``null_profile`` of profiled columns, are
+answered from the profile rows already kept, with no job.
 """
 
 from __future__ import annotations
@@ -68,6 +68,8 @@ def _sql_value(v, dtype: T.DataType) -> str:
         return f"CAST(NULL AS {dtype.simpleString()})"
     if isinstance(v, float) and not math.isfinite(v):
         return f"CAST('{v}' AS DOUBLE)"  # 'nan', 'inf', '-inf'
+    if isinstance(dtype, T.DecimalType):  # avg of a decimal column
+        return f"CAST('{v:f}' AS {dtype.simpleString()})"
     return f"{v}L" if isinstance(dtype, T.LongType) else lit(v)
 
 
@@ -85,24 +87,15 @@ def _relation(spark: SparkSession, schema: T.StructType,
                     for r in rows])
 
 
-def _rule_key(rules: list[R.Rule]) -> tuple:
-    """A rule list's identity: SQL-text predicates compare by text, Column
-    predicates (which have no value equality) by object."""
-    return tuple((r.name, r.column, r.predicate if isinstance(r.predicate, str)
-                  else id(r.predicate)) for r in rules)
-
-
 class Workbench:
     """One dataset + its measurement/repair lifecycle."""
 
     def __init__(self, df: DataFrame):
         self._sess = RP.RepairSession(df)
         self._snapshots: list[list[Row]] = []
-        self._version = 0  # the data version; every repair and checkpoint bumps it
-        self._kept_version = 0  # the version the rows below were measured on
-        self._profiled: dict[str, Row] = {}  # column -> profile_columns row
-        self._profile_schema: T.StructType | None = None
-        self._detected: dict[tuple, tuple[list[R.Rule], list[Row]]] = {}
+        # the last profile_columns call on the current head: its columns,
+        # schema and rows; every repair and checkpoint drops it
+        self._profile: tuple[list[str], T.StructType, list[Row]] | None = None
 
     # --- E1: upload -------------------------------------------------------
 
@@ -116,33 +109,25 @@ class Workbench:
 
     # --- E2: profile + detect ---------------------------------------------
 
-    def _drop_stale(self) -> None:
-        """Drop what was measured on an earlier data version."""
-        if self._kept_version != self._version:
-            self._kept_version = self._version
-            self._profiled, self._detected = {}, {}
-
     def profile(self, cols: list[str] | None = None) -> DataFrame:
         """``P.profile_columns`` of the current head, measured now (one
-        aggregate job for the columns not yet profiled on this data
-        version) and kept.  Returns the rows as an inline relation of the
-        same schema: collecting it runs no Spark job."""
-        self._drop_stale()
+        aggregate job) and kept until the next repair or checkpoint; asked
+        again for the same columns, it is served from the kept rows.
+        Returns the rows as an inline relation of the same schema:
+        collecting it runs no Spark job."""
         cols = P._data_cols(self.df, cols)
-        missing = [c for c in cols if c not in self._profiled]
-        if missing:
-            fresh = P.profile_columns(self.df, missing)
-            self._profiled.update((r["column"], r) for r in fresh.collect())
-            self._profile_schema = fresh.schema
-        return _relation(self.df.sparkSession, self._profile_schema,
-                         [self._profiled[c] for c in cols])
+        if self._profile is None or self._profile[0] != cols:
+            fresh = P.profile_columns(self.df, cols)
+            self._profile = (cols, fresh.schema, fresh.collect())
+        _, schema, rows = self._profile
+        return _relation(self.df.sparkSession, schema, rows)
 
     def null_profile(self, cols: list[str] | None = None) -> DataFrame:
         """``P.null_profile``: from the kept profile rows when every column
         was profiled on this data version (no job), else lazily."""
-        self._drop_stale()
         cols = P._data_cols(self.df, cols)
-        if not all(c in self._profiled for c in cols):
+        rows = {r["column"]: r for r in self._profile[2]} if self._profile else {}
+        if not all(c in rows for c in cols):
             return P.null_profile(self.df, cols)
         filled = "(total_records - null_records)"
         return _inline(
@@ -151,21 +136,15 @@ class Workbench:
             f"{pct('null_records', 'total_records')} AS null_pct, "
             f"{pct(filled, 'total_records')} AS filled_pct",
             ["column", "total_records", "null_records"],
-            [[lit(c), f"{self._profiled[c]['total_records']}L",
-              f"{self._profiled[c]['null_records']}L"] for c in cols])
+            [[lit(c), f"{rows[c]['total_records']}L", f"{rows[c]['null_records']}L"]
+             for c in cols])
 
     def detect(self, rules: list[R.Rule]) -> DataFrame:
-        """Measure the rules on the current head now (one aggregate job;
-        none when this rule list was measured on this data version) and
-        keep the summary rows as a snapshot for ``report`` (A15).
+        """Measure the rules on the current head now (one aggregate job)
+        and keep the summary rows as a snapshot for ``report`` (A15).
         Returns the snapshot, with its ``measurement`` number, as an inline
         relation: collecting it runs no Spark job."""
-        self._drop_stale()
-        key = _rule_key(rules)
-        if key not in self._detected:
-            # the rules stay referenced so a Column predicate's id is not reused
-            self._detected[key] = (rules, R.evaluate_rules(self.df, rules).collect())
-        rows = self._detected[key][1]
+        rows = R.evaluate_rules(self.df, rules).collect()
         self._snapshots.append(rows)
         m = len(self._snapshots) - 1
         return _inline(self.df.sparkSession,
@@ -192,7 +171,7 @@ class Workbench:
 
     def _apply(self, fn, *a, **kw) -> "Workbench":
         self._sess.apply(fn, *a, **kw)
-        self._version += 1
+        self._profile = None
         return self
 
     def title_case(self, col: str): return self._apply(RP.title_case, col)
@@ -213,7 +192,7 @@ class Workbench:
 
     def checkpoint(self) -> "Workbench":
         self._sess.checkpoint()
-        self._version += 1
+        self._profile = None
         return self
 
     # --- expectation-suite shortcuts (rules v2 + suggestion) ---------------

@@ -276,9 +276,9 @@ def test_detect_snapshot_and_report_job_budget(spark):
 
 
 def test_workbench_measures_each_data_version_once(spark):
-    """On one data version a repeated profile or detect, and a
-    null_profile of profiled columns, run no job; every repair and
-    checkpoint starts a version that is measured again."""
+    """On one data version a repeated profile, and a null_profile of
+    profiled columns, run no job; detect measures on every call, and every
+    repair and checkpoint starts a version that is measured again."""
     from pyspark.sql import functions as F
 
     from dataqtor_spark.session import ROW_ID
@@ -290,8 +290,7 @@ def test_workbench_measures_each_data_version_once(spark):
     assert _jobs(sc, "wb-profile-again", lambda: wb.profile().collect()) == []
     assert _jobs(sc, "wb-null-profile", lambda: wb.null_profile().collect()) == []
     assert _jobs(sc, "wb-detect", lambda: wb.detect(_bench_rules()).collect())
-    assert _jobs(sc, "wb-detect-again",
-                 lambda: wb.detect(_bench_rules()).collect()) == []
+    assert _jobs(sc, "wb-detect-again", lambda: wb.detect(_bench_rules()).collect())
     repairs = [lambda: wb.title_case("city"), lambda: wb.fill_nulls("tcid", "0"),
                lambda: wb.drop_rows([2]), lambda: wb.update_cell(1, "phone", "x"),
                lambda: wb.sort_rows(["age"]), lambda: wb.project(wb.df.columns),

@@ -8,6 +8,7 @@ same rows and the same schema, nullability included.
 
 import functools
 import random
+from decimal import Decimal
 
 import pyspark.sql.functions as F
 from hypothesis import given, settings, strategies as st
@@ -513,8 +514,8 @@ def _repairs():
 
 def test_snapshots_match_fresh_computation(spark):
     """After every repair kind, profile, null_profile and detect equal a
-    fresh computation on the new head, both when they measure and when
-    they are served from what they kept."""
+    fresh computation on the new head, both when profile measures and when
+    profile and null_profile are served from the rows it kept."""
     for frame in _frames(spark).values():
         # checkpointed: each job then reads JVM blocks, not Python rows
         wb = Workbench(frame.withColumn(S.ROW_ID, F.col("id")).localCheckpoint())
@@ -533,6 +534,24 @@ def test_snapshots_match_fresh_computation(spark):
                 assert _table(detected.drop("measurement")) == summary, kind
                 assert {r["measurement"] for r in detected.collect()} == {m}
                 m += 1
+            # a column subset is measured afresh, in its own schema
+            assert _table(wb.profile(["age"])) == _table(P.profile_columns(wb.df, ["age"]))
+
+
+def test_decimal_profile_snapshot(spark):
+    """On DECIMAL columns alone ``mean`` stays a decimal; the served
+    profile keeps that type and its values."""
+    df = spark.createDataFrame(
+        [(1, Decimal("9.99"), Decimal("0.000")), (2, None, Decimal("-1.250")),
+         (3, Decimal("12345678.10"), None)],
+        f"{S.ROW_ID} long, price decimal(10,2), rate decimal(6,3)")
+    wb = Workbench(df)
+    for cols in (None, ["price"]):
+        fresh = P.profile_columns(df, cols)
+        assert dict(fresh.dtypes)["mean"].startswith("decimal")
+        for _ in range(2):  # measured, then served
+            assert _table(wb.profile(cols)) == _table(fresh)
+            assert _table(wb.null_profile(cols)) == _table(P.null_profile(df, cols))
 
 
 def test_detect_and_report_match_retired_form(spark):
