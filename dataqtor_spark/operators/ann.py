@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dataqtor_spark.session import local_frame
+
 
 def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -794,7 +796,7 @@ def write_ivf_index(corpus: DataFrame, path: str, id_col: str, vec_col: str,
      .write.mode("overwrite").partitionBy("__cluster").parquet(f"{path}/corpus"))
     spark = corpus.sparkSession
     rows = [(cid, i, x) for cid, vec in centers for i, x in enumerate(vec)]
-    (spark.createDataFrame(rows, "cid int, dim int, val double")
+    (local_frame(spark, rows, "cid int, dim int, val double")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids"))
 
 
@@ -935,11 +937,11 @@ def write_ivfpq_index(corpus: DataFrame, path: str, id_col: str,
      .partitionBy("__cluster").parquet(f"{path}/corpus"))
     spark = corpus.sparkSession
     crows = [(cid, i, x) for cid, vec in coarse for i, x in enumerate(vec)]
-    (spark.createDataFrame(crows, "cid int, dim int, val double")
+    (local_frame(spark, crows, "cid int, dim int, val double")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids"))
     brows = [(j, cid, p, x) for j in range(m)
              for cid, cvec in books[j] for p, x in enumerate(cvec)]
-    (spark.createDataFrame(brows, "j int, cid int, pos int, val double")
+    (local_frame(spark, brows, "j int, cid int, pos int, val double")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks"))
 
 
@@ -1068,7 +1070,7 @@ def write_sq8_index(corpus: DataFrame, path: str, id_col: str,
      .partitionBy("__cluster").parquet(f"{path}/corpus"))
     spark = corpus.sparkSession
     rows = [(cid, i, x) for cid, vec in centers for i, x in enumerate(vec)]
-    (spark.createDataFrame(rows, "cid int, dim int, val double")
+    (local_frame(spark, rows, "cid int, dim int, val double")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids"))
 
 
@@ -1295,7 +1297,7 @@ def write_binary_index(corpus: DataFrame, path: str, id_col: str,
      .parquet(f"{path}/corpus"))
     spark = corpus.sparkSession
     rows = [(cid, i, x) for cid, vec in centers for i, x in enumerate(vec)]
-    (spark.createDataFrame(rows, "cid int, dim int, val double")
+    (local_frame(spark, rows, "cid int, dim int, val double")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids"))
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataqtor_spark.operators.textstats import WS_PLUS
+from dataqtor_spark.session import local_frame
 
 # Column trees here are large (64-hash families, 64-bit nibble extraction)
 # and deterministic given their parameters; building them costs real
@@ -978,7 +979,9 @@ _CC_STORAGE_EVERY = 6
 # rounds) the driver path wins up to 2^19 (3.9 vs 4.7 s at 2^18) and the
 # two meet at 2^20; on a random graph (~7 rounds) it wins 3.6 vs 27 s
 # at 2^18.  The bound sits below that crossover to cap the driver's
-# Python peak at ~130 MB (collected rows + union-find + createDataFrame).
+# Python peak: 130 MiB by tracemalloc at 2^18 pairs on a near-dup shape
+# (3-copy stars, 350k nodes), for the collected rows, the union-find and
+# the columns handed to local_frame; the Arrow table adds ~6 MiB.
 # 0 turns the driver path off (no collect).
 _CC_DRIVER_EDGES_MAX = 1 << 18
 
@@ -1074,7 +1077,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
             ab = ab.persist()
             rows = ab.limit(_CC_DRIVER_EDGES_MAX + 1).collect()
             if len(rows) <= _CC_DRIVER_EDGES_MAX:
-                return spark.createDataFrame(_union_find(rows), StructType(
+                return local_frame(spark, _union_find(rows), StructType(
                     [StructField(c, node.dataType, node.nullable)
                      for c in ("id", "component")]))
         # Memory barrier per round (eager localCheckpoint: one job, no

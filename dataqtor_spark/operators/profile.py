@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from dataqtor_spark.functions.exact import round_ratio_expr
 from dataqtor_spark.functions.sqltext import count_true, ident, lit, pct, struct
-from dataqtor_spark.session import ROW_ID
+from dataqtor_spark.session import ROW_ID, local_frame
 
 # Turkish-aware letter class used by the reference's pattern profiler
 # (home.py:229-251): letters → 'A', digits → '9'.
@@ -31,6 +31,13 @@ def _data_cols(df: DataFrame, cols: list[str] | None) -> list[str]:
     if cols is not None:
         return list(cols)
     return [c for c in df.columns if c != ROW_ID]
+
+
+def _no_data_columns(df: DataFrame) -> DataFrame:
+    """A one-column stand-in for a frame with no data column.  An operator
+    run on it and cut to ``limit(0)`` returns zero rows of its usual schema,
+    where ``explode(array())`` would have no struct type to expand."""
+    return df.select(F.lit(None).cast("bigint").alias("c"))
 
 
 def _long_format(one_row: DataFrame, cols: list[str], fields: dict[str, str],
@@ -93,6 +100,8 @@ def null_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     columns are profiled (the reference does one pass per column).
     """
     cols = _data_cols(df, cols)
+    if not cols:
+        return null_profile(_no_data_columns(df)).limit(0)
     one = df.selectExpr("count(1) AS __total", *[
         f"{count_true(f'{ident(c)} IS NULL')} AS __nulls_{i}" for i, c in enumerate(cols)])
     return _long_format(one, cols, {
@@ -373,8 +382,14 @@ def profile_columns(df: DataFrame, cols: list[str] | None = None,
     (see functions/exact.py).  Default keeps the raw double ``avg``.
     """
     cols = _data_cols(df, cols)
+    if not cols:
+        return profile_columns(_no_data_columns(df), None, exact_distinct,
+                               exact_mean).limit(0)
     types = dict(zip(df.columns, [f.dataType for f in df.schema.fields]))
-    num = set(numeric_columns(df))
+    # booleans and day-time intervals count as numeric elsewhere, but
+    # avg / stddev_samp reject them: they get NULL moments, as strings do
+    num = {c for c in numeric_columns(df)
+           if not isinstance(types[c], (T.BooleanType, T.DayTimeIntervalType))}
     aggs = ["count(1) AS __total"]
     for i, c in enumerate(cols):
         q = ident(c)
@@ -773,8 +788,8 @@ def phik_correlation(df: DataFrame, col_x: str, col_y: str,
     r_dim, c_dim = obs.shape
 
     def _result(val: float) -> DataFrame:
-        return df.sparkSession.createDataFrame(
-            [(col_x, col_y, int(n), round(float(val), 4))],
+        return local_frame(
+            df.sparkSession, [(col_x, col_y, int(n), round(float(val), 4))],
             "col_x string, col_y string, n long, phik double")
 
     if n == 0 or r_dim < 2 or c_dim < 2:
@@ -1682,8 +1697,8 @@ def inclusion_dependency(child: DataFrame, child_col: str,
     n_child = c.count()
     n_missing = c.join(p, "__k", "left_anti").count()
     spark = child.sparkSession
-    return spark.createDataFrame(
-        [(n_child, n_missing, n_missing == 0)],
+    return local_frame(
+        spark, [(n_child, n_missing, n_missing == 0)],
         "n_child_distinct long, n_missing long, contained boolean")
 
 
@@ -2001,8 +2016,8 @@ def null_correlation(df: DataFrame, cols: list[str]) -> DataFrame:
     pairs = [(i, j) for i in range(len(cols))
              for j in range(i + 1, len(cols))]
     if not pairs:
-        return df.sparkSession.createDataFrame(
-            [], "col_a string, col_b string, null_corr double")
+        return local_frame(
+            df.sparkSession, [], "col_a string, col_b string, null_corr double")
     inds = {c: F.col(c).isNull().cast("double") for c in cols}
     aggs = []
     for i, j in pairs:  # positional aliases: column NAMES may contain

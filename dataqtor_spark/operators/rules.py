@@ -34,6 +34,7 @@ from dataqtor_spark.functions.email import email_violation_expr
 from dataqtor_spark.functions.phone import phone_violation_expr
 from dataqtor_spark.functions.sqltext import (contains_any, count_true, ident, isin,
                                               lit, pct, struct)
+from dataqtor_spark.session import local_frame
 
 # R4 — the reference's 31-char special-character set (home.py:434-436)
 SPECIAL_CHARS = ["@", "-", "_", ".", ",", "~", "`", "!", "#", "$", "%", "^",
@@ -434,8 +435,9 @@ def verify_suggestions(df: DataFrame, suggestions: DataFrame) -> DataFrame:
         else:
             ok = False
         out.append((c, k, float(p), bool(ok)))
-    return df.sparkSession.createDataFrame(
-        out, "column string, constraint string, param double, passed boolean")
+    return local_frame(
+        df.sparkSession, out,
+        "column string, constraint string, param double, passed boolean")
 
 
 def violation_samples(df: DataFrame, rules: list[Rule], key: str,

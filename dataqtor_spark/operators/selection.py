@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dataqtor_spark.operators.ann import _as_double, brute_force_topk, cosine
+from dataqtor_spark.session import local_frame
 
 # The per-round maximin-distance expression references only the fixed
 # internal aliases __cs (broadcast center vectors) and __v (point
@@ -88,7 +89,7 @@ def kcenter_select(df: DataFrame, id_col: str = "vec_id",
     try:
         seed_rows = pts.orderBy(F.asc("__id")).limit(1).collect()
         if not seed_rows:  # empty corpus -> empty selection, declared schema
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         seed = seed_rows[0]
         centers = [(seed["__id"], list(seed["__v"]), None)]
         for _ in range(1, k):
@@ -98,9 +99,9 @@ def kcenter_select(df: DataFrame, id_col: str = "vec_id",
             # and literals embed in it), so rounds 2..k pay only the
             # cached scan — identical maximin semantics (per-center 6dp
             # rounding, min, id tiebreak)
-            state = spark.createDataFrame(
-                [([v for _, v, _ in centers],
-                  [cid for cid, _, _ in centers])], round_schema)
+            state = local_frame(
+                spark, [([v for _, v, _ in centers],
+                         [cid for cid, _, _ in centers])], round_schema)
             md = _kc_maximin()
             top = (pts.crossJoin(F.broadcast(state))
                    .filter(~F.array_contains(F.col("__cids"), F.col("__id")))
@@ -114,7 +115,7 @@ def kcenter_select(df: DataFrame, id_col: str = "vec_id",
     finally:
         pts.unpersist()
     out_rows = [(r, cid, mdv) for r, (cid, _, mdv) in enumerate(centers)]
-    return spark.createDataFrame(out_rows, out_schema)
+    return local_frame(spark, out_rows, out_schema)
 
 
 def cluster_balanced_sample(df: DataFrame, id_col: str = "vec_id",

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataqtor_spark.session import local_frame
+
 # ---------------------------------------------------------------------------
 # token counting — whitespace + a BPE-ish regex variant
 # ---------------------------------------------------------------------------
@@ -2158,8 +2160,8 @@ def domain_mixture_plan(df: DataFrame, domain_col: str,
     W = sum(weights.values())
     if W <= 0 or any(w < 0 for w in weights.values()):
         raise ValueError("weights must be non-negative with a positive sum")
-    wtab = df.sparkSession.createDataFrame(
-        sorted((d, int(w)) for d, w in weights.items()),
+    wtab = local_frame(
+        df.sparkSession, sorted((d, int(w)) for d, w in weights.items()),
         "domain string, weight long")
     from dataqtor_spark.session import parallelize
 

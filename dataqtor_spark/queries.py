@@ -26,6 +26,7 @@ from dataqtor_spark.functions import exact as XR
 from dataqtor_spark.functions import phone as PH
 from dataqtor_spark.operators import profile as P
 from dataqtor_spark.operators import rules as R
+from dataqtor_spark.session import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -9402,9 +9403,9 @@ def bpe02_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     new symbol) rule with its corpus count at selection time."""
     merges, _words = TX.bpe_train(_t(spark, sf_dir, "documents"),
                                   rounds=_BPE_ROUNDS)
-    return spark.createDataFrame(
-        [(m["round"], m["sym_a"], m["sym_b"], m["merged"], m["n"])
-         for m in merges],
+    return local_frame(
+        spark, [(m["round"], m["sym_a"], m["sym_b"], m["merged"], m["n"])
+                for m in merges],
         "merge_round int, sym_a string, sym_b string, merged string, n long")
 
 
@@ -10593,8 +10594,8 @@ def geo05_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         did.alias("pt_id"),
         (((did * 104729) % 35900) / 100.0 - 179.5).alias("x"),
         (((did * 7919) % 17000) / 100.0 - 85.0).alias("y"))
-    polys = spark.createDataFrame(
-        _GEO05_POLYS, "poly_id int, xs array<double>, ys array<double>")
+    polys = local_frame(
+        spark, _GEO05_POLYS, "poly_id int, xs array<double>, ys array<double>")
     inside = E.point_in_polygon_join(pts, polys)
     return (inside.groupBy("poly_id")
             .agg(F.count(F.lit(1)).alias("n_points"),

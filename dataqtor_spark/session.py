@@ -54,6 +54,58 @@ def get_spark(app_name: str = "dataqtor_spark", master: str | None = None) -> Sp
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over ``rows`` (tuples in ``schema``'s field order)
+    built on the driver, handed to Spark as one Arrow table.
+
+    ``schema`` is a ``StructType`` or a DDL string; the result's names,
+    types and nullability are exactly ``schema``'s, and empty ``rows``
+    give an empty frame.  ``createDataFrame`` over Python rows would
+    pickle them into a ``PythonRDD``, so every job that later reads the
+    relation runs Python worker tasks.  The Arrow table stays in the JVM
+    (a local relation up to ``spark.sql.execution.arrow.
+    localRelationThreshold``, so collecting it runs no job) and no Python
+    worker appears in its lineage.  Spark Connect takes the same table.
+    Naive datetimes of a ``timestamp`` field (or an array of them) are read
+    in the Python process's local zone, as ``createDataFrame`` reads them
+    and ``collect`` returns them; Arrow would read them as UTC.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array([_to_utc(v, f.dataType) for v in c]
+                  if _has_timestamp(f.dataType) else c, type=a.type)
+         for c, f, a in zip(cols, schema, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
+def _has_timestamp(t) -> bool:
+    from pyspark.sql.types import ArrayType, TimestampType
+    return isinstance(t, TimestampType) or (
+        isinstance(t, ArrayType) and _has_timestamp(t.elementType))
+
+
+def _to_utc(v, t):
+    """``v`` with each datetime of ``timestamp`` type ``t`` moved to UTC, a
+    naive one read in the local zone.  (``pa.array`` with a given type
+    drops an aware datetime's offset, so values must already be in UTC.)"""
+    from datetime import timezone
+
+    from pyspark.sql.types import ArrayType
+    if v is None:
+        return None
+    if isinstance(t, ArrayType):
+        return [_to_utc(x, t.elementType) for x in v]
+    return v.astimezone(timezone.utc)
+
+
 def _normalize_timestamps(df: DataFrame) -> DataFrame:
     """Cast TIMESTAMP_NTZ columns to TIMESTAMP (session tz is UTC, so the
     cast is value-preserving).  Parquet naive timestamps (isAdjustedToUTC =

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataqtor_spark.operators.rules import Rule
+from dataqtor_spark.session import local_frame
 
 
 def _recover_snapshot(path: str) -> None:
@@ -700,7 +701,7 @@ def additive_agg_sink(stream: DataFrame, group_cols: list[str], path: str,
         tmp = path.rstrip("/") + ".__tmp"
         part.write.mode("overwrite").parquet(tmp)
         epochs = sorted(applied | {int(epoch_id)})
-        spark.createDataFrame([(e,) for e in epochs], "epoch long") \
+        local_frame(spark, [(e,) for e in epochs], "epoch long") \
             .coalesce(1).write.mode("overwrite").parquet(tmp + "/_epochs")
         _swap_snapshot(tmp, path)
         if os.path.isdir(legacy):  # absorbed into the snapshot ledger

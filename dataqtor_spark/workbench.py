@@ -24,8 +24,6 @@ answered from the profile rows already kept, with no job.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
@@ -55,36 +53,14 @@ def _literals(m: int, row: Row) -> list[str]:
 
 def _inline(spark: SparkSession, select: str, names: list[str],
             rows: list[list[str]]) -> DataFrame:
-    """``SELECT … FROM VALUES …``: the optimizer folds it into a local
-    table, so neither building nor collecting it runs a Spark job
-    (``createDataFrame`` would go through an RDD)."""
+    """``SELECT … FROM VALUES …`` over at least one row: the optimizer
+    folds it into a local table, so collecting it runs 0 Spark jobs, and
+    ``select`` derives columns (``dq_score``, ``null_pct``) from the kept
+    counts with the operators' own SQL formulas, so they keep the
+    operators' types."""
     values = ", ".join("(" + ", ".join(r) + ")" for r in rows)
     return spark.sql(f"SELECT {select} FROM VALUES {values} "
                      f"AS t({', '.join(ident(n) for n in names)})")
-
-
-def _sql_value(v, dtype: T.DataType) -> str:
-    if v is None:
-        return f"CAST(NULL AS {dtype.simpleString()})"
-    if isinstance(v, float) and not math.isfinite(v):
-        return f"CAST('{v}' AS DOUBLE)"  # 'nan', 'inf', '-inf'
-    if isinstance(dtype, T.DecimalType):  # avg of a decimal column
-        return f"CAST('{v:f}' AS {dtype.simpleString()})"
-    return f"{v}L" if isinstance(dtype, T.LongType) else lit(v)
-
-
-def _relation(spark: SparkSession, schema: T.StructType,
-              rows: list[Row]) -> DataFrame:
-    """Collected ``rows`` as an inline relation of exactly ``schema``:
-    names, types and nullability.  A VALUES column is nullable only where
-    some row holds a NULL, so nullable fields pass through ``IF``, which
-    the optimizer folds away."""
-    select = ", ".join(
-        f"IF(true, {ident(f.name)}, NULL) AS {ident(f.name)}" if f.nullable
-        else ident(f.name) for f in schema)
-    return _inline(spark, select, schema.names,
-                   [[_sql_value(v, f.dataType) for v, f in zip(r, schema)]
-                    for r in rows])
 
 
 class Workbench:
@@ -113,21 +89,21 @@ class Workbench:
         """``P.profile_columns`` of the current head, measured now (one
         aggregate job) and kept until the next repair or checkpoint; asked
         again for the same columns, it is served from the kept rows.
-        Returns the rows as an inline relation of the same schema:
+        Returns the rows as a ``local_frame`` of the same schema:
         collecting it runs no Spark job."""
         cols = P._data_cols(self.df, cols)
         if self._profile is None or self._profile[0] != cols:
             fresh = P.profile_columns(self.df, cols)
             self._profile = (cols, fresh.schema, fresh.collect())
         _, schema, rows = self._profile
-        return _relation(self.df.sparkSession, schema, rows)
+        return S.local_frame(self.df.sparkSession, rows, schema)
 
     def null_profile(self, cols: list[str] | None = None) -> DataFrame:
         """``P.null_profile``: from the kept profile rows when every column
         was profiled on this data version (no job), else lazily."""
         cols = P._data_cols(self.df, cols)
         rows = {r["column"]: r for r in self._profile[2]} if self._profile else {}
-        if not all(c in rows for c in cols):
+        if not cols or not all(c in rows for c in cols):
             return P.null_profile(self.df, cols)
         filled = "(total_records - null_records)"
         return _inline(

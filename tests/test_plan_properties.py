@@ -307,10 +307,11 @@ def test_workbench_measures_each_data_version_once(spark):
 
 
 def test_connected_components_job_budget(spark, monkeypatch):
-    """A small graph resolves on the driver.  In one partition that is 2
-    jobs: one collects its pairs, one runs the caller's collect of the
-    local result.  In 8 partitions the size probe's incremental take
-    scans 1 partition, then 4, then the last 3, so it is 4.  The
+    """A small graph resolves on the driver.  In one partition that is 1
+    job, which collects its pairs: the result is an Arrow local relation,
+    so the caller's collect of it runs none.  In 8 partitions the size
+    probe's incremental take scans 1 partition, then 4, then the last 3,
+    so it is 3.  The
     5,000-node path, routed to the distributed loop, converges in 13
     rounds (two of them parquet barriers) at the job count measured
     before barriers moved to one durability rule."""
@@ -328,10 +329,10 @@ def test_connected_components_job_budget(spark, monkeypatch):
                                      (F.col("id") + 1).alias("id_b"))
     n_one = len(_jobs(sc, "budget-cc-small",
                       lambda: D.connected_components(one).collect()))
-    assert n_one == 2, n_one
+    assert n_one == 1, n_one
     n_eight = len(_jobs(sc, "budget-cc-small-8",
                         lambda: D.connected_components(eight).collect()))
-    assert n_eight == 4, n_eight
+    assert n_eight == 3, n_eight
     monkeypatch.setattr(D, "_CC_DRIVER_EDGES_MAX", 0)
     n_chain = len(_jobs(sc, "budget-cc-chain",
                         lambda: D.connected_components(chain).collect()))

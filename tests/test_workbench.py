@@ -231,3 +231,39 @@ def test_report_survives_replaced_source(spark, tmp_path):
     rep = sorted((r["measurement"], r["out_of_format_records"], r["dq_score"],
                   r["overall_dq_score"]) for r in wb.report().collect())
     assert rep == [(0, 1, 33.33, 33.33), (1, 0, 66.67, 66.67)]
+
+
+def test_profile_boolean_and_interval_columns(spark):
+    """Booleans and day-time intervals get counts and NULL moments, as
+    strings do: ``avg`` rejects a boolean and ``stddev_samp`` an
+    interval.  Numeric columns beside them keep their moments."""
+    df = spark.sql(
+        "SELECT * FROM VALUES (true, INTERVAL '1' DAY, 2L), "
+        "(false, INTERVAL '-2' HOUR, 4L), (NULL, NULL, 6L) AS t(flag, iv, n)")
+    wb = Workbench(df)
+    got = {r["column"]: r for r in wb.profile().collect()}
+    for c in ("flag", "iv"):
+        r = got[c]
+        assert (r["total_records"], r["null_records"], r["distinct_values"]) == (3, 1, 2)
+        assert {r[k] for k in ("mean", "std", "min", "max", "skewness", "kurtosis",
+                               "zero_count", "negative_count")} == {None}
+    assert (got["n"]["mean"], got["n"]["min"], got["n"]["max"]) == (4.0, 2.0, 6.0)
+    assert {r["column"]: r["null_records"] for r in wb.null_profile().collect()} \
+        == {"flag": 1, "iv": 1, "n": 0}
+
+
+def test_profile_frame_without_data_columns(spark):
+    """A frame whose only column is ``__row_id`` profiles to zero rows of
+    the usual schema, through the operators and the Workbench."""
+    from dataqtor_spark.operators import profile as P
+    from dataqtor_spark.session import ROW_ID
+
+    df = spark.range(3).withColumnRenamed("id", ROW_ID)
+    usual = spark.range(3).withColumnRenamed("id", "n")
+    wb = Workbench(df)
+    for got, want in ((P.profile_columns(df), P.profile_columns(usual)),
+                      (wb.profile(), P.profile_columns(usual)),
+                      (P.null_profile(df), P.null_profile(usual)),
+                      (wb.null_profile(), P.null_profile(usual))):
+        assert got.schema == want.schema
+        assert got.collect() == []
