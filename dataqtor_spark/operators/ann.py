@@ -14,6 +14,9 @@ trades recall vs cost).
 from __future__ import annotations
 
 import math
+import os
+from collections import OrderedDict
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -251,7 +254,41 @@ def _nearest_centroid_ids(vec: Column, centers: list[list[float]], n: int) -> Co
     return F.transform(F.slice(ranked, 1, n), lambda s: s["cid"])
 
 
-_CENTROID_CACHE: dict = {}
+# Trained centroids and codebooks of calls made with a ``cache_key``,
+# least recently used first; holds at most 16 entries (see _memo_put).
+_CENTROID_CACHE: OrderedDict = OrderedDict()
+
+
+def _memo_key(corpus: DataFrame, cache_key: str, *params) -> tuple:
+    """A trainer's memo key: the caller's ``cache_key``, the trainer's
+    parameters, and each input file of ``corpus`` with its size and
+    mtime, so a file rewritten in place under the same path trains anew.
+    A file the driver cannot stat (not on a local file system) keys on
+    its path alone."""
+    files = []
+    for f in sorted(corpus.inputFiles()):
+        u = urlparse(f)
+        try:
+            st = os.stat(unquote(u.path)) if u.scheme in ("", "file") else None
+        except OSError:
+            st = None
+        files.append((f, st.st_size, st.st_mtime_ns) if st else (f,))
+    return (cache_key, *params, tuple(files))
+
+
+def _memo_get(key: tuple):
+    try:
+        _CENTROID_CACHE.move_to_end(key)
+        return _CENTROID_CACHE[key]
+    except KeyError:  # never stored, or evicted by another thread
+        return None
+
+
+def _memo_put(key: tuple, value) -> None:
+    _CENTROID_CACHE[key] = value
+    _CENTROID_CACHE.move_to_end(key)
+    while len(_CENTROID_CACHE) > 16:
+        _CENTROID_CACHE.popitem(last=False)
 
 
 # ---------------------------------------------------------------------------
@@ -304,7 +341,9 @@ def train_ivf_centroids_portable(corpus: DataFrame, id_col: str, vec_col: str,
     so cost is n_iter full scans; the collected state is k × dim floats.
     """
     if cache_key is not None:
-        hit = _CENTROID_CACHE.get(("portable", cache_key, vec_col, n_clusters, n_iter))
+        key = _memo_key(corpus, cache_key, "portable", vec_col, n_clusters,
+                        n_iter)
+        hit = _memo_get(key)
         if hit is not None:
             return hit
     base = corpus.select(F.col(id_col).alias("__id"),
@@ -335,7 +374,7 @@ def train_ivf_centroids_portable(corpus: DataFrame, id_col: str, vec_col: str,
         centers = [(cid, [d[i] for i in range(dim)])
                    for cid, d in sorted(by_cid.items())]
     if cache_key is not None:
-        _CENTROID_CACHE[("portable", cache_key, vec_col, n_clusters, n_iter)] = centers
+        _memo_put(key, centers)
     return centers
 
 
@@ -415,9 +454,9 @@ def train_pq_codebooks_portable(corpus: DataFrame, id_col: str, vec_col: str,
     codebook — collected state is m × ks × sub_len floats.  At 100 TB train
     on a sample, exactly like the IVF quantizer; encoding is the only
     full-corpus pass and it is a pure column expression."""
-    key = ("pq", cache_key, vec_col, m, ks, n_iter)
     if cache_key is not None:
-        hit = _CENTROID_CACHE.get(key)
+        key = _memo_key(corpus, cache_key, "pq", vec_col, m, ks, n_iter)
+        hit = _memo_get(key)
         if hit is not None:
             return hit
     base = corpus.select(F.col(id_col).alias("__id"),
@@ -453,7 +492,7 @@ def train_pq_codebooks_portable(corpus: DataFrame, id_col: str, vec_col: str,
         books = [[(cid, [d[i] for i in range(sub)])
                   for cid, d in sorted(acc[j].items())] for j in range(m)]
     if cache_key is not None:
-        _CENTROID_CACHE[key] = (sub, books)
+        _memo_put(key, (sub, books))
     return sub, books
 
 
@@ -713,9 +752,12 @@ def train_ivf_centroids(corpus: DataFrame, vec_col: str, n_clusters: int = 16,
     ``cache_key``: a caller-supplied identity for the corpus (e.g. its
     path).  Training is deterministic given (data, k, seed), and the
     production pattern is train-once / probe-many — so repeated calls with
-    the same key reuse the centroids instead of re-fitting."""
+    the same key, on input files of the same size and mtime, reuse the
+    centroids instead of re-fitting (``_memo_key``)."""
     if cache_key is not None:
-        hit = _CENTROID_CACHE.get((cache_key, vec_col, n_clusters, seed))
+        key = _memo_key(corpus, cache_key, "mllib", vec_col, n_clusters,
+                        seed, sample_fraction)
+        hit = _memo_get(key)
         if hit is not None:
             return hit
     from pyspark.ml.clustering import KMeans
@@ -728,7 +770,7 @@ def train_ivf_centroids(corpus: DataFrame, vec_col: str, n_clusters: int = 16,
     model = KMeans(k=n_clusters, seed=seed, maxIter=10, tol=1e-3).fit(train)
     centers = [list(map(float, c)) for c in model.clusterCenters()]
     if cache_key is not None:
-        _CENTROID_CACHE[(cache_key, vec_col, n_clusters, seed)] = centers
+        _memo_put(key, centers)
     return centers
 
 

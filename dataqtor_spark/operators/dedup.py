@@ -372,25 +372,195 @@ def minhash_similarity(sig: DataFrame, candidates: DataFrame,
             .select("id_a", "id_b", "est_jaccard"))
 
 
-def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
-                        threshold: float = 0.7, num_hashes: int = 64,
-                        bands: int = 16, shingle_n: int = 3) -> DataFrame:
-    """End-to-end MinHash near-dup pairs above an estimated-Jaccard threshold.
+# Signature count up to which minhash_pairs bands and verifies ON THE
+# DRIVER over the collected signature table — the bounded-collect contract
+# of _CC_DRIVER_EDGES_MAX.  Measured motivation: on 3k docs the
+# distributed tail (band groupBy, auto-cap count, two broadcast probes,
+# localCheckpoint) ran 12 Spark jobs, and its cost was the plan around a
+# few hundred pairs, not the data.  Sized by timing both tails over
+# pre-materialized signatures of near-dup corpora (10% copies, 4-core
+# local[4], median of 3 alternating runs), driver vs distributed: 2^12
+# 0.29 vs 1.02 s, 2^16 0.63 vs 2.09 s, 2^17 0.97 vs 2.07 s, and 2^18
+# 3.5 vs 5.1 s with the pair bound lifted (at 2^18 the bucket pairs
+# exceed _CC_DRIVER_EDGES_MAX, so the call declines after the collect:
+# 7.2 s).  The driver path wins at every size measured, so the
+# bound caps the driver's state instead: Arrow signatures plus the
+# tracemalloc peak of the numpy matrices and the pairs are 33 + 43 MiB
+# at 2^16 docs, 66 + 85 MiB at 2^17 and 131 + 171 MiB at 2^18.
+# 0 turns the driver path off (no count, no collect).
+_MH_DRIVER_DOCS_MAX = 1 << 16
 
-    The signature table is persisted (reused by banding and verification),
-    the small pair result is materialized via ``localCheckpoint``, and the
-    signatures are unpersisted before returning — repeated calls in a
-    long-lived session do not accumulate storage.
-    """
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    sig = sig.persist()  # reused by banding and verification
+
+def minhash_pairs(sig: DataFrame, id_col: str, threshold: float = 0.7,
+                  num_hashes: int = 64, bands: int = 16) -> DataFrame:
+    """``(id_a, id_b, est_jaccard)`` for the rows of a signature table
+    ``(id_col, sig)`` whose banded signatures collide in ≥1 band
+    (:func:`minhash_candidates` with its ``"auto"`` cap) and whose
+    :func:`minhash_similarity` estimate is ≥ ``threshold`` — the one tail
+    of every MinHash Jaccard pair operator.
+
+    The signatures are persisted and unpersisted before returning, so
+    they are computed once and repeated calls in a long-lived session do
+    not accumulate storage.  One job fills the cache and counts its rows
+    (an Observation on a ``noop`` write).  Up to ``_MH_DRIVER_DOCS_MAX``
+    rows, the cached table comes to the driver in one parallel
+    ``toArrow`` collect, banding and verification run there in numpy
+    (:func:`_driver_minhash_pairs`), and the pairs go back through
+    ``session.local_frame`` as an Arrow local relation: 2 jobs in all,
+    plus the stage jobs AQE runs for an exchange under the signatures.
+    Otherwise, and where the driver path declines its input, the
+    distributed plan runs over the same cached signatures and its small
+    result is materialized with ``localCheckpoint``.  Both paths give the
+    same rows and the same schema.  Ids that are neither integers nor
+    binary-collated strings always take the distributed plan: only for
+    those is Arrow's order of the ids Spark's."""
+    from pyspark.sql import Observation
+    from pyspark.sql.types import (DoubleType, IntegralType, StringType,
+                                   StructField, StructType)
+
+    id_type = sig.schema[id_col].dataType
+    sig = sig.persist()
     try:
+        if _MH_DRIVER_DOCS_MAX > 0 and (
+                isinstance(id_type, IntegralType)
+                or (isinstance(id_type, StringType)
+                    and id_type.isUTF8BinaryCollation())):
+            obs = Observation()
+            (sig.observe(obs, F.count(F.lit(1)).alias("n"))
+             .write.format("noop").mode("overwrite").save())
+            n_docs = obs.get["n"]
+            if n_docs <= _MH_DRIVER_DOCS_MAX:
+                pairs = _driver_minhash_pairs(
+                    sig.toArrow(), id_col, num_hashes, bands, threshold,
+                    resolve_auto_cap(n_docs))
+                if pairs is not None:
+                    return local_frame(sig.sparkSession, pairs, StructType([
+                        StructField("id_a", id_type, False),
+                        StructField("id_b", id_type, False),
+                        StructField("est_jaccard", DoubleType(), True)]))
         cand = minhash_candidates(sig, id_col, num_hashes, bands)
         return (minhash_similarity(sig, cand, id_col)
                 .filter(F.col("est_jaccard") >= threshold)
                 .localCheckpoint())
     finally:
         sig.unpersist()
+
+
+def _mix64(h):
+    """splitmix64's finalizer over a uint64 array (wrapping arithmetic)."""
+    import numpy as np
+
+    h = (h ^ (h >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    h = (h ^ (h >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return h ^ (h >> np.uint64(31))
+
+
+def _driver_minhash_pairs(table, id_col: str, num_hashes: int, bands: int,
+                          threshold: float, cap: int | None):
+    """The distributed MinHash tail's rows, computed in numpy over the
+    collected signature ``table``: a ``pyarrow.Table`` of
+    ``(id_a, id_b, est_jaccard)``, or ``None`` where the distributed plan
+    must answer instead.
+
+    Row for row the same as :func:`minhash_candidates` +
+    :func:`minhash_similarity` + the threshold filter:
+    - band b is the ``num_hashes // bands`` consecutive signature
+      positions from ``b * rows``; two docs collide in it when their
+      slices are equal (Spark compares ``xxhash64(b, slice)``, the same
+      test up to 2⁻⁶⁴).  ``xxhash64`` skips NULLs, so all-NULL slices
+      (NULL text) collide with each other;
+    - a NULL id never pairs (``collect_list`` drops it), buckets of one id
+      or of more than ``cap`` ids expand nothing, and a pair is
+      ``(id_a, id_b)`` with ``id_a < id_b`` in Spark's order of the type;
+    - ``est_jaccard`` is the number of positions, trailing ones included,
+      where both entries are non-NULL and equal, over ``num_hashes``.
+
+    ``None`` when the ids are not unique, when a band slice mixes NULL
+    and non-NULL entries, when a 64-bit slice hash collides between
+    unequal slices, or when the buckets would expand more than
+    ``_CC_DRIVER_EDGES_MAX`` pairs (the bound on pairs held on the
+    driver; checked before any pair is built).  Grouping is a
+    stable argsort of a per-band slice hash, so each bucket lists its
+    rows in id order; verification gathers one signature position of
+    every pair at a time."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = table.column(id_col).combine_chunks()
+    m = len(ids) - ids.null_count
+    order = pc.sort_indices(ids, null_placement="at_end")[:m].to_numpy()
+    ids = ids.take(order)
+    if m > 1 and pc.any(pc.equal(ids[1:], ids[:-1])).as_py():
+        return None
+    values = table.column("sig").combine_chunks().flatten()
+    del table
+    # (position, doc) matrices in the collected row order; position p of
+    # the i-th doc in id order is sig[p][order[i]]
+    sig = np.ascontiguousarray(
+        values.fill_null(0).to_numpy().reshape(-1, num_hashes).T)
+    valid = (None if values.null_count == 0 else np.ascontiguousarray(
+        values.is_valid().to_numpy(zero_copy_only=False)
+        .reshape(-1, num_hashes).T))
+    del values
+    rows = num_hashes // bands
+    sizes, members = [], []
+    for b in range(bands):
+        key = sig[b * rows:(b + 1) * rows, order]
+        if valid is not None:
+            v = valid[b * rows:(b + 1) * rows, order]
+            null_slice = ~v.any(axis=0)
+            if (null_slice != ~v.all(axis=0)).any():
+                return None
+            key = np.vstack([key, null_slice])
+        h = np.full(m, b, np.uint64)
+        for part in key:
+            h = _mix64(h ^ part.view(np.uint64))
+        o = np.argsort(h, kind="stable")
+        hs = h[o]
+        start = np.flatnonzero(np.r_[True, hs[1:] != hs[:-1]]) if m else o
+        size = np.diff(np.r_[start, m])
+        if (key[:, o] != key[:, np.repeat(o[start], size)]).any():
+            return None
+        keep = size > 1
+        if cap is not None:
+            keep &= size <= cap
+        sizes.append(size[keep])
+        members.append(o[np.repeat(keep, size)])
+    size = np.concatenate(sizes)
+    if int((size * (size - 1) // 2).sum()) > _CC_DRIVER_EDGES_MAX:
+        return None
+    # expand each bucket's (a, b) pairs, a before b in the bucket's order
+    members = np.concatenate(members)
+    first = np.repeat(np.cumsum(size) - size, size)
+    after = np.repeat(size, size) - 1 - (np.arange(len(members)) - first)
+    a = np.repeat(np.arange(len(members)), after)
+    b = a + 1 + np.arange(len(a)) - np.repeat(np.cumsum(after) - after, after)
+    pair = np.unique(members[a] * np.int64(m) + members[b])
+    a, b = np.divmod(pair, np.int64(m))
+    ra, rb = order[a], order[b]
+    agree = np.zeros(len(pair), np.int64)
+    for h in range(num_hashes):
+        same = sig[h][ra] == sig[h][rb]
+        if valid is not None:
+            same &= valid[h][ra] & valid[h][rb]
+        agree += same
+    est = agree / num_hashes
+    hit = np.flatnonzero(est >= threshold)
+    return pa.table({"id_a": ids.take(a[hit]), "id_b": ids.take(b[hit]),
+                     "est_jaccard": est[hit]})
+
+
+def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
+                        threshold: float = 0.7, num_hashes: int = 64,
+                        bands: int = 16, shingle_n: int = 3) -> DataFrame:
+    """End-to-end MinHash near-dup pairs above an estimated-Jaccard
+    threshold: :func:`minhash_signatures`, then :func:`minhash_pairs`
+    (banded on the driver up to ``_MH_DRIVER_DOCS_MAX`` docs, by the
+    distributed plan and a ``localCheckpoint`` above it)."""
+    return minhash_pairs(
+        minhash_signatures(df, id_col, text_col, num_hashes, shingle_n),
+        id_col, threshold, num_hashes, bands)
 
 
 # ---------------------------------------------------------------------------
@@ -515,16 +685,12 @@ def minhash_dedup_pairs_portable(df: DataFrame, id_col: str, text_col: str,
                                  threshold: float = 0.7, num_hashes: int = 64,
                                  bands: int = 16, shingle_n: int = 3) -> DataFrame:
     """:func:`minhash_dedup_pairs` on the portable family — identical
-    banding/verification, differentially testable against SQL."""
-    sig = minhash_signatures_portable(df, id_col, text_col, num_hashes, shingle_n)
-    sig = sig.persist()
-    try:
-        cand = minhash_candidates(sig, id_col, num_hashes, bands)
-        return (minhash_similarity(sig, cand, id_col)
-                .filter(F.col("est_jaccard") >= threshold)
-                .localCheckpoint())
-    finally:
-        sig.unpersist()
+    banding/verification through :func:`minhash_pairs` (driver or
+    distributed by its bound), differentially testable against SQL."""
+    return minhash_pairs(
+        minhash_signatures_portable(df, id_col, text_col, num_hashes,
+                                    shingle_n),
+        id_col, threshold, num_hashes, bands)
 
 
 def minhash_threshold_sensitivity(df: DataFrame, id_col: str = "doc_id",

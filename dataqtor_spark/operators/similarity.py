@@ -130,7 +130,12 @@ def similar_strings_lsh_portable(df: DataFrame, col: str,
     Jaccard ≥ threshold.  Unlike the MLlib ``MinHashLSH`` variant (whose
     hash seeds are Spark-internal), every hash here derives from md5, so
     the whole candidate pipeline is differentially checkable against an
-    ANSI-SQL oracle.  Returns (left_side, right_side, est_jaccard)."""
+    ANSI-SQL oracle.  Returns (left_side, right_side, est_jaccard).
+
+    Banding and verification are ``dedup.minhash_pairs``: on the driver
+    up to ``dedup._MH_DRIVER_DOCS_MAX`` distinct values (an Arrow local
+    relation back), by the distributed plan and a ``localCheckpoint``
+    above it."""
     from dataqtor_spark.operators import dedup as DD
     from dataqtor_spark.session import parallelize
 
@@ -141,18 +146,11 @@ def similar_strings_lsh_portable(df: DataFrame, col: str,
                                 DD.portable_string_hash).alias("__vs")))
     # map-only signatures (array_min family over the in-row gram hashes):
     # the distinct() above is the only shuffle this side of the banding
-    sig = (base.select(F.col("value").alias("__id"),
-                       DD._portable_min_sig(num_hashes).alias("sig"))
-           .persist())
-    try:
-        cand = DD.minhash_candidates(sig, "__id", num_hashes, bands)
-        return (DD.minhash_similarity(sig, cand, "__id")
-                .filter(F.col("est_jaccard") >= threshold)
-                .select(F.col("id_a").alias("left_side"),
-                        F.col("id_b").alias("right_side"), "est_jaccard")
-                .localCheckpoint())
-    finally:
-        sig.unpersist()
+    sig = base.select(F.col("value").alias("__id"),
+                      DD._portable_min_sig(num_hashes).alias("sig"))
+    return (DD.minhash_pairs(sig, "__id", threshold, num_hashes, bands)
+            .select(F.col("id_a").alias("left_side"),
+                    F.col("id_b").alias("right_side"), "est_jaccard"))
 
 
 def similar_strings_lsh(df: DataFrame, col: str, jaccard_threshold: float = 0.5,

@@ -55,8 +55,9 @@ def get_spark(app_name: str = "dataqtor_spark", master: str | None = None) -> Sp
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """A DataFrame over ``rows`` (tuples in ``schema``'s field order)
-    built on the driver, handed to Spark as one Arrow table.
+    """A DataFrame over ``rows`` (tuples in ``schema``'s field order, or a
+    ``pyarrow.Table`` with one column per field, in that order) built on
+    the driver, handed to Spark as one Arrow table.
 
     ``schema`` is a ``StructType`` or a DDL string; the result's names,
     types and nullability are exactly ``schema``'s, and empty ``rows``
@@ -77,6 +78,9 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(
+            rows.rename_columns(arrow.names).cast(arrow), schema)
     cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.Table.from_arrays(
         [pa.array([_to_utc(v, f.dataType) for v in c]

@@ -500,6 +500,49 @@ def test_pq_codes_bounded_and_deterministic(tables):
     assert (sub2, books2) == (sub, books)
 
 
+def test_trainer_memo_keys_on_the_data(spark, tmp_path):
+    """A ``cache_key`` memo hit needs the same input files at the same size
+    and mtime: the parquet rewritten in place, under the same path and
+    key, trains anew on its new vectors."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "embeddings.parquet")
+
+    def write(shift):
+        pq.write_table(pa.table({
+            "vec_id": list(range(24)),
+            "embedding": [[float((i * 7 + shift * j) % 11) for j in range(4)]
+                          for i in range(24)]}), path)
+
+    def train(key):
+        emb = spark.read.parquet(path)
+        return (A.train_ivf_centroids_portable(emb, "vec_id", "embedding",
+                                               3, 2, cache_key=key),
+                A.train_pq_codebooks_portable(emb, "vec_id", "embedding", m=2,
+                                              ks=3, n_iter=1, cache_key=key))
+
+    write(0)
+    old = train(path)
+    write(5)
+    new = train(path)
+    assert new == train(None)
+    assert new != old
+
+
+def test_trainer_memo_is_a_bounded_lru(monkeypatch):
+    from collections import OrderedDict
+
+    monkeypatch.setattr(A, "_CENTROID_CACHE", OrderedDict())
+    for i in range(16):
+        A._memo_put((i,), i)
+    assert A._memo_get((0,)) == 0  # now the most recently used
+    A._memo_put((16,), 16)
+    assert len(A._CENTROID_CACHE) == 16
+    assert A._memo_get((1,)) is None
+    assert A._memo_get((0,)) == 0
+
+
 def test_pq_adc_finds_planted_near_duplicate(spark):
     from dataqtor_spark.operators import ann as ANN
 

@@ -84,6 +84,23 @@ def test_local_frame_matches_retired_form(spark, local_zone, schema, rows):
     assert _python_rdd(want)
 
 
+def test_local_frame_takes_an_arrow_table(spark):
+    """A ``pyarrow.Table`` is taken column by column in field order: its
+    names and Arrow types give way to the schema's."""
+    import pyarrow as pa
+
+    schema = "id string, n long, x double"
+    rows = [("İstanbul", 1, 0.5), ("ığdır", None, None)]
+    table = pa.table({"a": pa.array(["İstanbul", "ığdır"], pa.large_string()),
+                      "b": pa.array([1, None], pa.int32()),
+                      "c": [0.5, None]})
+    got = local_frame(spark, table, schema)
+    want = local_frame(spark, rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    assert not _python_rdd(got)
+
+
 def test_driver_built_results_have_no_python_worker(spark):
     from pyspark.sql import functions as F
 
@@ -95,6 +112,11 @@ def test_driver_built_results_have_no_python_worker(spark):
     comp = D.connected_components(pairs)
     assert dict(comp.collect()) == {i: i % 4 for i in range(12)}
     assert not _python_rdd(comp)
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "a b c d")],
+                                 "doc_id long, text string")
+    near = D.minhash_dedup_pairs(docs, "doc_id", "text")
+    assert near.collect() == [(1, 2, 1.0)]
+    assert not _python_rdd(near)
     points = spark.range(6).select(
         F.col("id").alias("vec_id"),
         F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"))

@@ -367,6 +367,91 @@ def test_connected_components_reads_pairs_once_above_bound(spark,
     assert seen.value == len(edges), seen.value
 
 
+_MH_DOCS = [(i, f"w{i % 7} w{i % 5} w{i % 3} the quick brown fox")
+            for i in range(40)]
+
+
+def test_minhash_pairs_job_budget(spark):
+    """Below the driver bound ``minhash_dedup_pairs`` is 2 jobs: one
+    fills the signature cache and counts it, one collects it as Arrow;
+    the result is a local relation, so the caller's collect runs none.
+    The collect does not grow with partitions: 4 and 8 partitions both
+    read 2.  One partition reads 4 because ``parallelize`` puts a
+    round-robin exchange under the signatures, and AQE runs its map
+    stage and the cache stage as jobs of their own."""
+    from dataqtor_spark.operators import dedup as D
+
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(_MH_DOCS, "doc_id long, text string")
+    counts = {}
+    for n, df in ((4, docs.repartition(4).localCheckpoint()),
+                  (8, docs.repartition(8).localCheckpoint()),
+                  (1, docs.coalesce(1))):
+        counts[n] = len(_jobs(sc, f"budget-minhash-{n}", lambda: D.minhash_dedup_pairs(
+            df, "doc_id", "text", threshold=0.5).collect()))
+    assert counts == {4: 2, 8: 2, 1: 4}, counts
+
+
+@pytest.mark.parametrize("bound", [None, 3])
+def test_minhash_pairs_reads_signatures_once(spark, monkeypatch, bound):
+    """The signature plan runs once below the driver bound and above it
+    (bound 3): the count, the collect and the distributed plan's banding,
+    cap count and two probes all read one cached table.  A counting UDF
+    under the signatures sees each doc once."""
+    from pyspark.sql import functions as F
+
+    from dataqtor_spark.operators import dedup as D
+
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    def tick(x):
+        seen.add(1)
+        return x
+
+    docs = (spark.createDataFrame(_MH_DOCS, "doc_id long, text string")
+            .repartition(4)
+            .select("doc_id", F.udf(tick, "string")("text").alias("text")))
+    if bound is not None:
+        monkeypatch.setattr(D, "_MH_DRIVER_DOCS_MAX", bound)
+    pairs = D.minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.5)
+    assert pairs.count() > 0
+    assert seen.value == len(_MH_DOCS), seen.value
+
+
+@pytest.mark.parametrize("id_type, edges_max, driven_want", [
+    ("long", 10, [False]), ("double", None, [])])
+def test_minhash_pairs_fall_back_to_the_plan(spark, monkeypatch, id_type,
+                                             edges_max, driven_want):
+    """Buckets that would expand more than ``_CC_DRIVER_EDGES_MAX`` pairs
+    send the call to the distributed plan before any pair is built, and
+    ids whose Arrow order may not be Spark's (double) never reach the
+    driver path; either way the rows are the distributed plan's."""
+    from dataqtor_spark.operators import dedup as D
+
+    docs = (spark.createDataFrame(_MH_DOCS, "doc_id long, text string")
+            .selectExpr(f"CAST(doc_id AS {id_type}) AS doc_id", "text"))
+    driven = []
+    real = D._driver_minhash_pairs
+
+    def spy(*a, **k):
+        out = real(*a, **k)
+        driven.append(out is not None)
+        return out
+
+    monkeypatch.setattr(D, "_driver_minhash_pairs", spy)
+    if edges_max is not None:
+        monkeypatch.setattr(D, "_CC_DRIVER_EDGES_MAX", edges_max)
+    got = D.minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.5)
+    assert driven == driven_want
+    monkeypatch.setattr(D, "_MH_DRIVER_DOCS_MAX", 0)
+    want = D.minhash_dedup_pairs(docs, "doc_id", "text", threshold=0.5)
+    assert driven == driven_want
+    assert len(want.collect()) > 10
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.schema == want.schema
+
+
 def test_ordered_prefix_job_budget(spark):
     from pyspark.sql import functions as F
 
