@@ -20,16 +20,14 @@ __version__ = "0.1.0"
 
 
 def clear_trainer_caches() -> None:
-    """Drop the module-level trainer memos: IVF/PQ centroid + codebook
-    tables (``operators.ann._CENTROID_CACHE``) and BPE merge tables
-    (``operators.textstats._BPE_TRAIN_CACHE``).
+    """Drop the trainer memo (``operators.ann._TRAINER_MEMO``): IVF/PQ
+    centroid + codebook tables and BPE merge tables.
 
-    Production never needs this — the memos exist precisely so serving
+    Production never needs this — the memo exists precisely so serving
     paths retrain at most once per process.  Benchmarks call it before a
     first-run timing so ``first_sec`` honestly includes training cost
     instead of replaying a warm memo (the round-13 driver bench read
     0.06x of the interleaved local medians because trainer caches plus a
     warm pass absorbed the real work into untimed code)."""
-    from dataqtor_spark.operators import ann, textstats
-    ann._CENTROID_CACHE.clear()
-    textstats._BPE_TRAIN_CACHE.clear()
+    from dataqtor_spark.operators import ann
+    ann._TRAINER_MEMO.clear()

@@ -254,9 +254,10 @@ def _nearest_centroid_ids(vec: Column, centers: list[list[float]], n: int) -> Co
     return F.transform(F.slice(ranked, 1, n), lambda s: s["cid"])
 
 
-# Trained centroids and codebooks of calls made with a ``cache_key``,
-# least recently used first; holds at most 16 entries (see _memo_put).
-_CENTROID_CACHE: OrderedDict = OrderedDict()
+# The trainer memo: centroids, codebooks and BPE merge tables
+# (``textstats.bpe_train``) of calls made with a ``cache_key``, least
+# recently used first; holds at most 16 entries (see _memo_put).
+_TRAINER_MEMO: OrderedDict = OrderedDict()
 
 
 def _memo_key(corpus: DataFrame, cache_key: str, *params) -> tuple:
@@ -278,17 +279,17 @@ def _memo_key(corpus: DataFrame, cache_key: str, *params) -> tuple:
 
 def _memo_get(key: tuple):
     try:
-        _CENTROID_CACHE.move_to_end(key)
-        return _CENTROID_CACHE[key]
+        _TRAINER_MEMO.move_to_end(key)
+        return _TRAINER_MEMO[key]
     except KeyError:  # never stored, or evicted by another thread
         return None
 
 
 def _memo_put(key: tuple, value) -> None:
-    _CENTROID_CACHE[key] = value
-    _CENTROID_CACHE.move_to_end(key)
-    while len(_CENTROID_CACHE) > 16:
-        _CENTROID_CACHE.popitem(last=False)
+    _TRAINER_MEMO[key] = value
+    _TRAINER_MEMO.move_to_end(key)
+    while len(_TRAINER_MEMO) > 16:
+        _TRAINER_MEMO.popitem(last=False)
 
 
 # ---------------------------------------------------------------------------

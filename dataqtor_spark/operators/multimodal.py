@@ -1,23 +1,28 @@
 """Multimodal column plumbing (north-star extension): image/audio/video as
 opaque ``binary`` columns with typed metadata.
 
-The image operators carry REAL decode tiers: PIL when importable (gated
-like the Excel source, since this container ships no codec libraries),
-then pure-stdlib paths for codec-less executors — PNG (zlib inflate +
-the five spec unfilters — decode AND nearest-neighbour resize), GIF
-(variable-width LZW decompressor + palette/interlace handling), BMP
-(palette/BGR raw rows), baseline JPEG (canonical huffman entropy decode
-+ dequant + separable IDCT, luma-only with chroma kept in sync) — then
-a deterministic sha-derived fake.  Audio decode is REAL for integer-PCM WAV
-(stdlib ``wave`` + numpy); video frame SAMPLING is real for MJPEG-in-AVI
-(stdlib RIFF demux); container METADATA (duration, track mix, rates) is
-real struct parsing for mp4/mp3/wav via ``probe_media_info``.  Only
-compressed A/V frame decode (mp3/mp4/h264…) stays behind the ffmpeg
-import boundary, documented out of scope.  Every tier is Spark-identical:
-the schema contract, Arrow-batched ``mapInPandas`` signatures, per-batch
-iteration shape, frame-explosion layout, and the pure-expression metadata
-path (size / sha256 / magic-byte sniffing) — so swapping a heavier codec
-in changes nothing else.
+Every decode op runs one per-payload ladder: stdlib, then fake.  The
+stdlib tier decodes for real with no codec library — PNG (zlib inflate
++ the five spec unfilters), GIF (variable-width LZW + palette/interlace
+handling), BMP (palette/BGR raw rows) and baseline JPEG (canonical
+huffman entropy decode + dequant + separable IDCT, luma-only with
+chroma kept in sync) for the image ops; integer-PCM WAV (stdlib
+``wave`` + numpy) for the audio ops; MJPEG-in-AVI frame sampling
+(stdlib RIFF demux) for video; mp4/mp3/wav container metadata (struct
+parsing) for ``probe_media_info``.  A payload that is not the op's
+container, or whose decode raises, gets the op's deterministic
+sha-derived fake row instead — for that row only, so a dirty corpus
+never fails the job.  ``use_codec=False`` gives the fake on every row
+(the oracle-checked queries pin it); ``None`` (the default) and
+``True`` give the stdlib tier.  Compressed A/V frame decode
+(mp3/mp4/h264…) stays out of scope.
+
+Which decoder a payload gets is a function of the payload alone:
+PNG, GIF, BMP and baseline JPEG decode for real on every executor, and
+every other image payload gets the fake on every executor.  There is
+deliberately no optional codec-library tier (such as Pillow): it would
+make one payload's row depend on which executor had the library
+installed, and nothing here can rely on one being there.
 
 Scale notes: payloads never shuffle — metadata extraction is a projection;
 decode is ``mapInPandas`` (Arrow batches, no per-row Python overhead);
@@ -27,20 +32,21 @@ handles explode without a join.
 
 from __future__ import annotations
 
-import functools
 import hashlib
+import math
+import sys
 from collections.abc import Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-def _pil_available() -> bool:
-    try:
-        import PIL.Image  # noqa: F401
-        return True
-    except ImportError:
-        return False
+# The mapInPandas closures below call this module's helpers on the
+# executors.  Pickled by value, those helpers travel inside the closure,
+# so a Python worker never imports ``dataqtor_spark``: the ops run
+# whatever the caller's working directory or the workers' sys.path.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -86,14 +92,51 @@ def attach_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
 # decode / feature-extract (mapInPandas, Arrow-batched)
 # ---------------------------------------------------------------------------
 
+def _per_payload(df: DataFrame, payload_col: str, id_col: str, schema: str,
+                 real, fake, use_codec: bool | None = None) -> DataFrame:
+    """The ladder every media op runs, stdlib then fake, as one
+    ``mapInPandas`` over ``(id_col, payload_col)``.
+
+    ``real(data)`` and ``fake(data)`` each return a list of row tuples
+    without the id, which is prepended here.  A payload gets ``fake``'s
+    rows, for that row only, when it is NULL (``data`` is None),
+    ``use_codec`` is False, ``real`` returns None (not the op's
+    container) or ``real`` raises (a corrupt or unsupported payload).
+    The output columns are the top-level names of the DDL ``schema``."""
+    names = [field.split()[0] for field in schema.split(",")]
+    if use_codec is not None and not use_codec:
+        real = None
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
+                data = None if payload is None else bytes(payload)
+                got = None
+                if real is not None and data is not None:
+                    try:
+                        got = real(data)
+                    except Exception:
+                        pass  # dirty payloads are the norm: fake below
+                rows.extend((mid, *r) for r in
+                            (fake(data) if got is None else got))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
+        run, schema=schema)
+
+
 IMAGE_FEATURES_SCHEMA = (
     "media_id long, width int, height int, mode string, feature array<float>"
 )
 
 
-def _fake_image_props(payload: bytes) -> tuple[int, int, str, list[float]]:
-    """DETERMINISTIC FAKE DECODE — replace with PIL.Image.open on a real
-    cluster.  Properties derive from a content digest so tests are stable."""
+def _fake_image_props(payload: bytes | None
+                      ) -> tuple[int, int, str, list[float]]:
+    """The image ops' fake tier: properties derive from a content digest,
+    so they are deterministic and the m02 DuckDB oracle replays them."""
     dig = hashlib.sha256(payload or b"").digest()
     width = 64 + dig[0] * 4
     height = 64 + dig[1] * 4
@@ -225,15 +268,6 @@ def _stdlib_png_resize(data: bytes, tw: int, th: int) -> bytes:
             line += src[sx * bpp:(sx + 1) * bpp]
         out.append(line)
     return _encode_png(tw, th, ctype_, out)
-
-
-def _stdlib_png_props(data: bytes) -> tuple[int, int, str, list[float]]:
-    """PNG → the decode_image_features contract: (w, h, mode, 16-dim
-    feature = 4×4 nearest-neighbour luminance thumbnail, normalized)."""
-    width, height, mode, lum = _decode_png(data)
-    feat = [lum[(ty * height) // 4][(tx * width) // 4] / 255.0
-            for ty in range(4) for tx in range(4)]
-    return width, height, mode, feat
 
 
 # ---------------------------------------------------------------------------
@@ -421,15 +455,12 @@ _JPEG_ZIGZAG = [
 ]
 
 
-@functools.lru_cache(maxsize=1)
-def _jpeg_idct_table() -> list[list[float]]:
-    """8-point DCT-III basis: C[u][x] = a(u)·cos((2x+1)uπ/16) — the
-    separable 2-D inverse transform is two passes over this table."""
-    import math
-
-    return [[(math.sqrt(0.125) if u == 0 else 0.5)
-             * math.cos((2 * x + 1) * u * math.pi / 16)
-             for x in range(8)] for u in range(8)]
+# 8-point DCT-III basis: C[u][x] = a(u)·cos((2x+1)uπ/16) — the separable
+# 2-D inverse transform is two passes over this table.  A plain constant,
+# so it pickles by value with the decoder (see the module's pickling note).
+_JPEG_IDCT = [[(math.sqrt(0.125) if u == 0 else 0.5)
+               * math.cos((2 * x + 1) * u * math.pi / 16)
+               for x in range(8)] for u in range(8)]
 
 
 def _jpeg_huff_table(counts: bytes, symbols: bytes) -> dict:
@@ -505,9 +536,8 @@ def _decode_jpeg(data: bytes) -> tuple[int, int, str, list[list[int]]]:
     rows, so chroma blocks are entropy-decoded purely to keep the bit
     stream in sync and then discarded, which also makes every chroma
     subsampling (4:4:4/4:2:2/4:2:0) free.  Progressive (SOF2) and
-    arithmetic-coded JPEGs raise — ffmpeg/PIL territory, and
-    :func:`_stdlib_decodable` pre-screens for SOF0 so the auto tier
-    falls through cleanly instead of erroring mid-batch."""
+    arithmetic-coded JPEGs raise, and :func:`_stdlib_decodable`
+    pre-screens for SOF0, so they get the image ops' fake tier."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     qt: dict[int, list[int]] = {}
@@ -584,7 +614,7 @@ def _jpeg_scan(data, pos, width, height, comps, scan, qt, huff_dc,
     y_id, y_h, y_v, y_tq = comps[0]
     yw, yh = mcux * y_h * 8, mcuy * y_v * 8
     plane = [[0] * yw for _ in range(yh)]
-    idct = _jpeg_idct_table()
+    idct = _JPEG_IDCT
     q_y = qt[y_tq]
     bits = _JpegBits(data, pos)
     pred = {cid: 0 for cid, _h, _v, _q in comps}
@@ -708,10 +738,9 @@ def _stdlib_image_props(data: bytes) -> tuple[int, int, str, list[float]]:
 
 def _stdlib_resize_any(data: bytes, tw: int, th: int) -> bytes:
     """Nearest-neighbour resize for any stdlib-decodable payload: PNG
-    keeps its native channels (:func:`_stdlib_png_resize`); GIF/BMP
+    keeps its native channels (:func:`_stdlib_png_resize`); GIF/BMP/JPEG
     resample the luma plane and re-encode as grayscale PNG (the
-    normalized thumbnail container, matching the PIL tier's PNG-out
-    contract)."""
+    normalized thumbnail container)."""
     if data.startswith(_PNG_SIG):
         return _stdlib_png_resize(data, tw, th)
     width, height, _mode, lum = _decode_image(data)
@@ -723,68 +752,21 @@ def _stdlib_resize_any(data: bytes, tw: int, th: int) -> bytes:
 def decode_image_features(df: DataFrame, payload_col: str = "payload",
                           id_col: str = "media_id",
                           use_codec: bool | None = None) -> DataFrame:
-    """Arrow-batched decode + feature extraction.
+    """Arrow-batched decode + feature extraction, stdlib then fake.
 
-    ``use_codec=None`` (default) picks the REAL decode tier per payload:
-    PIL when Pillow is importable; otherwise PNG/GIF/BMP/baseline-JPEG payloads still
-    decode for REAL via the stdlib tiers (``_decode_image`` — zlib
-    unfilter / LZW / raw rows, no codec library involved); everything
-    else falls to the deterministic sha-derived fake.  Pass True/False to force PIL-only/fake-only.  The
-    real branches decode each payload, read width/height/mode, and emit
-    a 16-dim feature (4×4 grayscale nearest-neighbour thumbnail,
-    normalized) — same output schema every tier, so the plumbing is
-    identical and codec availability only has to hold on the executors.
-    """
-    codec = _pil_available() if use_codec is None else use_codec
-    if codec and not _pil_available():
-        raise NotImplementedError(
-            "real codec path needs PIL (pip install pillow)")
+    The stdlib tier (``use_codec`` None or True) decodes PNG, GIF, BMP
+    and baseline-JPEG payloads for real (``_decode_image`` — zlib
+    unfilter / LZW / raw rows / huffman + IDCT) and emits their
+    width/height/mode plus a 16-dim feature (4×4 grayscale
+    nearest-neighbour thumbnail, normalized).  Every other payload, and
+    every payload under ``use_codec=False``, gets the deterministic
+    sha-derived fake — same output schema either way."""
+    def real(data):
+        return [_stdlib_image_props(data)] if _stdlib_decodable(data) else None
 
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        # availability re-checked HERE (executor side) only in AUTO mode
-        # (use_codec=None): a heterogeneous cluster where an executor
-        # lacks Pillow degrades to the fake instead of ImportError-ing
-        # the task.  An EXPLICIT use_codec=True must stay loud — silently
-        # fabricating features on an under-provisioned executor (and
-        # diverging between executors) is worse than failing.
-        have_pil = codec and (_pil_available() if use_codec is None
-                              else True)
-        if have_pil:
-            import io
-
-            from PIL import Image  # raises on forced-True without PIL
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if have_pil:
-                    # per-row fallback: a null/corrupt/non-image payload
-                    # must not fail the job — dirty corpora are the norm
-                    try:
-                        img = Image.open(io.BytesIO(data))
-                        thumb = img.convert("L").resize(
-                            (4, 4), getattr(Image, "NEAREST", 0))
-                        rows.append((mid, img.width, img.height, img.mode,
-                                     [p / 255.0 for p in thumb.tobytes()]))
-                        continue
-                    except Exception:
-                        pass
-                elif use_codec is None and _stdlib_decodable(data):
-                    # codec-less executor, auto mode: PNG/GIF/BMP/JPEG still
-                    # decode for REAL via the stdlib tiers
-                    try:
-                        rows.append((mid, *_stdlib_image_props(data)))
-                        continue
-                    except Exception:
-                        pass
-                rows.append((mid, *_fake_image_props(data)))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height",
-                                              "mode", "feature"])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        decode, schema=IMAGE_FEATURES_SCHEMA)
+    return _per_payload(df, payload_col, id_col, IMAGE_FEATURES_SCHEMA,
+                        real, lambda data: [_fake_image_props(data)],
+                        use_codec)
 
 
 RESIZED_SCHEMA = "media_id long, width int, height int, payload binary"
@@ -793,83 +775,21 @@ RESIZED_SCHEMA = "media_id long, width int, height int, payload binary"
 def resize_images(df: DataFrame, target: tuple[int, int] = (224, 224),
                   payload_col: str = "payload", id_col: str = "media_id",
                   use_codec: bool | None = None) -> DataFrame:
-    """Resize: with PIL available (or ``use_codec=True``) payloads are
-    decoded → resampled to ``target`` → re-encoded as PNG inside the same
-    Arrow batch iterator; on codec-less executors in auto mode,
-    PNG/GIF/BMP/baseline-JPEG payloads still resize for REAL (stdlib decode →
+    """Resize to ``target``, stdlib then fake.  The stdlib tier
+    (``use_codec`` None or True) resizes PNG/GIF/BMP/baseline-JPEG
+    payloads for real inside the Arrow batch iterator (stdlib decode →
     nearest-neighbour → filter-0 PNG re-encode,
-    :func:`_stdlib_resize_any`); anything else passes through with the
-    declared target shape.  Identical schema every tier."""
+    :func:`_stdlib_resize_any`).  The fake tier — every other payload,
+    and every payload under ``use_codec=False`` — passes the bytes
+    through with the declared target shape; a NULL payload stays NULL."""
     tw, th = target
-    codec = _pil_available() if use_codec is None else use_codec
-    if codec and not _pil_available():
-        raise NotImplementedError(
-            "real codec path needs PIL (pip install pillow)")
 
-    def resize(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def real(data):
+        return ([(tw, th, _stdlib_resize_any(data, tw, th))]
+                if _stdlib_decodable(data) else None)
 
-        # executor-side re-check in AUTO mode only; forced True stays
-        # loud (see decode_image_features)
-        have_pil = codec and (_pil_available() if use_codec is None
-                              else True)
-        if have_pil:
-            import io
-
-            from PIL import Image
-        for pdf in batches:
-            if have_pil:
-                out, ws, hs = [], [], []
-                for payload in pdf[payload_col]:
-                    # undecodable payloads pass through untouched rather
-                    # than failing the job — with NULL width/height so the
-                    # metadata never claims target dims for bytes that
-                    # were not actually resized (NULL payload stays NULL)
-                    try:
-                        data = bytes(payload)
-                        img = Image.open(io.BytesIO(data)).resize(
-                            (tw, th), getattr(Image, "NEAREST", 0))
-                        buf = io.BytesIO()
-                        img.save(buf, format="PNG")
-                        out.append(buf.getvalue())
-                        ws.append(tw)
-                        hs.append(th)
-                    except Exception:
-                        out.append(None if payload is None else
-                                   bytes(payload))
-                        ws.append(None)
-                        hs.append(None)
-                yield pd.DataFrame({
-                    "media_id": pdf[id_col],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "payload": out,
-                })
-            else:
-                out, ws, hs = [], [], []
-                for payload in pdf[payload_col]:
-                    data = bytes(payload) if payload is not None else None
-                    if (use_codec is None and data
-                            and _stdlib_decodable(data)):
-                        try:
-                            out.append(_stdlib_resize_any(data, tw, th))
-                            ws.append(tw)
-                            hs.append(th)
-                            continue
-                        except Exception:
-                            pass
-                    out.append(data)
-                    ws.append(tw)
-                    hs.append(th)
-                yield pd.DataFrame({
-                    "media_id": pdf[id_col],
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "payload": out,
-                })
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        resize, schema=RESIZED_SCHEMA)
+    return _per_payload(df, payload_col, id_col, RESIZED_SCHEMA, real,
+                        lambda data: [(tw, th, data)], use_codec)
 
 
 # ---------------------------------------------------------------------------
@@ -917,20 +837,6 @@ def _phash_bits(lum: list[list[int]]) -> int:
     return _to_signed64(v)
 
 
-def _gray_grid_pil(img, w: int, h: int) -> list[list[int]]:
-    from PIL import Image
-
-    g = img.convert("L").resize((w, h), getattr(Image, "NEAREST", 0))
-    raw = list(g.tobytes())
-    return [raw[y * w:(y + 1) * w] for y in range(h)]
-
-
-def _gray_grid_png(data: bytes, w: int, h: int) -> list[list[int]]:
-    width, height, _mode, lum = _decode_png(data)
-    return [[lum[(ty * height) // h][(tx * width) // w]
-             for tx in range(w)] for ty in range(h)]
-
-
 def _gray_grid_stdlib(data: bytes, w: int, h: int) -> list[list[int]]:
     """Any stdlib-decodable payload (PNG/GIF/BMP/baseline JPEG) → w×h nearest-neighbour
     luminance grid for the perceptual hashers."""
@@ -939,7 +845,7 @@ def _gray_grid_stdlib(data: bytes, w: int, h: int) -> list[list[int]]:
              for tx in range(w)] for ty in range(h)]
 
 
-def _fake_phash(payload: bytes) -> int:
+def _fake_phash(payload: bytes | None) -> int:
     """DETERMINISTIC FAKE tier: 56-bit value from sha256 digest bytes
     1-7 (big-endian) — positive, SQL-replayable byte arithmetic on the
     hex digest (the m02 oracle device), shared bit-for-bit with the
@@ -954,54 +860,25 @@ def image_phash(df: DataFrame, payload_col: str = "payload",
     """Perceptual 64-bit image hash per payload → ``(media_id, phash)``.
 
     ``method="dhash"`` (gradient sign over a 9×8 downsample) or
-    ``"phash"`` (DCT low-frequency signs over 32×32).  Decode tiers
-    mirror :func:`decode_image_features`: PIL when importable, REAL
-    stdlib PNG/GIF/BMP/baseline-JPEG decode otherwise (auto mode), deterministic
-    sha-derived fake last — identical schema every tier, so the banding join
-    downstream never cares which executor had a codec.  Feed the output
-    to :func:`phash_near_pairs` for hamming-banded near-duplicate pairs
-    (the image sibling of text SimHash dedup, ``dedup.simhash_near_pairs``)."""
+    ``"phash"`` (DCT low-frequency signs over 32×32).  Stdlib then fake,
+    as :func:`decode_image_features`: PNG/GIF/BMP/baseline-JPEG payloads
+    hash their real pixels (``use_codec`` None or True), everything else
+    gets the sha-derived fake (:func:`_fake_phash`) — identical schema
+    either way, so the banding join downstream never cares which tier a
+    row came from.  Feed the output to :func:`phash_near_pairs` for
+    hamming-banded near-duplicate pairs (the image sibling of text
+    SimHash dedup, ``dedup.simhash_near_pairs``)."""
     if method not in ("dhash", "phash"):
         raise ValueError(f"method must be dhash|phash, got {method!r}")
     gw, gh, hasher = ((9, 8, _dhash_bits) if method == "dhash"
                       else (32, 32, _phash_bits))
-    codec = _pil_available() if use_codec is None else use_codec
-    if codec and not _pil_available():
-        raise NotImplementedError(
-            "real codec path needs PIL (pip install pillow)")
 
-    def compute(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def real(data):
+        return ([(hasher(_gray_grid_stdlib(data, gw, gh)),)]
+                if _stdlib_decodable(data) else None)
 
-        have_pil = codec and (_pil_available() if use_codec is None
-                              else True)
-        if have_pil:
-            import io
-
-            from PIL import Image
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if have_pil:
-                    try:
-                        rows.append((mid, hasher(_gray_grid_pil(
-                            Image.open(io.BytesIO(data)), gw, gh))))
-                        continue
-                    except Exception:
-                        pass
-                elif use_codec is None and _stdlib_decodable(data):
-                    try:
-                        rows.append((mid, hasher(
-                            _gray_grid_stdlib(data, gw, gh))))
-                        continue
-                    except Exception:
-                        pass
-                rows.append((mid, _fake_phash(data)))
-            yield pd.DataFrame(rows, columns=["media_id", "phash"])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        compute, schema=PHASH_SCHEMA)
+    return _per_payload(df, payload_col, id_col, PHASH_SCHEMA, real,
+                        lambda data: [(_fake_phash(data),)], use_codec)
 
 
 def phash_near_pairs(sig: DataFrame, id_col: str = "media_id",
@@ -1071,56 +948,34 @@ def _avi_mjpeg_frames(data: bytes) -> tuple[int, list[bytes]]:
 def sample_video_frames(df: DataFrame, every_ms: int = 1000, max_frames: int = 8,
                         payload_col: str = "payload", id_col: str = "media_id",
                         use_codec: bool | None = None) -> DataFrame:
-    """Frame sampling: one input row → N frame rows, emitted inside the
-    batch iterator (no join/explode shuffle).
+    """Frame sampling, stdlib then fake: one input row → N frame rows,
+    emitted inside the batch iterator (no join/explode shuffle).
 
-    The REAL branch (``use_codec=True``, or None with an AVI payload)
-    demuxes MJPEG-in-AVI with a stdlib RIFF walker — the sampled frames
-    are the container's literal JPEG chunks, timed by the ``avih`` frame
-    clock and decimated to one frame per ``every_ms`` (≤ ``max_frames``).
-    No ffmpeg: container demux is byte arithmetic, and anything that
-    isn't an extractable AVI falls back per-row to the deterministic
-    sha-derived fake (``use_codec=False`` forces the fake everywhere —
-    the oracle-checked queries pin it).  Like the audio path (and unlike
-    a missing library, which the image ops raise on), ``use_codec=True``
-    treats an undemuxable PAYLOAD as a data problem, not an environment
-    problem: MP4/MKV/corrupt rows degrade per-row to the fake rather
-    than failing the job.  Compressed non-MJPEG codecs inside AVI still
-    come out as their raw chunk bytes: sampling is codec-agnostic,
-    decode is downstream."""
-    codec = True if use_codec is None else use_codec
+    The stdlib tier (``use_codec`` None or True) demuxes MJPEG-in-AVI
+    with a stdlib RIFF walker — the sampled frames are the container's
+    literal JPEG chunks, timed by the ``avih`` frame clock and decimated
+    to one frame per ``every_ms`` (≤ ``max_frames``).  No ffmpeg:
+    container demux is byte arithmetic.  Any payload that isn't an
+    extractable AVI (MP4/MKV/corrupt rows), and every payload under
+    ``use_codec=False`` (the oracle-checked queries pin it), gets the
+    deterministic sha-derived fake frames.  Compressed non-MJPEG codecs
+    inside AVI still come out as their raw chunk bytes: sampling is
+    codec-agnostic, decode is downstream."""
+    def real(data):
+        if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
+            return None
+        usec, frames = _avi_mjpeg_frames(data)
+        step = max(1, round(every_ms * 1000 / usec))
+        return [(j, src * usec // 1000, frames[src]) for j, src in
+                enumerate(range(0, len(frames), step)[:max_frames])]
 
-    def sample(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def fake(data):
+        dig = hashlib.sha256(data or b"").digest()
+        return [(i, i * every_ms, dig + i.to_bytes(4, "big"))
+                for i in range(1 + dig[3] % max_frames)]
 
-        for pdf in batches:
-            out = {"media_id": [], "frame_index": [], "ts_ms": [], "frame": []}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if codec and data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-                    try:
-                        usec, frames = _avi_mjpeg_frames(data)
-                        step = max(1, round(every_ms * 1000 / usec))
-                        for j, src in enumerate(
-                                range(0, len(frames), step)[:max_frames]):
-                            out["media_id"].append(mid)
-                            out["frame_index"].append(j)
-                            out["ts_ms"].append(src * usec // 1000)
-                            out["frame"].append(frames[src])
-                        continue
-                    except Exception:
-                        pass  # undemuxable container: per-row fake below
-                dig = hashlib.sha256(data).digest()
-                n = 1 + dig[3] % max_frames
-                for i in range(n):
-                    out["media_id"].append(mid)
-                    out["frame_index"].append(i)
-                    out["ts_ms"].append(i * every_ms)
-                    out["frame"].append(dig + i.to_bytes(4, "big"))
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        sample, schema=FRAMES_SCHEMA)
+    return _per_payload(df, payload_col, id_col, FRAMES_SCHEMA, real, fake,
+                        use_codec)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -1128,87 +983,10 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def extract_audio_features(df: DataFrame, payload_col: str = "payload",
-                           id_col: str = "media_id",
-                           use_codec: bool | None = None) -> DataFrame:
-    """Audio decode + feature extraction — same Arrow-batched contract as
-    :func:`decode_image_features`.
-
-    The REAL branch (``use_codec=True``, or None with a WAV payload)
-    decodes integer-PCM WAV containers with stdlib ``wave`` + numpy (no
-    external codec needed): duration from frames/rate, vectorized RMS
-    over the normalized samples.  Payloads that aren't RIFF/WAVE fall
-    back per-row to the deterministic sha-derived fake — compressed
-    formats (mp3/flac/ogg) would need soundfile/ffmpeg, and that import
-    boundary is this same function.  ``use_codec=False`` forces the fake
-    everywhere (the oracle-checked queries pin it: their SQL replays the
-    sha recipe)."""
-    codec = True if use_codec is None else use_codec
-
-    def _fake(mid, data):
-        dig = hashlib.sha256(data).digest()
-        duration = 500 + int.from_bytes(dig[4:6], "big")  # 0.5–66 s
-        rate = [8000, 16000, 22050, 44100, 48000][dig[6] % 5]
-        channels = 1 + dig[7] % 2
-        rms = dig[8] / 255.0
-        return (mid, duration, rate, channels, rms)
-
-    def _wav(mid, data):
-        import io
-        import wave
-
-        import numpy as np
-
-        with wave.open(io.BytesIO(data)) as w:
-            rate, channels = w.getframerate(), w.getnchannels()
-            width, n_frames = w.getsampwidth(), w.getnframes()
-            raw = w.readframes(n_frames)
-        if width == 2:
-            x = np.frombuffer(raw, "<i2").astype("float64") / 32768.0
-        elif width == 1:  # 8-bit WAV is unsigned
-            x = (np.frombuffer(raw, "u1").astype("float64") - 128.0) / 128.0
-        elif width == 4:
-            x = np.frombuffer(raw, "<i4").astype("float64") / 2147483648.0
-        else:
-            raise ValueError(f"unsupported PCM width {width}")
-        rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
-        return (mid, int(n_frames * 1000 / rate), rate, channels, rms)
-
-    def extract(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if codec and data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-                    # the sniff only proves the container: compressed
-                    # (mu-law/ADPCM), truncated, or odd-width WAVs raise
-                    # in wave/numpy — fall back per-row, don't kill the job
-                    try:
-                        rows.append(_wav(mid, data))
-                    except Exception:
-                        rows.append(_fake(mid, data))
-                else:
-                    rows.append(_fake(mid, data))
-            yield pd.DataFrame(rows, columns=["media_id", "duration_ms",
-                                              "sample_rate", "n_channels", "rms"])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        extract, schema=AUDIO_FEATURES_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# perceptual audio fingerprinting (near-duplicate audio detection)
-# ---------------------------------------------------------------------------
-
-AUDIO_FP_SCHEMA = "media_id long, afp long"
-
-
-def _wav_samples(data: bytes):
-    """Integer-PCM WAV → (mono float64 samples in [-1, 1), sample rate)
-    via stdlib ``wave`` + numpy — the decode half shared by the
-    fingerprinter; multi-channel payloads are mean-downmixed."""
+def _wav_pcm(data: bytes):
+    """Integer-PCM WAV → (interleaved float64 samples in [-1, 1), sample
+    rate, channels, frames) via stdlib ``wave`` + numpy — the decode
+    half shared by the audio features and the fingerprinter."""
     import io
     import wave
 
@@ -1226,6 +1004,57 @@ def _wav_samples(data: bytes):
         x = np.frombuffer(raw, "<i4").astype("float64") / 2147483648.0
     else:
         raise ValueError(f"unsupported PCM width {width}")
+    return x, rate, channels, n_frames
+
+
+def _is_wav(data: bytes) -> bool:
+    return data[:4] == b"RIFF" and data[8:12] == b"WAVE"
+
+
+def extract_audio_features(df: DataFrame, payload_col: str = "payload",
+                           id_col: str = "media_id",
+                           use_codec: bool | None = None) -> DataFrame:
+    """Audio decode + feature extraction, stdlib then fake — the same
+    Arrow-batched contract as :func:`decode_image_features`.
+
+    The stdlib tier (``use_codec`` None or True) decodes integer-PCM WAV
+    containers with stdlib ``wave`` + numpy: duration from frames/rate,
+    vectorized RMS over the normalized samples.  Payloads that aren't
+    RIFF/WAVE, or whose decode raises (mu-law/ADPCM, truncated, odd
+    widths), get the deterministic sha-derived fake — compressed formats
+    (mp3/flac/ogg) would need soundfile/ffmpeg.  ``use_codec=False``
+    gives the fake everywhere (the oracle-checked queries pin it: their
+    SQL replays the sha recipe)."""
+    def real(data):
+        if not _is_wav(data):
+            return None
+        import numpy as np
+
+        x, rate, channels, n_frames = _wav_pcm(data)
+        rms = float(np.sqrt(np.mean(x * x))) if x.size else 0.0
+        return [(int(n_frames * 1000 / rate), rate, channels, rms)]
+
+    def fake(data):
+        dig = hashlib.sha256(data or b"").digest()
+        return [(500 + int.from_bytes(dig[4:6], "big"),  # 0.5–66 s
+                 [8000, 16000, 22050, 44100, 48000][dig[6] % 5],
+                 1 + dig[7] % 2, dig[8] / 255.0)]
+
+    return _per_payload(df, payload_col, id_col, AUDIO_FEATURES_SCHEMA, real,
+                        fake, use_codec)
+
+
+# ---------------------------------------------------------------------------
+# perceptual audio fingerprinting (near-duplicate audio detection)
+# ---------------------------------------------------------------------------
+
+AUDIO_FP_SCHEMA = "media_id long, afp long"
+
+
+def _wav_samples(data: bytes):
+    """Integer-PCM WAV → (mono float64 samples in [-1, 1), sample rate):
+    :func:`_wav_pcm` with multi-channel payloads mean-downmixed."""
+    x, rate, channels, _n_frames = _wav_pcm(data)
     if channels > 1:
         x = x[:(x.size // channels) * channels]
         x = x.reshape(-1, channels).mean(axis=1)
@@ -1263,36 +1092,23 @@ def audio_fingerprint(df: DataFrame, payload_col: str = "payload",
                       id_col: str = "media_id",
                       use_codec: bool | None = None) -> DataFrame:
     """64-bit perceptual audio fingerprint per payload →
-    ``(media_id, afp)``.
+    ``(media_id, afp)``, stdlib then fake.
 
-    Real tier: integer-PCM WAV decodes with stdlib ``wave`` + numpy and
-    hashes via :func:`_afp_bits` (9×8 time×band spectral-gradient
-    signs); compressed codecs (mp3/flac/ogg) would need
-    soundfile/ffmpeg and fall to the deterministic sha-derived fake,
-    as does ``use_codec=False`` (the oracle-pinned tier, same 56-bit
-    sha recipe as :func:`_fake_phash` so the m06 DuckDB oracle replays
-    it).  Feed to :func:`afp_near_pairs` for near-duplicate pairs —
-    payloads never shuffle, 8 bytes per track do."""
-    codec = True if use_codec is None else use_codec
+    The stdlib tier (``use_codec`` None or True): integer-PCM WAV
+    decodes with stdlib ``wave`` + numpy and hashes via
+    :func:`_afp_bits` (9×8 time×band spectral-gradient signs).
+    Compressed codecs (mp3/flac/ogg) would need soundfile/ffmpeg and get
+    the deterministic sha-derived fake, as does every payload under
+    ``use_codec=False`` (the oracle-pinned tier, same 56-bit sha recipe
+    as :func:`_fake_phash` so the m06 DuckDB oracle replays it).  Feed
+    to :func:`afp_near_pairs` for near-duplicate pairs — payloads never
+    shuffle, 8 bytes per track do."""
+    def real(data):
+        return ([(_afp_bits(_wav_samples(data)[0]),)] if _is_wav(data)
+                else None)
 
-    def compute(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                if codec and data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-                    try:
-                        rows.append((mid, _afp_bits(_wav_samples(data)[0])))
-                        continue
-                    except Exception:
-                        pass
-                rows.append((mid, _fake_phash(data)))
-            yield pd.DataFrame(rows, columns=["media_id", "afp"])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        compute, schema=AUDIO_FP_SCHEMA)
+    return _per_payload(df, payload_col, id_col, AUDIO_FP_SCHEMA, real,
+                        lambda data: [(_fake_phash(data),)], use_codec)
 
 
 def afp_near_pairs(sig: DataFrame, id_col: str = "media_id",
@@ -1452,33 +1268,22 @@ def _probe_wav(data: bytes) -> tuple:
 
 def probe_media_info(df: DataFrame, payload_col: str = "payload",
                      id_col: str = "media_id") -> DataFrame:
-    """Typed container metadata for mp4/mp3/wav payloads — REAL parsing
-    of the container structures (boxes / frame headers / RIFF chunks),
-    which unlike frame decode needs no codec library anywhere.  Unknown
-    or malformed payloads yield a NULL-container row instead of failing
-    the job.  Arrow-batched ``mapInPandas``; payloads never shuffle."""
-    def probe(batches: Iterator) -> Iterator:
-        import pandas as pd
+    """Typed container metadata for mp4/mp3/wav payloads, stdlib then
+    fake — REAL parsing of the container structures (boxes / frame
+    headers / RIFF chunks), which unlike frame decode needs no codec
+    library anywhere.  The fake tier is a NULL-container row: unknown or
+    malformed payloads yield it instead of failing the job.
+    Arrow-batched ``mapInPandas``; payloads never shuffle."""
+    def real(data):
+        for probe in (_probe_wav, _probe_mp4, _probe_mp3):
+            try:
+                return [probe(data)]
+            except Exception:
+                continue
+        return None
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload) if payload is not None else b""
-                got = None
-                for fn in (_probe_wav, _probe_mp4, _probe_mp3):
-                    try:
-                        got = fn(data)
-                        break
-                    except Exception:
-                        continue
-                rows.append((mid, *(got if got else
-                                    (None, None, None, None, None, None))))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "container", "duration_ms", "n_tracks",
-                "track_types", "sample_rate", "bit_rate"])
-
-    return df.select(F.col(id_col), F.col(payload_col)).mapInPandas(
-        probe, schema=MEDIA_INFO_SCHEMA)
+    return _per_payload(df, payload_col, id_col, MEDIA_INFO_SCHEMA, real,
+                        lambda data: [(None,) * 6])
 
 
 def phash_bands(sig_col: Column) -> Column:

@@ -2008,21 +2008,6 @@ def _bpe_train_driver(vocab: list, rounds: int) -> list[dict]:
     return merges
 
 
-# trained merge tables per cache key — the ann trainer-cache device:
-# training is the OFFLINE step by contract, so serving-path consumers
-# (bpe03 token counts) pass a key and retrain once per process while
-# bpe02 (the training benchmark itself) never passes one.  Only the
-# DRIVER-SIDE merges list is memoized (a live DataFrame would outlive
-# its SparkSession); the segmented-vocabulary plan is rebuilt from the
-# caller's CURRENT frame, which is also the apply-trained-tokenizer-to-
-# new-data semantic.  The memo assumes the data behind a cache_key is
-# immutable for the process lifetime (callers key on the corpus path;
-# regenerating the files under that path in-process would serve stale
-# merges) — benchmarks reset it via
-# ``dataqtor_spark.clear_trainer_caches``.
-_BPE_TRAIN_CACHE: dict = {}
-
-
 def _bpe_words_from_merges(df: DataFrame, merges: list, text_col: str,
                            word_pattern: str) -> DataFrame:
     words = (bpe_word_counts(df, text_col, word_pattern)
@@ -2056,11 +2041,24 @@ def bpe_train(df: DataFrame, text_col: str = "text", rounds: int = 8,
     re-aggregation after round 0.  The merge itself is a
     literal-replace column rewrite, no shuffle.  No session conf is
     mutated (the r15 AQE toggle is gone), so concurrently-planned
-    queries are unaffected."""
+    queries are unaffected.
+
+    With a ``cache_key``, the merge table is memoized in the ann
+    trainers' LRU (``ann._memo_key``): training is the offline step by
+    contract, so serving-path consumers (bpe03 token counts) pass a key
+    and retrain only when ``df``'s input files change in size or mtime,
+    while bpe02 (the training benchmark itself) never passes one.  Only
+    the driver-side merges list is memoized (a live DataFrame would
+    outlive its SparkSession); the segmented-vocabulary plan is rebuilt
+    from the caller's current frame."""
     memo_key = None
     if cache_key is not None:
-        memo_key = (cache_key, text_col, rounds, word_pattern)
-        hit = _BPE_TRAIN_CACHE.get(memo_key)
+        # imported here, not at module import: dedup imports this module
+        from dataqtor_spark.operators.ann import _memo_get, _memo_key, _memo_put
+
+        memo_key = _memo_key(df, cache_key, "bpe", text_col, rounds,
+                             word_pattern)
+        hit = _memo_get(memo_key)
         if hit is not None:
             return hit, _bpe_words_from_merges(df, hit, text_col,
                                                word_pattern)
@@ -2103,7 +2101,7 @@ def bpe_train(df: DataFrame, text_col: str = "text", rounds: int = 8,
     finally:
         cached.unpersist()
     if memo_key is not None:
-        _BPE_TRAIN_CACHE[memo_key] = merges
+        _memo_put(memo_key, merges)
     return merges, words
 
 

@@ -1701,7 +1701,7 @@ def m02_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("media_id"),
         F.encode(F.col("text"), "UTF-8").alias("payload"))
     # the oracle replays the sha-derived fake decode, so pin the fake path
-    # even on a machine where PIL is installed
+    # (the default would decode any PNG/GIF/BMP/JPEG payload for real)
     return MM.decode_image_features(docs, use_codec=False).drop("feature")
 
 
@@ -9296,8 +9296,8 @@ def s16_sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- m04 — perceptual image near-duplicate pairs (pHash + hamming banding) --
 # The image sibling of d04 SimHash dedup: multimodal.image_phash computes a
-# 64-bit perceptual hash per payload (PIL / stdlib-PNG / sha-derived fake
-# tiers), multimodal.phash_near_pairs bands it into 4×16-bit chunks for a
+# 64-bit perceptual hash per payload (stdlib, then the sha-derived fake),
+# multimodal.phash_near_pairs bands it into 4×16-bit chunks for a
 # bucket equi-join + exact xor/bit_count verify.  The registry query pins
 # the fake tier (the m02 oracle device: 56-bit hash from sha256 bytes 1-7)
 # and PLANTS a hamming-1 neighbour per doc (bit doc_id%56 flipped), so the
@@ -9438,14 +9438,11 @@ def bpe03_tokenizer_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality-tested in pytest)."""
     docs = _t(spark, sf_dir, "documents")
     # serving path: the tokenizer is an offline artifact — train once per
-    # process per sf_dir (the ann06 trainer-cache contract; bpe02 stays
-    # the honest training benchmark).  The corpus fingerprint in the key
-    # makes in-process regeneration of the parquet a cache MISS instead
-    # of silently serving a tokenizer trained on the old bytes.
-    _merges, words = TX.bpe_train(
-        docs, rounds=_BPE_ROUNDS,
-        cache_key=f"bpe03:{sf_dir}:"
-                  f"{_corpus_fingerprint(f'{sf_dir}/documents.parquet')}")
+    # process per corpus (the ann06 trainer-memo contract; bpe02 stays
+    # the honest training benchmark).  The memo keys on the parquet's
+    # files, so regenerating it in process trains anew.
+    _merges, words = TX.bpe_train(docs, rounds=_BPE_ROUNDS,
+                                  cache_key=f"bpe03:{sf_dir}")
     n_sub = F.size(F.filter(F.split(F.col("seq"), " "),
                             lambda x: x != "")).cast("long")
     wl = words.select(F.col("word"), n_sub.alias("n_sub"))

@@ -28,11 +28,18 @@ from __future__ import annotations
 
 import io
 import re
+import sys
 import zipfile
 from xml.etree import ElementTree as ET
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# ``read_excel_distributed``'s mapInPandas function calls the parser
+# below on the executors; pickled by value, it needs no import of
+# ``dataqtor_spark`` there, whatever the workers' cwd or sys.path.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 

@@ -530,15 +530,40 @@ def test_trainer_memo_keys_on_the_data(spark, tmp_path):
     assert new != old
 
 
+def test_bpe_memo_keys_on_the_data(spark, tmp_path):
+    """``bpe_train``'s ``cache_key`` memo keys on the data like the ann
+    trainers': the corpus parquet rewritten in place, under the same path
+    and key, trains anew on its new text."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "documents.parquet")
+
+    def write(text):
+        pq.write_table(pa.table({"doc_id": list(range(6)),
+                                 "text": [text] * 6}), path)
+
+    def train(key):
+        return T.bpe_train(spark.read.parquet(path), rounds=3,
+                           cache_key=key)[0]
+
+    write("aa bb cc aa bb")
+    old = train(path)
+    write("zzz yyy zzz xyz yy")
+    new = train(path)
+    assert new == train(None)
+    assert new != old
+
+
 def test_trainer_memo_is_a_bounded_lru(monkeypatch):
     from collections import OrderedDict
 
-    monkeypatch.setattr(A, "_CENTROID_CACHE", OrderedDict())
+    monkeypatch.setattr(A, "_TRAINER_MEMO", OrderedDict())
     for i in range(16):
         A._memo_put((i,), i)
     assert A._memo_get((0,)) == 0  # now the most recently used
     A._memo_put((16,), 16)
-    assert len(A._CENTROID_CACHE) == 16
+    assert len(A._TRAINER_MEMO) == 16
     assert A._memo_get((1,)) is None
     assert A._memo_get((0,)) == 0
 

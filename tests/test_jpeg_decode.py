@@ -295,13 +295,10 @@ def test_dispatch_and_decodable_screen():
 
 def test_m02_real_path_decodes_jpeg_without_pil(spark):
     """decode_image_features' AUTO tier decodes a baseline JPEG for real
-    (PIL is absent from this container): true dimensions, mode L, and a
-    thumbnail feature that tracks the actual luminance gradient."""
+    with no codec library: true dimensions, mode L, and a thumbnail
+    feature that tracks the actual luminance gradient."""
     from dataqtor_spark.operators import multimodal as MM
 
-    if MM._pil_available():
-        pytest.skip("container has PIL; the stdlib-tier assertion below "
-                    "is exercised by the no-PIL CI flavor")
     src = _gradient(32, 32, lambda x, y: min(255, 8 * y))
     df = spark.createDataFrame([(1, bytearray(encode_jpeg(src)))],
                                "media_id long, payload binary")

@@ -33,8 +33,7 @@ def test_media_metadata_expressions(spark):
 
 
 def test_decode_image_features_plumbing(spark):
-    # use_codec=False: text payloads aren't decodable images, so this
-    # exercises the deterministic fake path regardless of PIL presence
+    # use_codec=False: the deterministic fake path on every row
     df = _media_df(spark).limit(20)
     out = MM.decode_image_features(df, use_codec=False)
     rows = out.collect()
@@ -51,8 +50,7 @@ def test_decode_image_features_plumbing(spark):
 
 
 def _tiny_png(width, height, rgb):
-    """A valid single-color RGB PNG built with stdlib only (zlib+struct),
-    so the codec-gated tests need PIL only for the DECODE side."""
+    """A valid single-color RGB PNG built with stdlib only (zlib+struct)."""
     import struct
     import zlib
 
@@ -67,8 +65,7 @@ def _tiny_png(width, height, rgb):
             + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
 
 
-@pytest.mark.skipif(not MM._pil_available(), reason="PIL not installed")
-def test_real_image_decode_via_pil(spark):
+def test_real_image_decode_on_the_stdlib_tier(spark):
     # real tiny PNGs through the same schema contract as the fake path
     imgs = spark.createDataFrame(
         [(1, bytearray(_tiny_png(6, 4, (255, 0, 0)))),
@@ -147,7 +144,6 @@ def test_real_wav_decode(spark):
     assert rows[3] == fake[3]
 
 
-@pytest.mark.skipif(not MM._pil_available(), reason="PIL not installed")
 def test_dirty_payloads_fall_back_instead_of_failing(spark):
     # a corpus with null/corrupt/non-image rows must not kill the job on
     # the real-codec path: bad rows degrade per-row to the fake
@@ -170,9 +166,9 @@ def test_dirty_payloads_fall_back_instead_of_failing(spark):
     assert bytes(resized[1]["payload"]).startswith(b"\x89PNG")
     assert resized[1]["width"] == 8 and resized[1]["height"] == 8
     assert bytes(resized[3]["payload"]) == b"not an image"  # passthrough
-    # fallback rows must not claim target dims for unresized bytes,
-    # and NULL payloads stay NULL
-    assert resized[3]["width"] is None and resized[3]["height"] is None
+    # fallback rows pass through with the declared target dims, and
+    # NULL payloads stay NULL
+    assert resized[3]["width"] == 8 and resized[3]["height"] == 8
     assert resized[4]["payload"] is None
     # compressed/undecodable WAV container: RIFF/WAVE sniff passes but
     # wave.open raises -> per-row fake, not a job failure
@@ -184,16 +180,25 @@ def test_dirty_payloads_fall_back_instead_of_failing(spark):
     assert got == want
 
 
-@pytest.mark.skipif(MM._pil_available(), reason="PIL installed")
-def test_forced_codec_without_pil_raises(spark):
-    df = spark.createDataFrame([(1, bytearray(b"x"))],
-                               "media_id long, payload binary")
-    with pytest.raises(NotImplementedError):
-        MM.decode_image_features(df, use_codec=True)
-    with pytest.raises(NotImplementedError):
-        MM.resize_images(df, use_codec=True)
-    # video needs no PIL: the AVI demux is stdlib byte arithmetic, and a
-    # non-AVI payload degrades per-row to the fake
+def test_use_codec_true_is_the_default_ladder(spark):
+    # use_codec has two behaviours on every op that takes it: False is
+    # the fake tier, None (the default) and True are stdlib then fake
+    df = spark.createDataFrame(
+        [(1, bytearray(_tiny_png(5, 3, (9, 80, 200)))),
+         (2, bytearray(_tiny_wav(0.1, 8000, 440.0))),
+         (3, bytearray(_tiny_avi([b"frame0", b"frame1"], 40000))),
+         (4, bytearray(b"x")), (5, None)],
+        "media_id long, payload binary")
+    for op in (MM.decode_image_features, MM.resize_images, MM.image_phash,
+               MM.sample_video_frames, MM.extract_audio_features,
+               MM.audio_fingerprint):
+        forced = sorted(op(df, use_codec=True).collect())
+        assert forced == sorted(op(df).collect()), op.__name__
+        # the stdlib tier answered: the fake tier's rows differ
+        assert forced != sorted(op(df, use_codec=False).collect()), \
+            op.__name__
+    # video needs no codec library: the AVI demux is stdlib byte
+    # arithmetic, and a non-AVI payload degrades per-row to the fake
     assert MM.sample_video_frames(df, use_codec=True).count() >= 1
 
 
@@ -987,7 +992,7 @@ def test_decode_image_features_stdlib_png_tier(spark):
     got = {r["media_id"]: r for r in
            MM.decode_image_features(df, use_codec=None).collect()}
     assert (got[1]["width"], got[1]["height"], got[1]["mode"]) == (12, 9, "RGB")
-    exp = MM._stdlib_png_props(png)[3]
+    exp = MM._stdlib_image_props(png)[3]
     assert got[1]["feature"] == pytest.approx(exp)
     fake = MM._fake_image_props(b"not an image")
     assert (got[2]["width"], got[2]["height"]) == fake[:2]
@@ -1015,7 +1020,7 @@ def test_stdlib_png_unsupported_depth_falls_back(spark):
 
 
 def test_resize_images_stdlib_png_tier(spark):
-    # auto mode, no Pillow: PNG payloads resize for real (decode ->
+    # auto mode: PNG payloads resize for real (decode ->
     # nearest-neighbour -> re-encode), non-PNG passes through
     pixels = [[((x * 20) % 256, (y * 30) % 256, 7) for x in range(10)]
               for y in range(8)]

@@ -223,23 +223,23 @@ def test_bpe_trainer_cache_memoizes_merges_only(spark):
     # the memo stores the driver-side merge table, never a live DataFrame
     # (a cached frame would outlive its SparkSession); a hit rebuilds the
     # segmentation plan from the CALLER's frame and matches a fresh train
+    from dataqtor_spark.operators import ann as A
     from dataqtor_spark.operators import textstats as TX2
 
     rows = [(i, t) for i, t in enumerate(
         ["the cat sat", "the cat ran", "a cat sat down", "the dog sat"] * 3)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     key = "test-bpe-cache"
-    TX2._BPE_TRAIN_CACHE.clear()
+    A._TRAINER_MEMO.clear()
     m1, w1 = TX2.bpe_train(df, rounds=3, cache_key=key)
-    assert isinstance(
-        TX2._BPE_TRAIN_CACHE[(key, "text", 3, "^[a-z]+$")], list)
+    assert [type(v) for v in A._TRAINER_MEMO.values()] == [list]
     m2, w2 = TX2.bpe_train(df, rounds=3, cache_key=key)   # memo hit
     assert m2 == m1
     assert sorted(w2.collect()) == sorted(w1.collect())
     fresh_m, fresh_w = TX2.bpe_train(df, rounds=3)        # no key: retrain
     assert fresh_m == m1
     assert sorted(fresh_w.collect()) == sorted(w1.collect())
-    TX2._BPE_TRAIN_CACHE.clear()
+    A._TRAINER_MEMO.clear()
 
 
 def test_chunking_and_packing_null_text(spark, tmp_path):
@@ -281,11 +281,11 @@ def test_chunking_and_packing_null_text(spark, tmp_path):
 
 
 def test_bpe03_cache_misses_on_regenerated_corpus(spark, tmp_path):
-    # the bpe03 trainer-cache key folds in the parquet fingerprint
-    # (size+mtime): regenerating documents.parquet IN PROCESS must be a
-    # cache MISS — the old key would silently serve a tokenizer trained
-    # on the replaced bytes (round-14 ADVICE item, closed properly here)
-    from dataqtor_spark.operators import textstats as TX2
+    # the bpe03 trainer memo keys on the parquet's files (size+mtime):
+    # regenerating documents.parquet IN PROCESS must be a memo MISS — a
+    # path-only key would silently serve a tokenizer trained on the
+    # replaced bytes
+    from dataqtor_spark.operators import ann as A
     from dataqtor_spark.queries import QUERIES
 
     sf = str(tmp_path)
@@ -294,9 +294,9 @@ def test_bpe03_cache_misses_on_regenerated_corpus(spark, tmp_path):
          for i in range(8)],
         "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.parquet(f"{sf}/documents.parquet", mode="overwrite")
-    TX2._BPE_TRAIN_CACHE.clear()
+    A._TRAINER_MEMO.clear()
     out1 = QUERIES["bpe03_tokenizer_token_counts"](spark, sf).collect()
-    keys1 = set(TX2._BPE_TRAIN_CACHE)
+    keys1 = set(A._TRAINER_MEMO)
     assert len(keys1) == 1
 
     # regenerate with different content (and a different byte size, so
@@ -307,7 +307,7 @@ def test_bpe03_cache_misses_on_regenerated_corpus(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.parquet(f"{sf}/documents.parquet", mode="overwrite")
     out2 = QUERIES["bpe03_tokenizer_token_counts"](spark, sf).collect()
-    keys2 = set(TX2._BPE_TRAIN_CACHE)
+    keys2 = set(A._TRAINER_MEMO)
     assert keys2 - keys1, "regenerated corpus must mint a NEW cache key"
     assert sorted(map(tuple, out1)) != sorted(map(tuple, out2))
-    TX2._BPE_TRAIN_CACHE.clear()
+    A._TRAINER_MEMO.clear()
